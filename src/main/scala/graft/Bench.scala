@@ -133,7 +133,8 @@ object Bench {
     val NoisyPct = 25.0
     val NoisyFloorSec = 0.2
     case class Gate(n: String, wall: Double, task: Double,
-                    aW: Double, bW: Double, aT: Double, bT: Double)
+                    aW: Double, bW: Double, aT: Double, bT: Double,
+                    reused: Boolean)
     val results = ordered.map { case (n, f) =>
       val r = repsFor(n)
       val (w1, t1, reusable) = onceDetect(n, f)
@@ -151,8 +152,15 @@ object Bench {
       spark.catalog.clearCache()
       val (aW, aT) = (a.map(_._1).min, a.map(_._2).min)
       val (bW, bT) = (b.map(_._1).min, b.map(_._2).min)
-      Gate(n, math.min(aW, bW), math.min(aT, bT), aW, bW, aT, bT)
+      Gate(n, math.min(aW, bW), math.min(aT, bT), aW, bW, aT, bT,
+        reusable.isDefined)
     }
+    // Which gates re-ran their rep-1 DataFrame instead of re-building
+    // it (construction fired no job). stderr only: the stdout line's
+    // format is fixed.
+    val reused = results.filter(_.reused).map(_.n)
+    System.err.println(s"[bench] onceDetect reused the rep-1 DataFrame for " +
+      s"${reused.size}/${results.size} gates: ${reused.mkString(", ")}")
     // 2-decimal seconds: 10 ms granularity is far below the
     // run-to-run noise.
     def f3(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)

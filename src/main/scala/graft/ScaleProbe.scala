@@ -40,7 +40,6 @@ object ScaleProbe {
       objAggProbe(if (args.length > 1) args(1).toInt else 65536,
         if (args.length > 2) args(2).toInt else 1000); return
     }
-    if (args(0) == "dsir") { dsirProbe(args(1)); return }
     if (args(0) == "mmdedup") { mmDedupProbe(args(1)); return }
     if (args(0) == "mmidx") { mmIdxProbe(args(1)); return }
     if (args(0) == "mmframe") { mmFrameProbe(args(1)); return }
@@ -612,32 +611,6 @@ object ScaleProbe {
     println(f"SCALEPROBE mmdedup dir=$sfDir media=$nMedia fpPass=$tFp%.2f s " +
       f"min=$t%.2f s pairs=$pairs usPerPair=${t * 1e6 / math.max(1, pairs)}%.2f " +
       f"usPerImage=${t * 1e6 / nMedia}%.2f")
-    spark.stop()
-  }
-
-  /** `dsir <sfDir>`: DSIR weight computation under both bucket laws
-    * (md5 = the oracle face, xxhash64 = the perf path) — warm
-    * min-of-3 each, counts + score re-run per rep (3 corpus passes),
-    * target = the lang='en' subset as in the txt_dsir gate. */
-  private def dsirProbe(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt, "graft-scale-probe")
-    spark.sparkContext.setLogLevel("WARN")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val target = docs.where(col("lang") === "en")
-    for (fast <- Seq(false, true)) {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        graft.operators.Curation.dsirLogWeights(docs, target,
-            "doc_id", "text", dim = 65536, n = 2, fastHash = fast)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val ts = (1 to 3).map(_ => once())
-      println(f"SCALEPROBE dsir dir=$sfDir fastHash=$fast " +
-        f"min=${ts.min}%.2f s  (${ts.map(t => f"$t%.2f").mkString(" ")})")
-    }
     spark.stop()
   }
 

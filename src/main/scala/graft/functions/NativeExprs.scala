@@ -172,34 +172,6 @@ object NativeExprs {
       copy(child = newChild)
   }
 
-  /** 64-bit SimHash over a string array: bit i set iff the ±1 votes of
-    * bit i across element hashes sum positive. */
-  case class SimHash64Expr(child: Expression)
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = LongType
-    override protected def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val counts = new Array[Int](64)
-      val n = arr.numElements()
-      var i = 0
-      while (i < n) {
-        val h = mix64(fnv64(arr.getUTF8String(i).getBytes))
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-          b += 1
-        }
-        i += 1
-      }
-      var out = 0L
-      var b = 0
-      while (b < 64) { if (counts(b) > 0) out |= (1L << b); b += 1 }
-      out
-    }
-    override protected def withNewChildInternal(newChild: Expression): SimHash64Expr =
-      copy(child = newChild)
-  }
-
   /** Sequential-order dot product of two array<double> columns (same
     * left-to-right summation as `aggregate(zip_with(...))` and DuckDB's
     * list_sum, so cross-engine doubles stay bit-identical).
@@ -350,58 +322,6 @@ object NativeExprs {
       copy(child = newChild)
   }
 
-  /** Hashed bag-of-tokens feature vector: ONE tokenize pass builds
-    * the `dim`-bucket token-count array (the hashing trick) — the
-    * FEATURE side of the [[HashedLinearScoreExpr]] family, used by
-    * [[graft.operators.Training]]'s distributed logistic regression.
-    * Bucket law is the family's md5 law (`conv(substr(md5(t),1,15),
-    * 16,10) % dim` — the high 60 bits of digest bytes 0–7), identical
-    * to the DuckDB-oracle form `CAST(concat('0x', substr(md5(t),1,15))
-    * AS BIGINT) % dim`; whitespace runs delimit tokens and empty
-    * tokens are never counted (the Column law
-    * `filter(split(trim(text)), t -> length(t) > 0)`).
-    * Output: array<long> of length `dim` (raw counts, no
-    * normalization — training owns the scaling). */
-  case class HashedCountsExpr(child: Expression, dim: Int)
-      extends UnaryExpression {
-    require(dim > 0, s"dim=$dim")
-    override def dataType: DataType =
-      ArrayType(LongType, containsNull = false)
-    @inline private def isWs(c: Char): Boolean =
-      c == ' ' || (c >= '\t' && c <= '\r')
-    /** Public for generated code (reference-object call from doGenCode). */
-    def compute(text: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
-      val s = text.toString
-      val md = md5Digest()
-      val len = s.length
-      val counts = new Array[Long](dim)
-      var i = 0
-      while (i < len) {
-        while (i < len && isWs(s.charAt(i))) i += 1
-        val start = i
-        while (i < len && !isWs(s.charAt(i))) i += 1
-        if (i > start) {
-          val dig = md.digest(s.substring(start, i)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          var v = 0L
-          var b = 0
-          while (b < 8) { v = (v << 8) | (dig(b) & 0xffL); b += 1 }
-          v >>>= 4 // first 15 hex chars = high 60 bits of bytes 0-7
-          counts((v % dim).toInt) += 1L
-        }
-      }
-      new GenericArrayData(counts)
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("hashedCountsExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
-    override protected def withNewChildInternal(newChild: Expression): HashedCountsExpr =
-      copy(child = newChild)
-  }
-
   /** Fused duplicate-span hashing: ONE tokenize pass emits the
     * DISTINCT md5-15 hashes of every sliding `n`-token window — the
     * per-row half of [[graft.operators.Dedup.duplicateSpanPairs]].
@@ -516,9 +436,9 @@ object NativeExprs {
     * a fastText-sized 262k-bucket model is 2 MiB shipped once per
     * task, NOT a 262k-element plan literal — which is what lets
     * [[graft.operators.Training]] hold any `dim`. Value-identical to
-    * `Σ_j w_j·x_j` over [[HashedCountsExpr]] counts by distributivity
-    * (integer adds commute); same md5-15 bucket law, same
-    * empty-token-free tokenization. */
+    * `Σ_j w_j·x_j` over the hashed token counts `x_j` by
+    * distributivity (integer adds commute); same md5-15 bucket law as
+    * [[HashedBucketsExpr]], same empty-token-free tokenization. */
   case class HashedMarginExpr(child: Expression, weights: Array[Long])
       extends UnaryExpression {
     require(weights.length >= 2, s"weights=${weights.length}")
@@ -665,16 +585,8 @@ object NativeExprs {
     * oracle form is `CAST(concat('0x', substr(md5(concat(t1, ' ',
     * t2)), 1, 15)) AS BIGINT) % dim`. Docs with fewer than n tokens
     * emit an empty array. Feature side of the DSIR importance-weight
-    * family ([[graft.operators.Curation.dsirLogWeights]]).
-    *
-    * `fastHash = true` swaps the md5 law for
-    * `pmod(xxhash64(gram), dim)` (seed 42, the builtin's law —
-    * spec-pinned against the Column chain): ~an order of magnitude
-    * less per-gram hash work, for production sweeps that don't need
-    * an ANSI-SQL-reproducible bucket. Same family convention as
-    * simhash's `md5Hash` flag — md5 stays the oracle face. */
-  case class NgramBucketsExpr(child: Expression, n: Int, dim: Int,
-                              fastHash: Boolean = false)
+    * family ([[graft.operators.Curation.dsirLogWeights]]). */
+  case class NgramBucketsExpr(child: Expression, n: Int, dim: Int)
       extends UnaryExpression {
     require(n > 0, s"n=$n")
     require(dim > 0, s"dim=$dim")
@@ -683,7 +595,7 @@ object NativeExprs {
     /** Public for generated code (reference-object call from doGenCode). */
     def compute(text: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
       val out = new java.util.ArrayList[Any]()
-      foreachNgramBucket(text.toString, n, dim, fastHash)(b =>
+      foreachNgramBucket(text.toString, n, dim)(b =>
         out.add(java.lang.Long.valueOf(b)))
       new GenericArrayData(out.toArray)
     }
@@ -700,12 +612,11 @@ object NativeExprs {
   /** Shared tokenize→gram→bucket walk for the n-gram family
     * ([[NgramBucketsExpr]], [[NgramWeightSumExpr]]): whitespace-run
     * tokens, n consecutive tokens joined by ONE space, bucket under
-    * the md5 family law or (fastHash) `pmod(xxhash64(gram), dim)`. */
-  private def foreachNgramBucket(s: String, n: Int, dim: Int,
-                                 fastHash: Boolean)(emit: Long => Unit): Unit = {
+    * the md5 family law. */
+  private def foreachNgramBucket(s: String, n: Int, dim: Int)(emit: Long => Unit): Unit = {
     @inline def isWs(c: Char): Boolean =
       c == ' ' || (c >= '\t' && c <= '\r')
-    val md = if (fastHash) null else md5Digest()
+    val md = md5Digest()
     val len = s.length
     val toks = new java.util.ArrayList[String]()
     var i = 0
@@ -721,20 +632,12 @@ object NativeExprs {
       val sb = new java.lang.StringBuilder(toks.get(g))
       var j = 1
       while (j < n) { sb.append(' ').append(toks.get(g + j)); j += 1 }
-      val bucket =
-        if (fastHash) {
-          val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
-            org.apache.spark.unsafe.types.UTF8String.fromString(sb.toString), 42L)
-          ((h % dim) + dim) % dim
-        } else {
-          val dig = md.digest(sb.toString
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          var v = 0L
-          var b = 0
-          while (b < 8) { v = (v << 8) | (dig(b) & 0xffL); b += 1 }
-          (v >>> 4) % dim
-        }
-      emit(bucket)
+      val dig = md.digest(sb.toString
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      var v = 0L
+      var b = 0
+      while (b < 8) { v = (v << 8) | (dig(b) & 0xffL); b += 1 }
+      emit((v >>> 4) % dim)
       g += 1
     }
   }
@@ -747,11 +650,9 @@ object NativeExprs {
     * is the raw integer micro-unit sum (order-independent,
     * cross-engine stable; no length normalization — a log-likelihood
     * ratio is a sum, not a mean). Docs with fewer than n tokens score
-    * 0. `fastHash` selects the xxhash64 bucket law (must match the
-    * law the weights were counted under — see [[NgramBucketsExpr]]). */
+    * 0. */
   case class NgramWeightSumExpr(child: Expression, n: Int,
-                                lamMicro: Array[Long],
-                                fastHash: Boolean = false)
+                                lamMicro: Array[Long])
       extends UnaryExpression {
     require(n > 0, s"n=$n")
     require(lamMicro.nonEmpty, "lamMicro must be non-empty")
@@ -759,7 +660,7 @@ object NativeExprs {
     /** Public for generated code (reference-object call from doGenCode). */
     def compute(text: org.apache.spark.unsafe.types.UTF8String): Long = {
       var sum = 0L
-      foreachNgramBucket(text.toString, n, lamMicro.length, fastHash)(b =>
+      foreachNgramBucket(text.toString, n, lamMicro.length)(b =>
         sum += lamMicro(b.toInt))
       sum
     }
@@ -796,17 +697,17 @@ object NativeExprs {
       StructField("s", LongType, nullable = false))), containsNull = false)
     @transient private lazy val qids: Array[Long] =
       terms.map(_._1).distinct.toArray
-    // per-query dense term slots: qTermIdx(q) = indices into tfs
+    // one tf slot per DISTINCT term string; a term shared by several
+    // queries is counted once and read by each of them
     @transient private lazy val termIdx: java.util.HashMap[String, Integer] = {
       val m = new java.util.HashMap[String, Integer]()
-      terms.zipWithIndex.foreach { case (_, i) =>
-        m.put(terms(i)._2, i) // last wins; duplicate terms share tf anyway
-      }
+      terms.foreach { t => if (!m.containsKey(t._2)) m.put(t._2, m.size) }
       m
     }
-    @transient private lazy val byQuery: Array[Array[Int]] =
-      qids.map(q => terms.zipWithIndex.collect {
-        case ((tq, _, _), i) if tq == q => i
+    // per query: its (tf slot, idf) entries
+    @transient private lazy val byQuery: Array[Array[(Int, Double)]] =
+      qids.map(q => terms.collect {
+        case (tq, t, idf) if tq == q => (termIdx.get(t).intValue(), idf)
       }.toArray)
     def compute(text: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
       val s = text.toString
@@ -817,7 +718,7 @@ object NativeExprs {
       while (hi > lo && s.charAt(hi - 1) == ' ') hi -= 1
       val toks = s.substring(lo, hi).split("\\s+", -1)
       val dl = toks.length
-      val tfs = new Array[Int](terms.length)
+      val tfs = new Array[Int](termIdx.size)
       var i = 0
       while (i < dl) {
         val idx = termIdx.get(toks(i))
@@ -832,10 +733,10 @@ object NativeExprs {
         val idxs = byQuery(q)
         var j = 0
         while (j < idxs.length) {
-          val ti = idxs(j)
-          val tf = tfs(ti).toDouble
+          val e = idxs(j)
+          val tf = tfs(e._1).toDouble
           sum += graft.functions.Quantize.quantizeDouble(
-            terms(ti)._3 * tf * (k1 + 1.0) / (tf + dln), 6)
+            e._2 * tf * (k1 + 1.0) / (tf + dln), 6)
           j += 1
         }
         out(q) = org.apache.spark.sql.catalyst.InternalRow(qids(q), sum)
@@ -952,37 +853,6 @@ object NativeExprs {
       copy(child = newChild)
   }
 
-  /** Random-hyperplane LSH bucket of an array<double> vector: bit j of
-    * the result is the sign of <v, h_j>, hyperplane components derived
-    * deterministically from (seed, j, dim index) via splitmix — no RNG
-    * state, identical on every executor. */
-  case class HyperplaneBucketExpr(child: Expression, bits: Int, seed: Long)
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = LongType
-    override protected def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      val n = v.numElements()
-      var bucket = 0L
-      var j = 0
-      while (j < bits) {
-        var dot = 0.0
-        var d = 0
-        while (d < n) {
-          val h = mix64(seed + j * 1000003L + d * 0x9e3779b97f4a7c15L)
-          // component in [-0.5, 0.5), 3 decimal grid
-          val comp = math.floorMod(h, 1000L).toDouble / 1000.0 - 0.5
-          dot += v.getDouble(d) * comp
-          d += 1
-        }
-        if (dot > 0) bucket |= (1L << j)
-        j += 1
-      }
-      bucket
-    }
-    override protected def withNewChildInternal(newChild: Expression): HyperplaneBucketExpr =
-      copy(child = newChild)
-  }
-
   /** Per-thread MessageDigest — expressions run in task threads; this
     * avoids a getInstance allocation per row. */
   private val md5Local = new ThreadLocal[java.security.MessageDigest] {
@@ -1009,11 +879,10 @@ object NativeExprs {
 
   /** 64-bit SimHash over a string array using the first 8 bytes of each
     * element's MD5 as the per-token hash — bit b (0 = MSB of digest
-    * byte 0) is voted on across tokens. Unlike [[SimHash64Expr]]'s
-    * splitmix/FNV hashing, MD5 is computable in ANSI SQL engines, so a
-    * DuckDB oracle can reproduce the hash bit-for-bit (bit b of the hex
-    * form = bit 3-(b mod 4) of hex digit b/4). The result packs bit b
-    * at position 63-b (big-endian byte order). */
+    * byte 0) is voted on across tokens. MD5 is computable in ANSI SQL
+    * engines, so a DuckDB oracle can reproduce the hash bit-for-bit
+    * (bit b of the hex form = bit 3-(b mod 4) of hex digit b/4). The
+    * result packs bit b at position 63-b (big-endian byte order). */
   case class SimHashMd5Expr(child: Expression)
       extends UnaryExpression {
     override def dataType: DataType = LongType
@@ -1046,11 +915,12 @@ object NativeExprs {
       copy(child = newChild)
   }
 
-  /** Random-hyperplane LSH bucket like [[HyperplaneBucketExpr]], but the
-    * hyperplane components come from a Lehmer LCG (modulus 2^31-1,
-    * multiplier 48271) on the (seed, plane, dim) triple — pure integer
-    * arithmetic that an ANSI SQL oracle can evaluate exactly, unlike
-    * the splitmix mixer. Component grid: (h % 1000)/1000 - 0.5. The dot
+  /** Random-hyperplane LSH bucket of an array<double> vector: bit j of
+    * the result is the sign of <v, h_j>. The hyperplane components come
+    * from a Lehmer LCG (modulus 2^31-1, multiplier 48271) on the
+    * (seed, plane, dim) triple — no RNG state, identical on every
+    * executor, and pure integer arithmetic that an ANSI SQL oracle can
+    * evaluate exactly. Component grid: (h % 1000)/1000 - 0.5. The dot
     * product accumulates sequentially over dims (same order as DuckDB's
     * list_sum), so the sign — and hence the bucket — is bit-identical
     * cross-engine. */
@@ -1435,10 +1305,10 @@ object NativeExprs {
     * minimum of each w-window of hashes is selected (per-position
     * dedup — selected positions are non-decreasing, so consecutive
     * dedup ≡ distinct). Returns array<struct<pos:int, gh:string>>
-    * ordered by position. Same winnowing law as
-    * [[WinnowFingerprintExpr]] but with an oracle-computable hash
-    * (md5 + substr are ANSI SQL); the rolling-hash form stays the
-    * performance path. */
+    * ordered by position: the standard winnowing scheme — two
+    * documents sharing a long-enough substring share a fingerprint
+    * hash, robust to position shifts — with an oracle-computable hash
+    * (md5 + substr are ANSI SQL). */
   case class WinnowMd5Expr(child: Expression, k: Int, w: Int)
       extends UnaryExpression {
     override def dataType: DataType = ArrayType(
@@ -1533,54 +1403,6 @@ object NativeExprs {
       nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
     override protected def withNewChildInternal(newChild: Expression): MinMd5ShingleExpr =
-      copy(child = newChild)
-  }
-
-  /** Winnowing document fingerprint (rolling hash): polynomial rolling
-    * hash over a k-char window slid across the text, then the minimum
-    * hash of each w-hash window kept (rightmost min), deduplicated —
-    * the standard winnowing scheme: two documents sharing a long-enough
-    * substring share a fingerprint hash, robust to position shifts. */
-  case class WinnowFingerprintExpr(child: Expression, k: Int, w: Int)
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override protected def nullSafeEval(input: Any): Any = {
-      val bytes = input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes
-      val n = bytes.length
-      if (n == 0) return new GenericArrayData(Array.empty[Long])
-      val m = math.max(1, n - k + 1)
-      // rolling polynomial hash base 257 mod 2^64, then mixed
-      val hs = new Array[Long](m)
-      val B = 257L
-      var pow = 1L
-      var i = 1
-      while (i < math.min(k, n)) { pow *= B; i += 1 }
-      var h = 0L
-      i = 0
-      while (i < math.min(k, n)) { h = h * B + (bytes(i) & 0xffL); i += 1 }
-      hs(0) = mix64(h)
-      i = 1
-      while (i < m) {
-        h = (h - (bytes(i - 1) & 0xffL) * pow) * B + (bytes(i + k - 1) & 0xffL)
-        hs(i) = mix64(h)
-        i += 1
-      }
-      // winnow: rightmost minimum of each w-window, deduped consecutive
-      val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-      var lastPos = -1
-      var s = 0
-      val windows = math.max(1, m - w + 1)
-      while (s < windows) {
-        var minPos = s
-        var j = s
-        val end = math.min(s + w, m)
-        while (j < end) { if (hs(j) <= hs(minPos)) minPos = j; j += 1 }
-        if (minPos != lastPos) { out += hs(minPos); lastPos = minPos }
-        s += 1
-      }
-      new GenericArrayData(out.toArray)
-    }
-    override protected def withNewChildInternal(newChild: Expression): WinnowFingerprintExpr =
       copy(child = newChild)
   }
 
@@ -1945,9 +1767,6 @@ object NativeExprs {
     ColumnBridge.column(JaccardTokenSetsExpr(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  def simhash64Native(tokens: Column): Column =
-    ColumnBridge.column(SimHash64Expr(ColumnBridge.expression(tokens)))
-
   def simhashMd5Native(tokens: Column): Column =
     ColumnBridge.column(SimHashMd5Expr(ColumnBridge.expression(tokens)))
 
@@ -2007,16 +1826,11 @@ object NativeExprs {
   def hashedBucketsNative(text: Column, dim: Int): Column =
     ColumnBridge.column(HashedBucketsExpr(ColumnBridge.expression(text), dim))
 
-  def hashedCountsNative(text: Column, dim: Int): Column =
-    ColumnBridge.column(HashedCountsExpr(ColumnBridge.expression(text), dim))
+  def ngramBucketsNative(text: Column, n: Int, dim: Int): Column =
+    ColumnBridge.column(NgramBucketsExpr(ColumnBridge.expression(text), n, dim))
 
-  def ngramBucketsNative(text: Column, n: Int, dim: Int,
-                         fastHash: Boolean = false): Column =
-    ColumnBridge.column(NgramBucketsExpr(ColumnBridge.expression(text), n, dim, fastHash))
-
-  def ngramWeightSumNative(text: Column, n: Int, lamMicro: Array[Long],
-                           fastHash: Boolean = false): Column =
-    ColumnBridge.column(NgramWeightSumExpr(ColumnBridge.expression(text), n, lamMicro, fastHash))
+  def ngramWeightSumNative(text: Column, n: Int, lamMicro: Array[Long]): Column =
+    ColumnBridge.column(NgramWeightSumExpr(ColumnBridge.expression(text), n, lamMicro))
 
   def weightedLinearScoreNative(text: Column, weights: Array[Int]): Column =
     ColumnBridge.column(WeightedLinearScoreExpr(ColumnBridge.expression(text), weights))
@@ -2027,12 +1841,6 @@ object NativeExprs {
   def jaccardNative(a: Column, b: Column): Column =
     ColumnBridge.column(JaccardExpr(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  def hyperplaneBucketNative(vec: Column, bits: Int, seed: Long = 42L): Column =
-    ColumnBridge.column(HyperplaneBucketExpr(ColumnBridge.expression(vec), bits, seed))
-
-  def winnowFingerprintNative(text: Column, k: Int = 8, w: Int = 4): Column =
-    ColumnBridge.column(WinnowFingerprintExpr(ColumnBridge.expression(text), k, w))
 
   def minMd5ShingleNative(text: Column, k: Int = 8): Column =
     ColumnBridge.column(MinMd5ShingleExpr(ColumnBridge.expression(text), k))

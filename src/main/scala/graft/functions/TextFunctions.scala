@@ -66,37 +66,6 @@ object TextFunctions {
           transform(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)), _.cast("string"))))
           .as("bucket")))
 
-  /** 64-bit SimHash over the token multiset: bit i of the result is set
-    * iff the sum over tokens of ±1 (sign of bit i of xxhash64(token))
-    * is positive. Near-duplicate texts land at small Hamming distance.
-    *
-    * Single pass over tokens: each token's hash is computed once and
-    * expanded to a ±1 vector folded into a 64-wide counter array; the
-    * per-bit-times-per-token form would re-hash every token 64 times. */
-  def simhash64(tokensCol: Column): Column = {
-    // shiftright/shiftleft with a Column shift amount need the SQL
-    // function form (the Scala wrappers force a literal Int).
-    val counts = aggregate(
-      tokensCol,
-      array_repeat(lit(0), 64),
-      (acc, t) => {
-        val h = xxhash64(t)
-        zip_with(acc,
-          transform(sequence(lit(0), lit(63)), i =>
-            when(call_function("shiftright", h, i).bitwiseAND(lit(1L)) === 1L, 1)
-              .otherwise(-1)),
-          (a, b) => a + b)
-      })
-    // Fold counts -> bits referencing `counts` exactly once (an
-    // element_at(counts, i) per bit would re-embed the token aggregate
-    // 64 times after projection collapse).
-    val indexed = zip_with(counts, sequence(lit(0), lit(63)),
-      (c, i) => struct(c.as("c"), i.as("i")))
-    aggregate(indexed, lit(0L), (acc, s) =>
-      acc + when(s.getField("c") > 0,
-        call_function("shiftleft", lit(1L), s.getField("i"))).otherwise(0L))
-  }
-
   /** Hamming distance between two 64-bit hashes. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 

@@ -112,18 +112,12 @@ object Curation {
     * the same serve shape as the trained-classifier family. */
   def dsirLogWeights(raw: DataFrame, target: DataFrame,
                      idCol: String, textCol: String,
-                     dim: Int = 65536, n: Int = 2,
-                     fastHash: Boolean = false): DataFrame = {
+                     dim: Int = 65536, n: Int = 2): DataFrame = {
     require(n > 0, s"n=$n")
     require(dim > 0 && dim <= (1 << 24), s"dim=$dim (driver builds a dim-long array)")
-    // fastHash: xxhash64 gram buckets (~10× less hash work per gram;
-    // the weights are estimates either way, so bucket law only needs
-    // to be CONSISTENT between counting and scoring, which passing
-    // the flag through both sides guarantees). md5 stays the default
-    // oracle-reproducible face — simhash's md5Hash convention.
     def counts(df: DataFrame): Map[Long, Long] =
       df.select(explode(graft.functions.NativeExprs.ngramBucketsNative(
-          col(textCol), n, dim, fastHash)).as("b"))
+          col(textCol), n, dim)).as("b"))
         .groupBy("b").agg(count(lit(1)).as("c"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val cr = counts(raw)
@@ -145,6 +139,6 @@ object Curation {
     // the documented "no grams" rule, not SQL null propagation.
     raw.select(col(idCol),
       coalesce(graft.functions.NativeExprs.ngramWeightSumNative(
-        col(textCol), n, lam, fastHash), lit(0L)).as("dsir_micro"))
+        col(textCol), n, lam), lit(0L)).as("dsir_micro"))
   }
 }

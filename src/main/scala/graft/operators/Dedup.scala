@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.functions.TextFunctions._
 
 /** Deduplication operators for training-data pipelines: exact,
@@ -492,18 +493,15 @@ object Dedup {
     * (guaranteed recall); for 4 <= maxHamming < 16 the same blocking is
     * best-effort (a pair could spread one flipped bit into every
     * chunk). Candidates come from 4 equijoins on chunk value, then
-    * exact Hamming verification. */
+    * exact Hamming verification. The token hash is MD5
+    * ([[graft.functions.NativeExprs.SimHashMd5Expr]]), so an ANSI SQL
+    * engine can reproduce the 64-bit simhash bit-for-bit. */
   def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
-                          maxHamming: Int = 3, md5Hash: Boolean = false): DataFrame = {
+                          maxHamming: Int = 3): DataFrame = {
     require(maxHamming < 4 * 4, "pigeonhole blocking assumes maxHamming < 16")
-    // md5Hash selects the oracle-computable MD5 token hash (same
-    // algorithm; an ANSI SQL engine can reproduce the 64-bit simhash
-    // bit-for-bit). Default stays the faster splitmix/FNV hash.
-    val hashFn: Column => Column =
-      if (md5Hash) graft.functions.NativeExprs.simhashMd5Native
-      else graft.functions.NativeExprs.simhash64Native
     val h = Repartition.forCompute(df)
-      .select(col(idCol), hashFn(tokens(col(textCol))).as("sh"))
+      .select(col(idCol),
+        graft.functions.NativeExprs.simhashMd5Native(tokens(col(textCol))).as("sh"))
     hammingPairs64(h, idCol, "sh", maxHamming)
   }
 
@@ -681,15 +679,20 @@ object Dedup {
     * full scan costs 0.2). Counts are identical to the previous
     * explode + broadcast-join + groupBy form: n_shared =
     * |charShingles(c) ∩ charShingles(p)| either way (spec-pinned
-    * against the join formulation). Null-text probes contribute
-    * nothing (their shingle column was null → exploded away), exactly
-    * as before. */
+    * against the join formulation). The probe id must be integral
+    * (byte/short/int/long; `p_id` is emitted as long) — a string or
+    * fractional id is refused up front rather than cast. Probes with a
+    * null id or null text are skipped: a null text shares no shingle,
+    * and a null id names no probe a hit could be reported against. */
   def contaminationPairs(corpus: DataFrame, probes: DataFrame,
                          idCol: String, textCol: String,
                          shingleK: Int = 8, minOverlap: Int = 10): DataFrame = {
+    val idType = probes.schema(idCol).dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"contaminationPairs: probe id column '$idCol' must be integral, got $idType")
     val probeRows = probes.select(col(idCol).cast("long"), col(textCol))
       .collect()
-      .filter(!_.isNullAt(1))
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
       .map(r => r.getLong(0) -> r.getString(1)).toSeq
     val counts = graft.functions.NativeExprs.sharedShingleCountsNative(
       col(textCol), shingleK, probeRows)
@@ -702,7 +705,7 @@ object Dedup {
 
   /** Embedding near-dup pairs: cosine >= threshold. `blockCol` provides
     * the blocking key (e.g. an LSH bucket from
-    * [[Similarity.hyperplaneBucket]] or a coarse label) — the join is an
+    * [[Similarity.hyperplaneBucketLcg]] or a coarse label) — the join is an
     * equijoin on it, never all-pairs. */
   def embeddingNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                             blockCol: String, threshold: Double): DataFrame = {

@@ -84,10 +84,8 @@ object Search {
     // Fused scoring: ONE native token pass per document scores every
     // query ([[graft.functions.NativeExprs.Bm25ScoresExpr]] — the
     // unrolled Column form re-walked the token array once per term).
-    // Terms dedupe PER QUERY: a duplicated term contributes once
-    // (Bm25ScoresExpr's tf slots already collapse duplicates — last
-    // index wins, earlier slots see tf 0 — so this only makes the
-    // contract explicit and keeps the index path identical).
+    // Terms dedupe PER QUERY: a duplicated term contributes once,
+    // as on the index path.
     val termTriples: Seq[(Long, String, Double)] = qrows.flatMap {
       case (qid, terms) => terms.distinct.map(t => (qid, t, idf(t)))
     }

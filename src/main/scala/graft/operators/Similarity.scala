@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * query instead of the whole corpus — the difference between a working
   * plan and a dead one at 100 TB.
   *
-  * Scale path: random-hyperplane LSH bucketing ([[hyperplaneBucket]]) —
+  * Scale path: random-hyperplane LSH bucketing ([[hyperplaneBucketLcg]]) —
   * an IVF-style coarse quantization; probing only the query's bucket
   * cuts the candidate set by ~2^bits at a recall cost, and the bucket
   * join is an equijoin (shuffle on bucket id, broadcast-able query side).
@@ -55,17 +55,11 @@ object Similarity {
 
   /** Random-hyperplane LSH bucket id (IVF-style coarse cell) for a
     * vector column: `bits` pseudo-random hyperplanes; bit j is the sign
-    * of <v, h_j>. Hyperplane components are deterministic pseudo-random
-    * values derived from (seed, j, dim index) — no RNG state, identical
-    * across executors. Native expression: the Column form is a
-    * bits×dim interpreted term tree per row. `dim` is kept for API
-    * stability; the native expression reads the vector's own length. */
-  def hyperplaneBucket(vec: Column, dim: Int, bits: Int, seed: Long = 42L): Column =
-    graft.functions.NativeExprs.hyperplaneBucketNative(vec.cast("array<double>"), bits, seed)
-
-  /** LCG-derived hyperplane bucket — same coarse quantization with an
-    * oracle-computable (pure BIGINT arithmetic) hyperplane grid; used
-    * by the driver-gated queries so DuckDB can reproduce the buckets. */
+    * of <v, h_j>. Hyperplane components come from a Lehmer LCG on
+    * (seed, j, dim index) — no RNG state, identical across executors,
+    * and pure BIGINT arithmetic, so DuckDB can reproduce the buckets.
+    * Native expression: the Column form is a bits×dim interpreted term
+    * tree per row. */
   def hyperplaneBucketLcg(vec: Column, bits: Int, seed: Long = 42L): Column =
     graft.functions.NativeExprs.hyperplaneBucketLcgNative(vec.cast("array<double>"), bits, seed)
 
@@ -213,8 +207,8 @@ object Similarity {
 
   /** ANN top-k via hyperplane buckets: candidates share the query's
     * bucket; exact cosine rerank inside the bucket. Lower recall than
-    * [[cosineTopK]]; bounded cost. `lcgBuckets` switches to the
-    * oracle-computable LCG hyperplane derivation.
+    * [[cosineTopK]]; bounded cost. Buckets come from
+    * [[hyperplaneBucketLcg]].
     *
     * `bits <= 0` (the default) derives the bucket granularity from the
     * corpus count via [[Dedup.lshBitsFor]] — no similarity entry point
@@ -222,18 +216,15 @@ object Similarity {
     * rerank cost grow linearly with the corpus). The derivation counts
     * the corpus at call time — an extra scan when it's an uncached
     * plan; pass `corpusCount` if the caller already knows it. */
-  def annTopK(queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
+  def annTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               bits: Int = 0, qidCol: String = "qid", idCol: String = "id",
-              vecCol: String = "vec", lcgBuckets: Boolean = false,
-              corpusCount: Long = 0L): DataFrame = {
+              vecCol: String = "vec", corpusCount: Long = 0L): DataFrame = {
     val nBits = if (bits > 0) bits
       else Dedup.lshBitsFor(if (corpusCount > 0) corpusCount else corpus.count())
-    def bucket(c: Column): Column =
-      if (lcgBuckets) hyperplaneBucketLcg(c, nBits) else hyperplaneBucket(c, dim, nBits)
     val q = queries.select(col(qidCol).as("qid"), col(vecCol).cast("array<double>").as("qv"))
-      .withColumn("bkt", bucket(col("qv")))
+      .withColumn("bkt", hyperplaneBucketLcg(col("qv"), nBits))
     val c = corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("cv"))
-      .withColumn("bkt", bucket(col("cv")))
+      .withColumn("bkt", hyperplaneBucketLcg(col("cv"), nBits))
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("id"))
     c.join(broadcast(q), "bkt")
       .where(col("id") =!= col("qid"))

@@ -13,8 +13,10 @@ import graft.functions.NativeExprs
   * LLaMA quality filters, trained at corpus scale).
   *
   * Model: `p(keep | doc) = σ(Σ_j w_j·x_j + w_D)` over `dim` hashed
-  * bag-of-tokens counts `x_j` ([[NativeExprs.HashedCountsExpr]], one
-  * native tokenize pass per row) plus an intercept slot `x_D = 1`.
+  * bag-of-tokens counts `x_j` (never materialized: the margin is
+  * [[NativeExprs.HashedMarginExpr]], the gradient explodes
+  * [[NativeExprs.HashedBucketsExpr]] — one native tokenize pass each
+  * per row) plus an intercept slot `x_D = 1`.
   *
   * Determinism (the library's quantized-integer law, same as
   * [[LanguageModel]] / [[Search]]): weights live in integer

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.NativeExprs.{DotProductExpr, HyperplaneBucketLcgExpr, JaccardExpr, MinHashSigExpr, MinHashSigTextExpr, SimHash64Expr, SimHashMd5Expr, WinnowMd5Expr}
+import graft.functions.NativeExprs.{DotProductExpr, HyperplaneBucketLcgExpr, JaccardExpr, MinHashSigExpr, MinHashSigTextExpr, SimHashMd5Expr, WinnowMd5Expr}
 
 /** SparkSessionExtensions installer: exposes the engine's native
   * Catalyst expressions to SQL users. Load with
@@ -14,7 +14,7 @@ import graft.functions.NativeExprs.{DotProductExpr, HyperplaneBucketLcgExpr, Jac
   *   // or: .config("spark.sql.extensions", "graft.plans.GraftExtensions")
   * }}}
   *
-  * then e.g. `SELECT graft_simhash64(tokens) FROM docs`, making the
+  * then e.g. `SELECT graft_simhash_md5(tokens) FROM docs`, making the
   * dedup/similarity primitives available from pure SQL pipelines, not
   * just the Scala API.
   */
@@ -91,14 +91,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) => {
         require(args.length == 2, "graft_jaccard(array<string>, array<string>)")
         JaccardExpr(args(0), args(1))
-      }))
-
-    ext.injectFunction((
-      new FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64Expr].getName, "graft_simhash64"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "graft_simhash64(array<string>)")
-        SimHash64Expr(args.head)
       }))
 
     ext.injectFunction((

@@ -10,8 +10,8 @@ import graft.operators.{Dedup, Multimodal, Similarity}
   * plumbing. EVERY query carries an exact DuckDB oracle: the gated
   * LSH/SimHash/winnow/multimodal variants use oracle-computable hashes
   * (MD5 windows/tokens, Lehmer-LCG hyperplanes) so the driver's hash
-  * gate covers the custom expressions too; the splitmix/FNV/rolling
-  * perf-path variants are covered by brute-force ScalaTest oracles.
+  * gate covers the custom expressions too; the splitmix/FNV MinHash
+  * signatures are covered by brute-force ScalaTest oracles.
   */
 object PipelineQueries {
 
@@ -338,9 +338,7 @@ object PipelineQueries {
 
     // Winnowing fingerprint over MD5 window hashes, exploded to
     // (doc_id, selected position, window hash) — DuckDB recomputes the
-    // full selection, so the winnowing law itself is hash-gated. The
-    // rolling-hash variant (winnowFingerprintNative) is the perf path,
-    // law-checked in PipelineOpsSpec.
+    // full selection, so the winnowing law itself is hash-gated.
     "fp_winnow" -> ((s, dir) =>
       graft.operators.Repartition.forCompute(docs(s, dir))
         .select(col("doc_id"),
@@ -872,7 +870,7 @@ object PipelineQueries {
     // oracle's brute-force hamming scan over the same MD5 simhashes.
     "dd_simhash" -> ((s, dir) =>
       Dedup.simhashNearDupPairs(docs(s, dir), "doc_id", "text",
-        maxHamming = 3, md5Hash = true)),
+        maxHamming = 3)),
 
     // Embedding near-dup: cosine >= 0.4, blocked on label × multi-table
     // hyperplane-LSH buckets — the checked query IS the scale path
@@ -1051,7 +1049,7 @@ object PipelineQueries {
       val q = e.where(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("vec"))
       val c = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      Similarity.annTopK(q, c, k = 3, dim = 64, lcgBuckets = true)
+      Similarity.annTopK(q, c, k = 3)
         .select(col("qid"), col("id"), col("rk"))
     }),
 
@@ -1067,7 +1065,7 @@ object PipelineQueries {
         .select(col("vec_id").as("qid"), col("embedding").as("vec"))
       val c = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
       val exact = Similarity.cosineTopK(q, c, k = 5).select("qid", "id")
-      val ann = Similarity.annTopK(q, c, k = 5, dim = 64, lcgBuckets = true)
+      val ann = Similarity.annTopK(q, c, k = 5)
         .select("qid", "id")
       val hits = exact.join(ann, Seq("qid", "id"), "left_semi")
         .groupBy("qid").agg(count(lit(1)).as("hit_n"))

@@ -49,21 +49,21 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(spark.range(0, 100).where(col("id") > 50 && col("id") < 10).count() == 0)
   }
 
-  test("graft_minhash_sig / graft_simhash64 / graft_dot are callable from SQL") {
+  test("graft_minhash_sig / graft_simhash_md5 / graft_dot are callable from SQL") {
     val r = spark.sql(
       """SELECT graft_minhash_sig(array('ab','cd','ef'), 4) AS sig,
-        |       graft_simhash64(array('ab','cd')) AS sh,
+        |       graft_simhash_md5(array('ab','cd')) AS sh,
         |       graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS dot""".stripMargin)
       .collect().head
     assert(r.getSeq[Long](0).length == 4)
     // identical inputs give identical hashes across calls
-    val r2 = spark.sql("SELECT graft_simhash64(array('ab','cd')) AS sh").collect().head
+    val r2 = spark.sql("SELECT graft_simhash_md5(array('ab','cd')) AS sh").collect().head
     assert(r.getLong(1) == r2.getLong(0))
     assert(r.getDouble(2) == 11.0)
     // SQL result equals the Column-API result
     import org.apache.spark.sql.functions._
     val viaColumn = spark.range(1)
-      .select(graft.functions.NativeExprs.simhash64Native(
+      .select(graft.functions.NativeExprs.simhashMd5Native(
         array(lit("ab"), lit("cd")))).collect().head.getLong(0)
     assert(viaColumn == r.getLong(1))
   }

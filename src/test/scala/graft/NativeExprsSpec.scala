@@ -198,7 +198,7 @@ class NativeExprsSpec extends AnyFunSuite {
     val df = Seq((1L, null.asInstanceOf[Seq[String]], Seq("x"))).toDF("id", "a", "b")
     val r = df.select(
       NativeExprs.jaccardNative(col("a"), col("b")).isNull.as("jn"),
-      NativeExprs.simhash64Native(col("a")).isNull.as("sn"))
+      NativeExprs.simhashMd5Native(col("a")).isNull.as("sn"))
       .collect().head
     assert(r.getBoolean(0) && r.getBoolean(1))
   }
@@ -236,19 +236,6 @@ class NativeExprsSpec extends AnyFunSuite {
         NativeExprs.hashedBucketsNative(col("t"), dim).as("b"))
       .collect()
     uni.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1)))
-    // the fastHash variant == pmod(xxhash64(gram), dim) on the builtin
-    // chain (seed 42 — the builtin's own law)
-    for (n <- Seq(1, 2)) {
-      val toks = filter(split(trim(col("t")), "\\s+"), x => length(x) > 0)
-      val want = when(size(toks) >= n,
-        transform(sequence(lit(1), size(toks) - (n - 1)),
-          i => pmod(xxhash64(concat_ws(" ", slice(toks, i, lit(n)))), lit(dim.toLong))))
-        .otherwise(array().cast("array<long>"))
-      val rows = fixtures.toDF("t")
-        .select(NativeExprs.ngramBucketsNative(col("t"), n, dim, fastHash = true).as("g"),
-          want.as("w")).collect()
-      rows.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"fast n=$n"))
-    }
   }
 
   test("ngramWeightSumNative == integer fold of element_at over ngramBucketsNative") {

@@ -121,18 +121,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     val inTgt = corpus.map(_._1).filter(i => i < 20L || (i >= 100L && i < 106L))
     val outTgt = corpus.map(_._1).filter(i => i >= 20L && i < 40L)
     assert(avg(inTgt) > avg(outTgt))
-    // fastHash variant: same schema and the target==raw identity law
-    // (λ[b] = 0 for every bucket regardless of hash law), plus the
-    // same dominance direction under the xxhash buckets
-    val fastSelf = Curation.dsirLogWeights(docsDF, docsDF, "doc_id", "text",
-      dim, n, fastHash = true).collect()
-    assert(fastSelf.forall(_.getLong(1) == 0L))
-    val fast = Curation.dsirLogWeights(docsDF, target, "doc_id", "text",
-      dim, n, fastHash = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    def avgF(ids: Iterable[Long]): Double =
-      ids.map(fast).sum.toDouble / ids.size
-    assert(avgF(inTgt) > avgF(outTgt))
   }
 
   test("gumbelTopK matches the serial md5-Gumbel draw; exactly k; weight dominance") {
@@ -203,7 +191,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     // Hamming distances are symmetric-consistent: recompute from the
     // engine's own simhash column and compare.
     val sh = docsDF.select(col("doc_id"),
-      graft.functions.NativeExprs.simhash64Native(TextFunctions.tokens(col("text"))).as("sh"))
+      graft.functions.NativeExprs.simhashMd5Native(TextFunctions.tokens(col("text"))).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     got.foreach { case (a, b, h) =>
       assert(java.lang.Long.bitCount(sh(a) ^ sh(b)) == h, s"pair ($a,$b)")
@@ -551,7 +539,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     }
     val df = vecs.toDF("id", "vec")
     val q = df.where(col("id") < 4).select(col("id").as("qid"), col("vec"))
-    val got = Similarity.annTopK(q, df, k = 3, dim = 16, bits = 4).collect()
+    val got = Similarity.annTopK(q, df, k = 3, bits = 4).collect()
     // every returned neighbor belongs to the query's cluster
     got.foreach { r =>
       assert(r.getLong(1) % 4 == r.getLong(0) % 4,
@@ -1397,22 +1385,22 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("winnowing fingerprint: shared long substrings share hashes; shifts don't matter") {
-    import graft.functions.NativeExprs.winnowFingerprintNative
+    import graft.functions.NativeExprs.winnowMd5Native
     val common = "the quick brown fox jumps over the lazy dog again and again"
     val df = Seq(
       (1L, s"PREFIX AAA $common SUFFIX BBB"),
       (2L, s"totally different lead-in text $common trailing stuff"),
       (3L, "nothing in common with the others at all zzz qqq www"))
       .toDF("doc_id", "text")
-      .select(col("doc_id"), winnowFingerprintNative(col("text")).as("fp"))
-    val fps = df.collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
+      .select(col("doc_id"), winnowMd5Native(col("text")).getField("gh").as("fp"))
+    val fps = df.collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
     val overlap12 = fps(1L).intersect(fps(2L)).size
     val overlap13 = fps(1L).intersect(fps(3L)).size
     assert(overlap12 > 5, s"shared substring must share fingerprints, got $overlap12")
     assert(overlap13 <= 1, s"unrelated docs should share ~no fingerprints, got $overlap13")
     // determinism
     val again = Seq((1L, s"PREFIX AAA $common SUFFIX BBB")).toDF("doc_id", "text")
-      .select(winnowFingerprintNative(col("text"))).collect().head.getSeq[Long](0).toSet
+      .select(winnowMd5Native(col("text")).getField("gh")).collect().head.getSeq[String](0).toSet
     assert(again == fps(1L))
   }
 
@@ -2006,7 +1994,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val c = df.select(col("vec_id").as("id"), col("embedding").as("vec"))
     val exact = Similarity.cosineTopK(q, c, k = 4)
       .select("qid", "id").as[(Long, Long)].collect().toSet
-    val ann = Similarity.annTopK(q, c, k = 4, dim = 16, lcgBuckets = true)
+    val ann = Similarity.annTopK(q, c, k = 4)
       .select("qid", "id").as[(Long, Long)].collect().toSet
     val hits = exact.intersect(ann).groupBy(_._1).view.mapValues(_.size).toMap
     // the gate's shape: per-qid n_hit in [0, k], recall = n_hit/k
@@ -2114,10 +2102,14 @@ class PipelineOpsSpec extends AnyFunSuite {
     // empty text, whitespace-only, tab-led (space-only trim law)
     val docsSeq = corpus ++ Seq((300L, ""), (301L, "   "), (302L, "\tspark join"))
     val df = docsSeq.toDF("doc_id", "text")
-    val queries = Seq(
-      (0L, Seq("spark", "join")),
-      (1L, Seq("window", "hash", "sort")),
-      (2L, Seq("nosuchterm"))).toDF("query_id", "terms")
+    // query 3 shares "spark" with query 0 (and "hash" with query 1):
+    // a term in several queries of one batch scores for each of them
+    val qSeq = Seq(
+      0L -> Seq("spark", "join"),
+      1L -> Seq("window", "hash", "sort"),
+      2L -> Seq("nosuchterm"),
+      3L -> Seq("spark", "hash"))
+    val queries = qSeq.toDF("query_id", "terms")
     val got = Search.bm25TopK(df, "doc_id", "text", queries, k = 4)
       .select("query_id", "doc_id", "rnk", "score")
       .as[(Long, Long, Long, Double)].collect().toSeq
@@ -2135,8 +2127,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val avgdl = sumDl.toDouble / n
     def df0(term: String): Long = toks.values.count(_.contains(term)).toLong
     val (k1, b) = (1.2, 0.75)
-    val exp = Seq(0L -> Seq("spark", "join"), 1L -> Seq("window", "hash", "sort"),
-      2L -> Seq("nosuchterm")).flatMap { case (qid, terms) =>
+    val exp = qSeq.flatMap { case (qid, terms) =>
       val scored = docsSeq.map { case (id, _) =>
         val ws = toks(id)
         val dlN = k1 * (1.0 - b + b * ws.size.toDouble / avgdl)
@@ -2632,15 +2623,17 @@ class PipelineOpsSpec extends AnyFunSuite {
     val got7 = Training.trainLogRegWeights(df.repartition(7), "text",
       col("y"), dim, iters, lr)
     assert(got7.toSeq == got.toSeq)
-    // the dense feature face agrees with the serial counts (the
-    // trainer itself rides the sparse explode, same integers)
-    val cnts = df.limit(10).select(col("doc_id"),
-        graft.functions.NativeExprs.hashedCountsNative(col("text"), dim).as("x"))
+    // the per-token buckets the trainer explodes agree with the
+    // serial bucket law (their per-bucket counts are the features)
+    val bkts = df.limit(10).select(col("doc_id"),
+        graft.functions.NativeExprs.hashedBucketsNative(col("text"), dim).as("x"))
       .as[(Long, Seq[Long])].collect().toMap
     corpus.take(10).foreach { case (id, t) =>
       val x = new Array[Long](dim)
       t.trim.split("\\s+").filter(_.nonEmpty).foreach(tok => x(bucket(tok)) += 1)
-      assert(cnts(id) == x.toSeq, s"doc $id")
+      val viaBuckets = new Array[Long](dim)
+      bkts(id).foreach(b => viaBuckets(b.toInt) += 1)
+      assert(viaBuckets.toSeq == x.toSeq, s"doc $id")
     }
     // fastText-sized bucket space: the weight array is a reference
     // object and gradients are sparse, so dim=262144 trains on the
@@ -2728,6 +2721,46 @@ class PipelineOpsSpec extends AnyFunSuite {
       assert(got == want,
         s"minOverlap=$minOverlap missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
     }
+  }
+
+  test("contaminationPairs skips null-id probes the way it skips null-text probes") {
+    import graft.operators.Dedup
+    val text = "the quick brown fox jumps over the lazy dog again and again"
+    val corpus = Seq((10L, text), (11L, "completely unrelated text here"))
+      .toDF("doc_id", "text")
+    val probes = Seq((Some(1L), Some(text)), (None, Some(text)),
+      (Some(2L), None), (Some(3L), Some("unrelated text here")))
+      .toDF("doc_id", "text")
+    def rows(d: DataFrame): Set[(Long, Long, Long)] =
+      d.select("c_id", "p_id", "n_shared")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val got = rows(Dedup.contaminationPairs(corpus, probes, "doc_id", "text",
+      shingleK = 8, minOverlap = 1))
+    // the same sweep over only the probes that have both an id and a text
+    val want = rows(Dedup.contaminationPairs(corpus,
+      probes.where(col("doc_id").isNotNull && col("text").isNotNull),
+      "doc_id", "text", shingleK = 8, minOverlap = 1))
+    assert(got == want)
+    assert(got.map(_._2) == Set(1L, 3L))
+  }
+
+  test("contaminationPairs refuses a non-integral probe id, naming the column") {
+    import graft.operators.Dedup
+    val corpus = Seq((10L, "the quick brown fox jumps")).toDF("doc_id", "text")
+    val stringIds = Seq(("p7", "the quick brown fox jumps"), ("12", "x"))
+      .toDF("doc_id", "text")
+    val fractionalIds = Seq((7.5, "the quick brown fox jumps")).toDF("doc_id", "text")
+    for (probes <- Seq(stringIds, fractionalIds)) {
+      val e = intercept[IllegalArgumentException](
+        Dedup.contaminationPairs(corpus, probes, "doc_id", "text"))
+      assert(e.getMessage.contains("'doc_id'") && e.getMessage.contains("integral"),
+        e.getMessage)
+    }
+    // every integral width is accepted and reported as a long p_id
+    val intIds = Seq((7, "the quick brown fox jumps")).toDF("doc_id", "text")
+    val hit = Dedup.contaminationPairs(corpus, intIds, "doc_id", "text",
+      shingleK = 8, minOverlap = 1).select("p_id").as[Long].collect()
+    assert(hit.toSeq == Seq(7L))
   }
 
   test("vocab queries from the persisted postings == vocab queries from the corpus") {
