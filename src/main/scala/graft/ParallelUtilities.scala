@@ -83,7 +83,8 @@ object ParallelUtilities {
 
   /** T2 host-segmented two-stage reduction: reduce within each node
     * before anything crosses the network
-    * (/root/reference/src/trees.jl:42-63). Commutative ops only. */
+    * (reference src/trees.jl:42-63). Non-commutative ops keep
+    * rank order. */
   def pmapreduceSegmented[B: ClassTag](spark: SparkSession, iters: IndexedSeq[PRange], np: Int)
                                       (f: IndexedSeq[Double] => B, op: ReduceOp[B],
                                        init: Option[B] = None,

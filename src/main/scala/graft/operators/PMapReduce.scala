@@ -1,6 +1,7 @@
 package graft.operators
 
 import scala.reflect.ClassTag
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import graft.functions.ReduceOp
@@ -11,24 +12,40 @@ import graft.sources.ProductSplitSource
   * over partitioned products/zips — the engine's `pmapreduce` family
   * (/root/reference/src/mapreduce.jl:266-342).
   *
+  * `np` is the rank count of the split law: it fixes which elements
+  * each rank folds and the order the rank partials combine in. It is
+  * not the Spark task count. Ranks run under the rank-block law
+  * ([[rankBlocks]]): ranks `1..npEff` go into
+  * `min(npEff, defaultParallelism)` partitions, each a contiguous
+  * ascending block of ranks, so a call costs at most one task per core
+  * however many ranks it splits into.
+  *
   * Spark-first design: per-rank partial aggregation happens inside each
-  * partition (map-side combine ≙ the reference's per-worker serial
-  * `mapreduce`, /root/reference/src/mapreduce.jl:104-124). Commutative
+  * task (map-side combine ≙ the reference's per-worker serial
+  * `mapreduce`, reference src/mapreduce.jl:104-124), one serial
+  * fold per rank over that rank's `dropTake` window. Commutative
   * ops then combine partials with `treeReduce` (the two-level
   * aggregation tree subsumes the reference's host-segmented reduction
   * tree, /root/reference/src/trees.jl:42-63). Non-commutative ops use
   * the one semantic Spark doesn't give natively: partials are tagged
   * with their rank, gathered, sorted by rank, and left-folded — exactly
   * the reference's root combine (`_maybesort` + `reducechannel`,
-  * /root/reference/src/mapreduce.jl:138-146). There are at most `np`
-  * partials (np = partition count, not row count), so the gather is
-  * O(np), not O(data).
+  * reference src/mapreduce.jl:138-146). There are `np` partials
+  * (one per rank, not per row), so the gather is O(np), not O(data).
   *
   * `init` is folded exactly once, on the driver, after the distributed
   * reduce — never per partition (the init-once law,
   * /root/reference/src/mapreduce.jl:110-117).
   */
 object PMapReduce {
+
+  /** The rank-block law: ranks `1..npEff` as an RDD of
+    * `min(npEff, defaultParallelism)` partitions. `parallelize` slices a
+    * `Range` into contiguous ascending sub-ranges, so every partition
+    * holds a block of consecutive ranks and partition order is rank
+    * order. */
+  private[graft] def rankBlocks(sc: SparkContext, npEff: Int): RDD[Int] =
+    sc.parallelize(1 to npEff, math.min(npEff, sc.defaultParallelism))
 
   /** Combine rank-tagged partials respecting the commutativity tag. */
   private[graft] def reducePartials[B: ClassTag](partials: RDD[(Int, B)], op: ReduceOp[B]): B = {
@@ -37,7 +54,7 @@ object PMapReduce {
       partials.values.treeReduce(op, depth = if (n > 16) 2 else 1)
     } else {
       // Rank-sorted left fold at the root: reference semantics for
-      // non-commutative ops. O(np) values gathered, np = #partitions.
+      // non-commutative ops. O(np) values gathered, one per rank.
       partials.collect().sortBy(_._1).map(_._2).reduceLeft(op)
     }
   }
@@ -75,12 +92,13 @@ object PMapReduce {
     * That costs one shuffle of np partials; commutative ops keep the
     * shuffle-free locality-aware coalesce.
     *
-    * `partials` is keyed by 1-based rank; ranks must be 1..np with
-    * np = `partials.getNumPartitions` (how every pmapreduce* builds
-    * them). */
-  def hostSegmentedReduce[B: ClassTag](spark: SparkSession, partials: RDD[(Int, B)],
+    * `partials` is keyed by 1-based rank, every key in `1..np`; how the
+    * ranks are spread over partitions does not matter (the pmapreduce*
+    * callers build them under the rank-block law). */
+  def hostSegmentedReduce[B: ClassTag](spark: SparkSession, partials: RDD[(Int, B)], np: Int,
                                        op: ReduceOp[B],
                                        segments: Option[Int] = None): B = {
+    require(np >= 1, s"rank count must be positive, got $np")
     val nSeg = math.max(1, segments.getOrElse(
       new ClusterQuery(spark).nodenames.size))
     val perSeg: Array[(Int, B)] =
@@ -90,12 +108,14 @@ object PMapReduce {
             if (it.hasNext) Iterator((0, it.reduceLeft(op))) else Iterator.empty)
           .collect()
       } else {
-        val np = partials.getNumPartitions
-        val nSegEff = math.max(1, math.min(nSeg, np))
+        val nSegEff = math.min(nSeg, np)
         val bySeg = partials.partitionBy(new org.apache.spark.Partitioner {
           def numPartitions: Int = nSegEff
-          def getPartition(key: Any): Int =
-            ProductIndexMath.rankOfIndex(np.toLong, nSegEff, key.asInstanceOf[Int] - 1L) - 1
+          def getPartition(key: Any): Int = {
+            val rank = key.asInstanceOf[Int]
+            require(1 <= rank && rank <= np, s"rank key $rank outside 1..$np")
+            ProductIndexMath.rankOfIndex(np.toLong, nSegEff, rank - 1L) - 1
+          }
         })
         bySeg.mapPartitions({ it =>
           val buf = it.toArray.sortBy(_._1)
@@ -108,32 +128,14 @@ object PMapReduce {
   }
 
   /** E1 (zip mode) with the T2 host-segmented combine instead of
-    * `treeReduce` — same per-partition serial fold as [[pmapreduce]],
+    * `treeReduce` — same per-rank serial fold as [[pmapreduce]],
     * then [[hostSegmentedReduce]] over the per-rank partials. */
   def pmapreduceSegmented[B: ClassTag](spark: SparkSession, iters: IndexedSeq[PRange], np: Int)
                                       (f: IndexedSeq[Double] => B, op: ReduceOp[B],
                                        init: Option[B] = None,
-                                       segments: Option[Int] = None): B = {
-    val len = iters.map(_.numElems).min
-    require(len > 0, "cannot reduce over an empty collection")
-    val rs = iters.toArray
-    def elem(j: Long): IndexedSeq[Double] = {
-      val arr = new Array[Double](rs.length)
-      var k = 0
-      while (k < rs.length) { arr(k) = rs(k)(j); k += 1 }
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(arr)
-    }
-    val npEff = math.max(1L, math.min(np.toLong, len)).toInt
-    if (npEff == 1) {
-      foldInit(init, op, (0L until len).iterator.map(j => f(elem(j))).reduceLeft(op))
-    } else {
-      val partials = spark.sparkContext.parallelize(1 to npEff, npEff).map { p =>
-        val (drop, take) = ProductIndexMath.dropTake(len, npEff, p)
-        (p, (drop until drop + take).iterator.map(j => f(elem(j))).reduceLeft(op))
-      }
-      foldInit(init, op, hostSegmentedReduce(spark, partials, op, segments))
-    }
-  }
+                                       segments: Option[Int] = None): B =
+    mapReduceIndexed(spark, iters.map(_.numElems).min, np, zipped(iters, f), op, init)(
+      (partials, npEff) => hostSegmentedReduce(spark, partials, npEff, op, segments))
 
   /** E2: `f` receives each rank's whole ProductSlice once (MPI-style;
     * /root/reference/docs/src/pmapreduce.md:58-93), partials reduced by
@@ -154,24 +156,28 @@ object PMapReduce {
     }
   }
 
-  /** E1 (zip mode): splat the j-th element of every range into `f`,
-    * reduce with `op` (/root/reference/src/mapreduce.jl:266-287). Each
-    * partition left-folds its slice serially (ordered within rank), so
-    * only one partial per rank crosses the network. The element tuple
-    * is built in a primitive array (one allocation, no builders) —
-    * this loop runs once per element of potentially 10^8+. */
-  def pmapreduce[B: ClassTag](spark: SparkSession, iters: IndexedSeq[PRange], np: Int)
-                             (f: IndexedSeq[Double] => B, op: ReduceOp[B],
-                              init: Option[B] = None): B = {
-    val len = iters.map(_.numElems).min
+  /** Element `j` of the zip of `iters`, splatted into `f`. The element
+    * tuple is built in a primitive array (one allocation, no builders)
+    * — this runs once per element of potentially 10^8+. */
+  private def zipped[B](iters: IndexedSeq[PRange], f: IndexedSeq[Double] => B): Long => B = {
     val rs = iters.toArray
-    mapReduceIndexed(spark, len, np, { j =>
+    j => {
       val arr = new Array[Double](rs.length)
       var k = 0
       while (k < rs.length) { arr(k) = rs(k)(j); k += 1 }
       f(scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))
-    }, op, init)
+    }
   }
+
+  /** E1 (zip mode): splat the j-th element of every range into `f`,
+    * reduce with `op` (reference src/mapreduce.jl:266-287). Each
+    * rank left-folds its slice serially (ordered within rank), so
+    * only one partial per rank crosses the network. */
+  def pmapreduce[B: ClassTag](spark: SparkSession, iters: IndexedSeq[PRange], np: Int)
+                             (f: IndexedSeq[Double] => B, op: ReduceOp[B],
+                              init: Option[B] = None): B =
+    mapReduceIndexed(spark, iters.map(_.numElems).min, np, zipped(iters, f), op, init)(
+      (partials, _) => reducePartials(partials, op))
 
   /** E1 (product mode): elements of the full product split across ranks,
     * each splatted into `f` (`pmapreduce(f, op, product(...))`,
@@ -195,16 +201,19 @@ object PMapReduce {
         k += 1
       }
       f(scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))
-    }, op, init)
+    }, op, init)((partials, _) => reducePartials(partials, op))
   }
 
+  /** Fold element `j` = 0 until `len` per rank under the split law, then
+    * `combine` the `(rank, partial)` pairs of the `npEff` ranks. */
   private def mapReduceIndexed[B: ClassTag](spark: SparkSession, len: Long, np: Int,
                                             f: Long => B, op: ReduceOp[B],
-                                            init: Option[B]): B = {
+                                            init: Option[B])
+                                           (combine: (RDD[(Int, B)], Int) => B): B = {
     require(len > 0, "cannot reduce over an empty collection")
     val npEff = math.max(1L, math.min(np.toLong, len)).toInt
     // Plain while loops, not Range.iterator.map(f).reduceLeft(op): the
-    // per-partition fold may run 10^8+ iterations, and the iterator
+    // per-rank fold may run 10^8+ iterations, and the iterator
     // chain (NumericRange[Long] boxing + two megamorphic apply sites)
     // both costs per element and takes C2 several seconds of profiling
     // to JIT — which showed up as multi-second scatter in repeated
@@ -220,26 +229,28 @@ object PMapReduce {
     if (npEff == 1) {
       foldInit(init, op, foldRange(0L, len))
     } else {
-      val partials = spark.sparkContext.parallelize(1 to npEff, npEff).map { p =>
+      val partials = rankBlocks(spark.sparkContext, npEff).map { p =>
         val (drop, take) = ProductIndexMath.dropTake(len, npEff, p)
         (p, foldRange(drop, take))
       }
-      foldInit(init, op, reducePartials(partials, op))
+      foldInit(init, op, combine(partials, npEff))
     }
   }
 
   /** E3: `pmap` — ordered per-element results
-    * (/root/reference/src/mapreduce.jl:316-324). Collect preserves
-    * partition (= rank) order, reproducing the `vcat` concatenation. */
+    * (reference src/mapreduce.jl:316-324). Each task emits its
+    * ranks' elements in rank order and partitions hold ascending rank
+    * blocks, so `collect` reproduces the `vcat` concatenation. */
   def pmapbatch[T: ClassTag](spark: SparkSession, iters: IndexedSeq[PRange], np: Int)
                             (f: IndexedSeq[Double] => T): Vector[T] = {
     val len = iters.map(_.numElems).min
     require(len > 0, "cannot map over an empty collection")
     val npEff = math.max(1L, math.min(np.toLong, len)).toInt
-    if (npEff == 1) (0L until len).iterator.map(j => f(iters.map(_(j)))).toVector
-    else spark.sparkContext.parallelize(1 to npEff, npEff).flatMap { p =>
+    val g = zipped(iters, f)
+    if (npEff == 1) (0L until len).iterator.map(g).toVector
+    else rankBlocks(spark.sparkContext, npEff).flatMap { p =>
       val (drop, take) = ProductIndexMath.dropTake(len, npEff, p)
-      (drop until drop + take).iterator.map(j => f(iters.map(_(j))))
+      (drop until drop + take).iterator.map(g)
     }.collect().toVector
   }
 

@@ -265,6 +265,16 @@ final case class ProductSlice(iters: IndexedSeq[PRange], firstFlat: Long, lastFl
   @inline private def valueAtDim(flat: Long, k: Int): Double =
     starts(k) + childIdx(flat, k) * steps(k)
 
+  /** Element at global flat position `flat`: the same values as
+    * [[ProductIndexMath.elementAt]], decoded from the cached radix state
+    * into one primitive array (no weights vector, no boxed seqs). */
+  private def decode(flat: Long): IndexedSeq[Double] = {
+    val arr = new Array[Double](nDims)
+    var k = 0
+    while (k < nDims) { arr(k) = valueAtDim(flat, k); k += 1 }
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(arr)
+  }
+
   /** 0-based global flat index of `value`, or -1 if absent anywhere in
     * the full product. Allocation-free (hot path for `contains`/
     * `localIndex`). */
@@ -290,8 +300,8 @@ final case class ProductSlice(iters: IndexedSeq[PRange], firstFlat: Long, lastFl
 
   /** First/last element values, O(1) (`first`/`last`,
     * /root/reference/src/productsplit.jl:188-218). */
-  def firstElement: IndexedSeq[Double] = { requireNonEmpty(); elementAt(iters, firstFlat) }
-  def lastElement: IndexedSeq[Double] = { requireNonEmpty(); elementAt(iters, lastFlat) }
+  def firstElement: IndexedSeq[Double] = { requireNonEmpty(); decode(firstFlat) }
+  def lastElement: IndexedSeq[Double] = { requireNonEmpty(); decode(lastFlat) }
 
   private def requireNonEmpty(): Unit =
     if (isEmpty) throw new IllegalArgumentException("collection must be non - empty")
@@ -300,13 +310,21 @@ final case class ProductSlice(iters: IndexedSeq[PRange], firstFlat: Long, lastFl
     * /root/reference/src/productsplit.jl:308-324). */
   def apply(ind1: Long): IndexedSeq[Double] = {
     require(1 <= ind1 && ind1 <= length, s"index $ind1 out of bounds for slice of length $length")
-    elementAt(iters, firstFlat + ind1 - 1)
+    decode(firstFlat + ind1 - 1)
   }
 
   /** Materialize the slice (lazy iterator ≙ `takedrop`,
     * /root/reference/src/productsplit.jl:61-65). */
-  def iterator: Iterator[IndexedSeq[Double]] =
-    (firstFlat to lastFlat).iterator.map(elementAt(iters, _))
+  def iterator: Iterator[IndexedSeq[Double]] = new Iterator[IndexedSeq[Double]] {
+    private[this] var flat = firstFlat
+    def hasNext: Boolean = flat <= lastFlat
+    def next(): IndexedSeq[Double] = {
+      if (!hasNext) throw new NoSuchElementException("next on an exhausted slice iterator")
+      val e = decode(flat)
+      flat += 1
+      e
+    }
+  }
   def toVector: Vector[IndexedSeq[Double]] = iterator.toVector
 
   /** O(1) membership (`in`, /root/reference/src/productsplit.jl:730-740).

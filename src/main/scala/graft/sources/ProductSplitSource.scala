@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.PMapReduce
 import graft.plans.{PRange, ProductIndexMath, ProductSlice}
 
 /** Typed row of the product-split source: global flat index, owning
@@ -22,16 +23,29 @@ final case class ProductRow(id: Long, rank: Int, dims: Seq[Double])
   * sits in the least-significant radix position (reverse-lex order,
   * /root/reference/src/productsplit.jl:26-27).
   *
-  * The RDD path ([[productSliceRDD]]) gives EXACT physical rank-slice
-  * parity with the reference split law (`nelementsdroptake`,
-  * /root/reference/src/productsplit.jl:124-130): one partition per rank,
-  * each holding its [[ProductSlice]] handle — O(1) metadata, no data
-  * materialized until iterated.
+  * The RDD path ([[productSliceRDD]]) gives EXACT rank-slice parity
+  * with the reference split law (`nelementsdroptake`,
+  * reference src/productsplit.jl:124-130): one `(rank, slice)`
+  * row per rank, each holding its [[ProductSlice]] handle — O(1)
+  * metadata, no data materialized until iterated.
+  *
+  * `np` is the rank count of the split law, not the partition count.
+  * Every source here runs under the rank-block law of
+  * [[graft.operators.PMapReduce.rankBlocks]]: at most
+  * `defaultParallelism` partitions, each a contiguous ascending block
+  * of ranks (of ids, for the DataFrames). The `rank` column is computed
+  * by the split law, so it does not depend on the partition count.
   */
 object ProductSplitSource {
 
   private def numParts(np: Int, len: Long): Int =
     math.max(1L, math.min(np.toLong, len)).toInt
+
+  /** `spark.range` over `[0, len)` in at most `defaultParallelism`
+    * contiguous id blocks. */
+  private def idRange(spark: SparkSession, len: Long, np: Int): DataFrame =
+    spark.range(0, len, 1,
+      math.min(numParts(np, len), spark.sparkContext.defaultParallelism)).toDF("id")
 
   /** True integral division (SQL `div`). The Column `/` operator is
     * DOUBLE division — exact only below 2^53, while products here can
@@ -80,8 +94,7 @@ object ProductSplitSource {
   def productDF(spark: SparkSession, iters: IndexedSeq[PRange], np: Int,
                 names: Seq[String] = Nil): DataFrame = {
     val len = ProductIndexMath.totalLength(iters)
-    val base = spark.range(0, len, 1, numParts(np, len)).toDF("id")
-    withDecoded(base, iters, names)
+    withDecoded(idRange(spark, len, np), iters, names)
       .withColumn("rank", rankColumn(len, np, col("id")))
   }
 
@@ -104,7 +117,6 @@ object ProductSplitSource {
   def zippedDF(spark: SparkSession, iters: IndexedSeq[PRange], np: Int,
                names: Seq[String] = Nil): DataFrame = {
     val len = iters.map(_.numElems).min
-    val base = spark.range(0, len, 1, numParts(np, len)).toDF("id")
     val cols = iters.indices.map { k =>
       val r = iters(k)
       val name = if (names.nonEmpty) names(k) else s"d${k + 1}"
@@ -113,7 +125,7 @@ object ProductSplitSource {
         else lit(r.start) + col("id").cast("double") * lit(r.step)
       c.as(name)
     }
-    base.select(col("id") +: cols: _*)
+    idRange(spark, len, np).select(col("id") +: cols: _*)
       .withColumn("rank", rankColumn(len, np, col("id")))
   }
 
@@ -129,18 +141,15 @@ object ProductSplitSource {
       .as[ProductRow]
   }
 
-  /** One partition per rank, each holding `(rank, slice)` — the exact
-    * physical analog of "worker p owns ProductSplit(iters, np, p)". The
-    * slice is an O(1) handle; `mapPartitions` iterates lazily
-    * (`takedrop`, /root/reference/src/productsplit.jl:61-65). Ranks are
-    * trimmed to `min(np, L)` so no partition is empty (`E8`,
+  /** One `(rank, slice)` row per rank, in rank blocks — the analog of
+    * "worker p owns ProductSplit(iters, np, p)". The slice is an O(1)
+    * handle; `mapPartitions` iterates lazily (`takedrop`,
+    * reference src/productsplit.jl:61-65). Ranks are trimmed to
+    * `min(np, L)` so no rank is empty (`E8`,
     * /root/reference/src/clusterquery.jl:114-117). */
-  def productSliceRDD(spark: SparkSession, iters: IndexedSeq[PRange], np: Int,
-                      trim: Boolean = true): RDD[(Int, ProductSlice)] = {
-    val len = ProductIndexMath.totalLength(iters)
-    val npEff = if (trim) numParts(np, len) else np
-    spark.sparkContext
-      .parallelize(1 to npEff, npEff)
+  def productSliceRDD(spark: SparkSession, iters: IndexedSeq[PRange], np: Int): RDD[(Int, ProductSlice)] = {
+    val npEff = numParts(np, ProductIndexMath.totalLength(iters))
+    PMapReduce.rankBlocks(spark.sparkContext, npEff)
       .map(p => (p, ProductIndexMath.productSplit(iters, npEff, p)))
   }
 
@@ -148,8 +157,7 @@ object ProductSplitSource {
   def zipSliceRDD(spark: SparkSession, iters: IndexedSeq[PRange], np: Int): RDD[(Int, (Long, Long))] = {
     val len = iters.map(_.numElems).min
     val npEff = numParts(np, len)
-    spark.sparkContext
-      .parallelize(1 to npEff, npEff)
+    PMapReduce.rankBlocks(spark.sparkContext, npEff)
       .map { p => (p, ProductIndexMath.dropTake(len, npEff, p)) }
   }
 }

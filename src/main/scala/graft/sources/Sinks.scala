@@ -119,11 +119,18 @@ object Sinks {
 
   /** Record that `newTable`'s generation carries `fileNames` forward
     * from the table it will replace. Must be called BEFORE
-    * [[swapInTable]]; the swap completes the carry. */
+    * [[swapInTable]]; the swap completes the carry. No listed name may
+    * already exist in `newTable`'s directory: [[completeCarry]] skips a
+    * name that is present (its crash-resume law), so such a collision
+    * would silently drop the old file together with the bak. */
   def writeCarryManifest(spark: org.apache.spark.sql.SparkSession,
                          newTable: String, fileNames: Seq[String]): Unit = {
     val dir = tableLocation(spark, newTable)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fileNames.foreach { name =>
+      require(!fs.exists(new org.apache.hadoop.fs.Path(dir, name)),
+        s"carried file $name already exists in $newTable's directory $dir")
+    }
     val out = fs.create(new org.apache.hadoop.fs.Path(dir, CarryManifest), true)
     try out.write(fileNames.mkString("", "\n", "\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -607,6 +607,25 @@ class BucketingSpec extends AnyFunSuite {
     Sinks.dropTableAndLocation(spark, "spec_carry")
   }
 
+  test("writeCarryManifest refuses a carried name already present in the new generation") {
+    import graft.sources.Sinks
+    import spark.implicits._
+    Sinks.dropTableAndLocation(spark, "spec_carry_clash")
+    Seq((1L, 10L), (2L, 20L)).toDF("k", "v").coalesce(1)
+      .write.bucketBy(2, "k").sortBy("k").saveAsTable("spec_carry_clash")
+    val dir = Sinks.tableLocation(spark, "spec_carry_clash")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val present = fs.listStatus(dir).map(_.getPath.getName).filter(_.startsWith("part-")).head
+    // completeCarry would skip the present name and the swap would drop
+    // the bak's file of that name: the manifest must not be written
+    val ex = intercept[IllegalArgumentException] {
+      Sinks.writeCarryManifest(spark, "spec_carry_clash", Seq("part-absent.parquet", present))
+    }
+    assert(ex.getMessage.contains(present), ex.getMessage)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, "_carry_from_bak")))
+    Sinks.dropTableAndLocation(spark, "spec_carry_clash")
+  }
+
   test("swapInTable/recoverSwappedTable: two-rename law survives both crash windows") {
     import graft.sources.Sinks
     import spark.implicits._

@@ -135,8 +135,100 @@ class PMapReduceSpec extends AnyFunSuite {
       .parallelize(Seq(5, 3, 8, 1, 7, 2, 6, 4), 8)
       .map(r => (r, Vector(r)))
     val folded = graft.operators.PMapReduce.hostSegmentedReduce(
-      spark, partials, ReduceOp.concat[Int], segments = Some(3))
+      spark, partials, 8, ReduceOp.concat[Int], segments = Some(3))
     assert(folded == (1 to 8).toVector)
+  }
+
+  test("host-segmented reduce takes the rank count from its caller, not the partition count") {
+    // 8 scrambled ranks in 3 partitions: fewer partitions than ranks, as
+    // the rank-block law builds them
+    val partials = spark.sparkContext
+      .parallelize(Seq(5, 3, 8, 1, 7, 2, 6, 4), 3)
+      .map(r => (r, Vector(r)))
+    for (segs <- Seq(1, 2, 3, 7)) {
+      val folded = graft.operators.PMapReduce.hostSegmentedReduce(
+        spark, partials, 8, ReduceOp.concat[Int], segments = Some(segs))
+      assert(folded == (1 to 8).toVector, s"segs=$segs")
+    }
+    // a key outside 1..np is refused, naming the key
+    val ex = intercept[Exception] {
+      graft.operators.PMapReduce.hostSegmentedReduce(
+        spark, partials, 7, ReduceOp.concat[Int], segments = Some(3))
+    }
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => e.getMessage != null && e.getMessage.contains("rank key 8 outside 1..7")),
+      ex.toString)
+  }
+
+  /** Element-by-element comparison with the first mismatch in the message. */
+  private def assertSameSeq[T](got: Seq[T], want: Seq[T], clue: String): Unit = {
+    assert(got.length == want.length, s"$clue: length ${got.length} != ${want.length}")
+    val bad = got.indices.find(i => got(i) != want(i))
+    assert(bad.isEmpty, s"$clue: first mismatch at ${bad.map(i => (i, got(i), want(i)))}")
+  }
+
+  test("rank blocks: ranks outnumbering the cores keep every entry point's rank order") {
+    val zip = IndexedSeq(PRange(1, 1009), PRange.stepped(3, 2, 3001)) // 1009 elements
+    val zipWant = (0L until 1009L).map(j => Vector(1L + j, 3L + 2 * j))
+    val prod = IndexedSeq(PRange(1, 7), PRange(1, 11), PRange(1, 17)) // 1309 elements
+    val prodWant = (0L until 1309L).map(ProductIndexMath.elementAt(prod, _))
+    val sumOp = ReduceOp.commutative[Long](_ + _)
+    for (np <- Seq(5, 13, 64, 224)) {
+      assert(1009 % np != 0 && 1309 % np != 0, s"np=$np must not divide the lengths")
+      assertSameSeq(
+        pmapreduce(spark, zip, np)(v => Vector(v.map(_.toLong).toVector), ReduceOp.concat[Vector[Long]]),
+        zipWant, s"pmapreduce concat np=$np")
+      assert(pmapreduce(spark, zip, np)(v => v(0).toLong * v(1).toLong, sumOp) ==
+        zipWant.map(v => v(0) * v(1)).sum, s"pmapreduce sum np=$np")
+      assertSameSeq(
+        pmapreduceProduct(spark, prod, np)(v => Vector(v), ReduceOp.concat[IndexedSeq[Double]]),
+        prodWant, s"pmapreduceProduct concat np=$np")
+      assertSameSeq(
+        pmapreduceProductSplit(spark, prod, np)(_.toVector, ReduceOp.concat[IndexedSeq[Double]]),
+        prodWant, s"pmapreduceProductSplit concat np=$np")
+      // rank-sensitive: each rank contributes its own window start
+      assertSameSeq(
+        pmapreduceProductSplit(spark, prod, np)(ps => Vector(ps.firstFlat), ReduceOp.concat[Long]),
+        (1 to np).map(p => ProductIndexMath.dropTake(1309, np, p)._1), s"firstFlat np=$np")
+      for (segs <- Seq(1, 2, 7, 64)) {
+        assertSameSeq(
+          pmapreduceSegmented(spark, zip, np)(v => Vector(v.map(_.toLong).toVector),
+            ReduceOp.concat[Vector[Long]], segments = Some(segs)),
+          zipWant, s"pmapreduceSegmented concat np=$np segs=$segs")
+      }
+      assertSameSeq(pmapbatch(spark, zip, np)(v => v.map(_.toLong).toVector), zipWant,
+        s"pmapbatch np=$np")
+      assertSameSeq(pmapbatchProductSplit(spark, prod, np)(ps => (ps.firstFlat, ps.length)),
+        (1 to np).map(p => ProductIndexMath.dropTake(1309, np, p)), s"pmapbatchProductSplit np=$np")
+    }
+  }
+
+  test("rank blocks: 224 ranks run as at most defaultParallelism tasks; productDF(np = 25) likewise") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val group = "rank-block-pin"
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          e.stageInfos.foreach(si => stageTasks.add(si.numTasks))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "pmapreduce over 224 ranks")
+      val got = try pmapreduce(spark, IndexedSeq(PRange(1, 1000)), 224)(
+        v => v(0).toLong, ReduceOp.commutative[Long](_ + _))
+      finally sc.clearJobGroup()
+      assert(got == 500500L)
+      org.apache.spark.graftbridge.ListenerBusDrain.drain(sc)
+      val tasks = stageTasks.asScala.toSeq
+      assert(tasks.nonEmpty, "no stage recorded for the pmapreduce job")
+      assert(tasks.forall(_ <= sc.defaultParallelism),
+        s"stage task counts $tasks exceed defaultParallelism ${sc.defaultParallelism}")
+    } finally sc.removeSparkListener(listener)
+    val df = ProductSplitSource.productDF(spark, IndexedSeq(PRange(1, 40), PRange(1, 30)), 25)
+    assert(df.rdd.getNumPartitions <= sc.defaultParallelism)
   }
 
   test("BroadcastStack axis-union reduction on OffsetArrays (misctests_singleprocess.jl:55-63)") {

@@ -82,4 +82,21 @@ object ProductIndexMathProps extends Properties("ProductIndexMath") {
         sl.nElements(dim) == sl.toVector.map(_(dim - 1)).distinct.size
       })
     }
+
+  private val genFloatRange: Gen[PRange] = for {
+    lo <- Gen.chooseNum(-5.0, 5.0)
+    n <- Gen.chooseNum(1L, 9L)
+    step <- Gen.oneOf(0.1, 0.25, 1.5)
+  } yield PRange(lo, step, n, integral = false)
+
+  property("ProductSlice apply/iterator decode == elementAt for every index of random slices") =
+    forAll(Gen.chooseNum(1, 3).flatMap(n =>
+        Gen.listOfN(n, Gen.oneOf(genRange, genFloatRange)).map(_.toIndexedSeq)),
+      Gen.chooseNum(1, 10), Gen.chooseNum(1, 10)) { (iters, np, p0) =>
+      val sl = ProductIndexMath.productSplit(iters, np, math.min(p0, np))
+      val want = (1L to sl.length).map(i => ProductIndexMath.elementAt(iters, sl.firstFlat + i - 1))
+      Prop((1L to sl.length).forall(i => sl(i) == want((i - 1).toInt))) &&
+        Prop(sl.iterator.toVector == want) &&
+        Prop(sl.isEmpty || (sl.firstElement == want.head && sl.lastElement == want.last))
+    }
 }
