@@ -735,7 +735,7 @@ object ScaleProbe {
         val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
       }
       spark.catalog.clearCache()
-      ExplosiveJoin.clearSizingMemo()
+      ExplosiveJoin.invalidateSizing()
       println(f"SCALEPROBE salt dir=$sfDir $label min=${ts.min}%.2f s " +
         s"(${ts.map(x => f"$x%.2f").mkString(" ")})")
     }

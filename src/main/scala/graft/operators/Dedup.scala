@@ -1215,8 +1215,7 @@ object Dedup {
   def writeMinHashIndex(df: DataFrame, idCol: String, textCol: String,
                         table: String, buckets: Int,
                         numHashes: Int = 128, bands: Int = 32,
-                        rowsPerBand: Int = 4, shingleK: Int = 8,
-                        statsBroadcast: Boolean = true): Unit = {
+                        rowsPerBand: Int = 4, shingleK: Int = 8): Unit = {
     // cache() the band rows ACROSS the stats aggregate and the write:
     // the bsz broadcast must materialize before the write's join probe
     // executes, so without the cache the CPU-dense text→band native
@@ -1229,32 +1228,11 @@ object Dedup {
     val banded = bandRows(df, idCol, textCol, numHashes, bands, rowsPerBand,
       shingleK).cache()
     try graft.sources.Sinks.writeBucketed(
-      indexFrameOfBanded(banded, statsBroadcast),
+      withBucketSizes(banded, bucketCounts(banded)),
       table, buckets, Seq("band", "bucket"))
-    catch {
-      // The colliding-bucket bsz table is broadcast (one exchange of
-      // the band rows instead of two); a pathologically duplicate-
-      // heavy corpus can push it past the broadcast limit — name the
-      // escape hatch instead of surfacing a bare broadcast error.
-      case e: Throwable if Option(e.getMessage).exists(m =>
-          m.toLowerCase(java.util.Locale.ROOT).contains("broadcast")) =>
-        throw new org.apache.spark.SparkException(
-          s"writeMinHashIndex($table): the colliding-bucket stats table " +
-            "exceeded the broadcast limit (duplicate-heavy corpus). " +
-            "Re-run with statsBroadcast = false: a shuffle join computes " +
-            "bsz at the cost of one extra exchange of the band table.", e)
-    }
     finally { banded.unpersist(false); () }
   }
 
-  /** The frame [[writeMinHashIndex]] writes — exposed so PlanSpec /
-    * Explain can pin its shape: the index-sized (id, band, bucket)
-    * rows flow from the fused banding pass straight into the bucketed
-    * write with NO exchange of their own; the only ShuffleExchange in
-    * this frame carries map-side-combined (band, bucket) partial
-    * COUNTS (collision-bucket-sized), broadcast-joined back as `bsz`.
-    * The single index-sized shuffle of the write path is the bucketed
-    * write's own clustering, added by the insert command. */
   /** The fused text→(band, bucket) rows every MinHash index path
     * shares — self-join, index write, delta append, and standing-index
     * probe all hash into the SAME bucket space because they all come
@@ -1269,15 +1247,19 @@ object Dedup {
         col(textCol), shingleK, numHashes, bands, rowsPerBand)))
       .select(col(outIdCol), col("pos").as("band"), col("col").as("bucket"))
 
-  /** Exact-Jaccard verification of candidate `(id_a, id_b)` pairs:
-    * join the texts back by id and keep pairs at or above `threshold`
-    * — the shared tail of [[incrementalNearDupPairs]] and the
-    * standing-index probe ([[IndexLifecycle.probeStandingMinHashIndex]]). */
-  private[operators] def verifyJaccardPairs(cands: DataFrame,
+  /** Candidate `(id_a, id_b)` pairs of the delta band rows `d` (id
+    * column `id_a`) that share a (band, bucket) with the index rows
+    * `idx` (id column `id_b`), verified by exact Jaccard: join the
+    * texts back by id and keep pairs at or above `threshold` — the
+    * shared tail of [[incrementalNearDupPairs]] and the standing-index
+    * probe ([[IndexLifecycle.probeStandingMinHashIndex]]). */
+  private[operators] def verifiedIndexPairs(d: DataFrame, idx: DataFrame,
                                             delta: DataFrame, idCol: String,
                                             textCol: String, base: DataFrame,
                                             threshold: Double,
                                             shingleK: Int): DataFrame = {
+    val cands = d.join(idx, Seq("band", "bucket"))
+      .select("id_a", "id_b").distinct()
     val ta = delta.select(col(idCol).as("id_a"), col(textCol).as("__ta"))
     val tb = base.select(col(idCol).as("id_b"), col(textCol).as("__tb"))
     cands.join(ta, "id_a").join(tb, "id_b")
@@ -1287,27 +1269,35 @@ object Dedup {
       .where(col("jaccard") >= threshold)
   }
 
+  /** The frame [[writeMinHashIndex]] writes — exposed so PlanSpec /
+    * Explain can pin its shape: the index-sized (id, band, bucket)
+    * rows flow from the fused banding pass straight into the bucketed
+    * write with NO exchange of their own; the only ShuffleExchange in
+    * this frame carries map-side-combined (band, bucket) partial
+    * COUNTS (collision-bucket-sized), broadcast-joined back as `bsz`.
+    * The single index-sized shuffle of the write path is the bucketed
+    * write's own clustering, added by the insert command. */
   def minhashIndexFrame(df: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 128, bands: Int = 32,
-                        rowsPerBand: Int = 4, shingleK: Int = 8,
-                        statsBroadcast: Boolean = true): DataFrame =
-    indexFrameOfBanded(
-      bandRows(df, idCol, textCol, numHashes, bands, rowsPerBand, shingleK),
-      statsBroadcast)
+                        rowsPerBand: Int = 4, shingleK: Int = 8): DataFrame = {
+    val banded = bandRows(df, idCol, textCol, numHashes, bands, rowsPerBand,
+      shingleK)
+    withBucketSizes(banded, bucketCounts(banded))
+  }
 
-  /** [[minhashIndexFrame]] from already-computed band rows — the shape
-    * both the lazy frame and the (band-row-caching) write path share. */
-  private def indexFrameOfBanded(banded: DataFrame,
-                                 statsBroadcast: Boolean): DataFrame = {
-    // Colliding buckets only (count >= 2); singletons coalesce to 1 so
-    // the broadcast is candidate-bucket-sized, not index-sized.
-    // statsBroadcast = false is the duplicate-heavy escape hatch: the
-    // planner shuffle-joins bsz back (one extra band-table exchange)
-    // instead of failing at the broadcast limit.
-    val sizes = banded.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("__bsz")).where(col("__bsz") >= 2)
-    val stats = if (statsBroadcast) broadcast(sizes) else sizes
-    banded.join(stats, Seq("band", "bucket"), "left")
+  /** `(band, bucket, bsz)`: the member count of every bucket of the
+    * band rows `rows` (also a growable index's histogram). */
+  private[operators] def bucketCounts(rows: DataFrame): DataFrame =
+    rows.groupBy("band", "bucket").agg(count(lit(1)).as("bsz"))
+
+  /** The per-row `bsz` law of every MinHash index write (build and
+    * compaction; why it is shaped so: [[writeMinHashIndex]]), given
+    * the [[bucketCounts]] of `rows`. */
+  private[operators] def withBucketSizes(rows: DataFrame,
+                                         counts: DataFrame): DataFrame = {
+    val sizes = counts.where(col("bsz") >= 2)
+      .select(col("band"), col("bucket"), col("bsz").as("__bsz"))
+    rows.join(broadcast(sizes), Seq("band", "bucket"), "left")
       .select(col("id"), col("band"), col("bucket"),
         coalesce(col("__bsz"), lit(1L)).as("bsz"))
   }
@@ -1357,8 +1347,7 @@ object Dedup {
       shingleK, outIdCol = "id_a")
     val idx = index.where(col("bsz") <= maxBucketSize)
       .select(col("band"), col("bucket"), col("id").as("id_b"))
-    val cands = d.join(idx, Seq("band", "bucket"))
-      .select("id_a", "id_b").distinct()
-    verifyJaccardPairs(cands, delta, idCol, textCol, base, threshold, shingleK)
+    verifiedIndexPairs(d, idx, delta, idCol, textCol, base, threshold,
+      shingleK)
   }
 }

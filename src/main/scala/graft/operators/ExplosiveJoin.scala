@@ -108,8 +108,8 @@ object ExplosiveJoin {
     * enough chunks that no task sorts more than `targetPerTask` pair
     * rows from one key, clamped to [1, 64]. 64 caps the ×chunks
     * probe-side fan-out at the point where per-chunk overhead would
-    * rival the skew it removes. Pure (spec-pinned law — the same law
-    * as Search.autoSaltChunks, which delegates here); [[autoSaltPlan]]
+    * rival the skew it removes. Pure (spec-pinned law; the BM25 bulk
+    * probe's salt is sized by it too); [[autoSaltPlan]]
     * feeds it measured per-key pair volumes against the balance-aware
     * budget from [[perChunkBudget]]. */
   def saltChunksFor(maxKeyRows: Long,
@@ -180,10 +180,6 @@ object ExplosiveJoin {
     * yesterday-sized width can under-split today's hot key. Call
     * between sweeps, alongside `spark.catalog.clearCache()`. */
   def invalidateSizing(): Unit = sizingMemo.clear()
-
-  /** Test hook: drop memoized sizing results (e.g. after rewriting a
-    * table a memoized plan reads). */
-  private[graft] def clearSizingMemo(): Unit = invalidateSizing()
 
   /** MEASURED salt plan for joining `probe` ⋈ `build` on `keys`: one
     * sizing aggregate (two map-side-combined per-key counts + their

@@ -45,8 +45,13 @@ import graft.sources.Sinks
   *    bounded far below the index, same argument as the write-path
   *    stats broadcast).
   *  - compact: re-count + rewrite from the 4-long index rows only —
-  *    O(index), ZERO text; folds the per-append bucket files and the
-  *    statlog, restoring per-row bsz = true count.
+  *    ZERO text; folds the per-append bucket files and the statlog,
+  *    restoring per-row bsz = true count. ONE routine does it for
+  *    both regimes, differing only in the rows it recounts and the
+  *    files it carries: the touched file-buckets' files, every other
+  *    file carried forward by rename (O(touched)), or — after a
+  *    crashed append, or when every file-bucket was touched — the
+  *    whole bucketed table with nothing carried (O(index)).
   *
   * Durability: appends write rows THEN log (a crash between leaves the
   * log undercounting — [[minhashIndexFsck]] detects, [[compactMinHashIndex]]
@@ -71,21 +76,14 @@ object IndexLifecycle {
   def writeGrowableMinHashIndex(df: DataFrame, idCol: String, textCol: String,
                                 table: String, buckets: Int,
                                 numHashes: Int = 128, bands: Int = 32,
-                                rowsPerBand: Int = 4, shingleK: Int = 8,
-                                statsBroadcast: Boolean = true): Unit = {
+                                rowsPerBand: Int = 4, shingleK: Int = 8): Unit = {
     val spark = df.sparkSession
     Dedup.writeMinHashIndex(df, idCol, textCol, table, buckets,
-      numHashes, bands, rowsPerBand, shingleK, statsBroadcast)
-    writeHistFromRows(spark, table, hist(table), buckets)
+      numHashes, bands, rowsPerBand, shingleK)
+    Sinks.writeBucketed(Dedup.bucketCounts(spark.table(table)), hist(table),
+      buckets, Seq("band", "bucket"))
     Sinks.dropTableAndLocation(spark, statlog(table))
   }
-
-  private def writeHistFromRows(spark: SparkSession, sourceTable: String,
-                                targetTable: String, buckets: Int): Unit =
-    Sinks.writeBucketed(
-      spark.table(sourceTable).groupBy("band", "bucket")
-        .agg(count(lit(1)).as("bsz")),
-      targetTable, buckets, Seq("band", "bucket"))
 
   /** 0-row frame with the statlog's exact shape — the no-appends-yet
     * stand-in (`band` int, `bucket` long, the count column long). An
@@ -99,6 +97,11 @@ object IndexLifecycle {
     import spark.implicits._
     Seq.empty[(Int, Long, Long)].toDF("band", "bucket", countCol)
   }
+
+  /** The statlog's rows, or [[emptyLog]] before the first append. */
+  private def statlogRows(spark: SparkSession, table: String): DataFrame =
+    if (spark.catalog.tableExists(statlog(table))) spark.table(statlog(table))
+    else emptyLog(spark, "n")
 
   /** Fold a day's delta into the standing index WITHOUT rewriting it:
     * O(delta) appended band rows + O(delta) statlog rows + one
@@ -131,12 +134,9 @@ object IndexLifecycle {
         val oldHist = spark.table(hist(table))
           .join(broadcast(touched), Seq("band", "bucket"))
           .select(col("band"), col("bucket"), col("bsz").as("__h"))
-        val oldLog =
-          if (spark.catalog.tableExists(statlog(table)))
-            spark.table(statlog(table))
-              .join(broadcast(touched), Seq("band", "bucket"))
-              .groupBy("band", "bucket").agg(sum("n").as("__l"))
-          else emptyLog(spark, "__l")
+        val oldLog = statlogRows(spark, table)
+          .join(broadcast(touched), Seq("band", "bucket"))
+          .groupBy("band", "bucket").agg(sum("n").as("__l"))
         val merged = dCounts
           .join(oldHist, Seq("band", "bucket"), "left")
           .join(oldLog, Seq("band", "bucket"), "left")
@@ -170,11 +170,8 @@ object IndexLifecycle {
     * result is only ever the right side of an anti-join). */
   def minhashHotBuckets(spark: SparkSession, table: String,
                         cap: Int): DataFrame = {
-    val logSum =
-      if (spark.catalog.tableExists(statlog(table)))
-        spark.table(statlog(table)).groupBy("band", "bucket")
-          .agg(sum("n").as("__ln"))
-      else emptyLog(spark, "__ln")
+    val logSum = statlogRows(spark, table).groupBy("band", "bucket")
+      .agg(sum("n").as("__ln"))
     val joined = spark.table(hist(table))
       .join(broadcast(logSum), Seq("band", "bucket"), "left")
       .where(col("bsz") + coalesce(col("__ln"), lit(0L)) > cap)
@@ -207,9 +204,7 @@ object IndexLifecycle {
         Seq("band", "bucket"), "left_anti")
     val idx = spark.table(table)
       .select(col("band"), col("bucket"), col("id").as("id_b"))
-    val cands = d.join(idx, Seq("band", "bucket"))
-      .select("id_a", "id_b").distinct()
-    Dedup.verifyJaccardPairs(cands, delta, idCol, textCol, base,
+    Dedup.verifiedIndexPairs(d, idx, delta, idCol, textCol, base,
       threshold, shingleK)
   }
 
@@ -232,141 +227,111 @@ object IndexLifecycle {
     * untouched file-bucket's rows kept their build-time bsz = still
     * the true count. The histogram is bucketed by the same
     * (band, bucket) spec, so its files prune identically: new hist =
-    * recount of touched file-buckets ∪ carried hist files.
+    * recount of touched file-buckets ∪ carried hist files. File names
+    * carry the TABLE's bucket ids, so a `buckets` other than the
+    * table's bucket count (which would pick the wrong files) is refused.
     *
     * The partial path requires a CONSISTENT index ([[minhashIndexFsck]]
     * — checked first): a crashed append leaves rows the statlog never
     * logged, whose buckets the touched set would miss, so the repair
     * path (fsck false) falls back to the full recount + rewrite of
-    * every file-bucket. Swaps are the two-rename law; the statlog
-    * reset comes LAST, so the one crash window (new hist + old log)
-    * OVERcounts — conservative for the cap, flagged by fsck, fixed by
-    * re-running compact. */
-  def compactMinHashIndex(spark: SparkSession, table: String, buckets: Int,
-                          statsBroadcast: Boolean = true): Unit = {
+    * every file-bucket, as does a compaction that touched every
+    * file-bucket; both regimes run [[rewrite]]. Swaps are the
+    * two-rename law; the statlog reset comes LAST, so the one crash
+    * window (new hist + old log) OVERcounts — conservative for the
+    * cap, flagged by fsck, fixed by re-running compact. */
+  def compactMinHashIndex(spark: SparkSession, table: String,
+                          buckets: Int): Unit = {
     Sinks.recoverSwappedTable(spark, table)
     Sinks.recoverSwappedTable(spark, hist(table))
-    // ONE pre-check job: (rows, Σhist, Σlog) — the fsck identity — and
-    // the statlog's touched file-bucket ids (the write-side bucket law:
-    // pmod(Murmur3 hash of the bucket columns IN SPEC ORDER,
-    // numBuckets) — BucketingSpec pins the file-name parity), unioned
-    // into a single action so the partial-path decision costs one job,
-    // not four (the r15-mid bench read the 4-job form as +0.6 s task
-    // per compaction at 6 reps).
-    val touched: Option[Array[Int]] =
+    val tableBuckets = org.apache.spark.sql.graftbridge.BucketBridge
+      .bucketSpecOf(spark, table).map(_._1)
+    require(tableBuckets.contains(buckets),
+      s"compactMinHashIndex($table): buckets = $buckets but the table has " +
+        tableBuckets.fold("no bucket spec")(n => s"$n buckets"))
+    val touched =
       if (!spark.catalog.tableExists(hist(table))) None
-      else {
-        val hasLog = spark.catalog.tableExists(statlog(table))
-        val rowsN = spark.table(table)
-          .agg(count(lit(1)).cast("long").as("v")).select(lit(-1).as("fb"), col("v"))
-        val histN = spark.table(hist(table))
-          .agg(coalesce(sum(col("bsz")), lit(0L)).as("v"))
-          .select(lit(-2).as("fb"), col("v"))
-        val logPart =
-          if (hasLog) spark.table(statlog(table))
-            .groupBy(pmod(hash(col("band"), col("bucket")), lit(buckets))
-              .cast("int").as("fb"))
-            .agg(coalesce(sum(col("n")), lit(0L)).as("v"))
-          else emptyLog(spark, "__z")
-            .select(lit(0).as("fb"), col("__z").as("v")).limit(0)
-        val got = rowsN.unionByName(histN).unionByName(logPart).collect()
-        val rows = got.find(_.getInt(0) == -1).map(_.getLong(1)).getOrElse(0L)
-        val histSum = got.find(_.getInt(0) == -2).map(_.getLong(1)).getOrElse(0L)
-        val logRows = got.filter(_.getInt(0) >= 0)
-        val logSum = logRows.map(_.getLong(1)).sum
-        if (histSum + logSum != rows) None // crashed append: full repair
-        else Some(logRows.map(_.getInt(0)))
-      }
+      else consistentTouched(spark, table, buckets)
     touched match {
       case Some(fbs) if fbs.isEmpty =>
         // consistent and nothing appended since the last fold — per-row
         // bsz and the histogram are already write-time truth
         Sinks.dropTableAndLocation(spark, statlog(table))
       case Some(fbs) if fbs.length < buckets =>
-        compactTouchedFileBuckets(spark, table, buckets, fbs.toSet,
-          statsBroadcast)
+        val (idxTouched, idxCarry) = splitFiles(spark, table, fbs.toSet)
+        val (_, histCarry) = splitFiles(spark, hist(table), fbs.toSet)
+        // rows of the touched file-buckets only — read by file path
+        // (the file NAME is the bucket id), so bytes read scale with
+        // the delta's bucket footprint, never the index
+        rewrite(spark, table, buckets, spark.read.parquet(idxTouched: _*),
+          idxCarry, histCarry)
       case _ =>
-        compactAllFileBuckets(spark, table, buckets, statsBroadcast)
+        // the bucketed scan keeps the recount exchange-free
+        rewrite(spark, table, buckets, spark.table(table), Nil, Nil)
     }
   }
 
-  /** Partition-pruned compaction: recount + rewrite ONLY `fbs`'
-    * files; carry every other file forward by rename. */
-  private def compactTouchedFileBuckets(spark: SparkSession, table: String,
-                                        buckets: Int, fbs: Set[Int],
-                                        statsBroadcast: Boolean): Unit = {
-    def split(t: String): (Seq[String], Seq[String]) = {
-      val dir = Sinks.tableLocation(spark, t)
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val files = fs.listStatus(dir).toSeq
-        .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      val (touch, carry) = files.partition { f =>
-        val fb = org.apache.spark.sql.graftbridge.BucketBridge
-          .bucketIdOf(f.getPath.getName)
-        require(fb.isDefined, s"non-bucketed file in $t: ${f.getPath.getName}")
-        fbs.contains(fb.get)
-      }
-      (touch.map(_.getPath.toString), carry.map(_.getPath.getName))
+  /** ONE action: None when the fsck identity `count(rows) == Σ hist.bsz
+    * + Σ statlog.n` fails (a missing table sums to 0), else the
+    * statlog's touched file-bucket ids under `buckets` (the write-side
+    * law pmod(Murmur3 hash of the bucket columns IN SPEC ORDER,
+    * numBuckets) — BucketingSpec pins the file-name parity). */
+  private def consistentTouched(spark: SparkSession, table: String,
+                                buckets: Int): Option[Array[Int]] = {
+    val rowsN = spark.table(table).agg(count(lit(1)).as("v"))
+      .select(lit(-1).as("fb"), col("v"))
+    val histN = (if (!spark.catalog.tableExists(hist(table))) emptyLog(spark, "v")
+      else spark.table(hist(table)).agg(coalesce(sum(col("bsz")), lit(0L)).as("v")))
+      .select(lit(-2).as("fb"), col("v"))
+    val logPart = statlogRows(spark, table)
+      .groupBy(pmod(hash(col("band"), col("bucket")), lit(buckets))
+        .cast("int").as("fb"))
+      .agg(coalesce(sum(col("n")), lit(0L)).as("v"))
+    val got = rowsN.unionByName(histN).unionByName(logPart).collect()
+    def tagged(tag: Int) = got.find(_.getInt(0) == tag).map(_.getLong(1)).getOrElse(0L)
+    val logRows = got.filter(_.getInt(0) >= 0)
+    if (tagged(-2) + logRows.map(_.getLong(1)).sum != tagged(-1)) None
+    else Some(logRows.map(_.getInt(0)))
+  }
+
+  /** `t`'s bucket files split by file-bucket id: the full paths of
+    * those in `fbs`, and the names of the rest (the carry list). */
+  private def splitFiles(spark: SparkSession, t: String,
+                         fbs: Set[Int]): (Seq[String], Seq[String]) = {
+    val dir = Sinks.tableLocation(spark, t)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = fs.listStatus(dir).toSeq
+      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
+    val (touch, carry) = files.partition { f =>
+      val fb = org.apache.spark.sql.graftbridge.BucketBridge
+        .bucketIdOf(f.getPath.getName)
+      require(fb.isDefined, s"non-bucketed file in $t: ${f.getPath.getName}")
+      fbs.contains(fb.get)
     }
-    val (idxTouched, idxCarry) = split(table)
-    val (_, histCarry) = split(hist(table))
-    // rows of the touched file-buckets only — read by file path (the
-    // file NAME is the bucket id), so bytes read scale with the delta's
-    // bucket footprint, never the index
-    val rows = spark.read.parquet(idxTouched: _*)
-      .select("id", "band", "bucket")
-    val recount = rows.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("bsz")).cache()
+    (touch.map(_.getPath.toString), carry.map(_.getPath.getName))
+  }
+
+  /** The one compaction body: recount `source`'s rows, write them with
+    * per-row bsz and the recount as the new histogram (the bsz join is
+    * 1:1, so Σ hist.bsz == count(rows) by construction), declare the
+    * carried files, swap both tables in, reset the statlog. cache():
+    * the recount feeds both writes; bucket-count-sized. */
+  private def rewrite(spark: SparkSession, table: String, buckets: Int,
+                      source: DataFrame, idxCarry: Seq[String],
+                      histCarry: Seq[String]): Unit = {
+    val rows = source.select("id", "band", "bucket")
+    val recount = Dedup.bucketCounts(rows).cache()
     try {
-      val sizes = recount.where(col("bsz") >= 2)
-        .select(col("band"), col("bucket"), col("bsz").as("__bsz"))
-      val stats = if (statsBroadcast) broadcast(sizes) else sizes
-      val fresh = rows.join(stats, Seq("band", "bucket"), "left")
-        .select(col("id"), col("band"), col("bucket"),
-          coalesce(col("__bsz"), lit(1L)).as("bsz"))
-      Sinks.writeBucketed(fresh, s"${table}_cnew", buckets,
-        Seq("band", "bucket"))
+      Sinks.writeBucketed(Dedup.withBucketSizes(rows, recount),
+        s"${table}_cnew", buckets, Seq("band", "bucket"))
       Sinks.writeBucketed(recount, s"${table}_hist_cnew", buckets,
         Seq("band", "bucket"))
       // declare the carried generations BEFORE the swaps — the swap
       // completes the carry (or recovery does, after a crash)
-      Sinks.writeCarryManifest(spark, s"${table}_cnew", idxCarry)
-      Sinks.writeCarryManifest(spark, s"${table}_hist_cnew", histCarry)
-      Sinks.swapInTable(spark, s"${table}_cnew", table)
-      Sinks.swapInTable(spark, s"${table}_hist_cnew", hist(table))
-      Sinks.dropTableAndLocation(spark, statlog(table))
-    } finally { recount.unpersist(false); () }
-  }
-
-  /** Full recount + rewrite — the repair path (also taken when every
-    * file-bucket is touched, where pruning buys nothing). */
-  private def compactAllFileBuckets(spark: SparkSession, table: String,
-                                    buckets: Int,
-                                    statsBroadcast: Boolean): Unit = {
-    val rows = spark.table(table).select("id", "band", "bucket")
-    // cache(): the recount IS the new histogram — it feeds the per-row
-    // bsz join AND the hist rewrite below, so one bucket-count frame
-    // serves both (the former shape re-scanned the just-written new
-    // table and re-aggregated it to derive an identical histogram —
-    // one extra scan + agg job per compaction for a frame this method
-    // already holds). Bucket-count-sized; released in finally.
-    val recount = rows.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("bsz")).cache()
-    try {
-      val sizes = recount.where(col("bsz") >= 2)
-        .select(col("band"), col("bucket"), col("bsz").as("__bsz"))
-      val stats = if (statsBroadcast) broadcast(sizes) else sizes
-      val fresh = rows.join(stats, Seq("band", "bucket"), "left")
-        .select(col("id"), col("band"), col("bucket"),
-          coalesce(col("__bsz"), lit(1L)).as("bsz"))
-      Sinks.writeBucketed(fresh, s"${table}_cnew", buckets,
-        Seq("band", "bucket"))
-      // the new hist = the recount: `fresh` left-joins `rows` 1:1
-      // against a grouped frame, so the new table's (band, bucket)
-      // multiset is exactly `rows`' — the recount counts it by
-      // construction (Σ hist.bsz == count(rows), the fsck invariant)
-      Sinks.writeBucketed(recount, s"${table}_hist_cnew", buckets,
-        Seq("band", "bucket"))
+      if (idxCarry.nonEmpty)
+        Sinks.writeCarryManifest(spark, s"${table}_cnew", idxCarry)
+      if (histCarry.nonEmpty)
+        Sinks.writeCarryManifest(spark, s"${table}_hist_cnew", histCarry)
       Sinks.swapInTable(spark, s"${table}_cnew", table)
       Sinks.swapInTable(spark, s"${table}_hist_cnew", hist(table))
       Sinks.dropTableAndLocation(spark, statlog(table))
@@ -375,16 +340,11 @@ object IndexLifecycle {
 
   /** Consistency check: `Σ hist.bsz + Σ statlog.n == count(index
     * rows)` — false exactly when a crash split an append (rows
-    * without log) or a compaction (new hist with stale log).
+    * without log) or a compaction (new hist with stale log). One
+    * action: the compaction pre-check with a single file-bucket.
     * Repair: [[compactMinHashIndex]]. */
-  def minhashIndexFsck(spark: SparkSession, table: String): Boolean = {
-    val rows = spark.table(table).count()
-    def sumOf(t: String, c: String): Long =
-      if (spark.catalog.tableExists(t))
-        spark.table(t).agg(coalesce(sum(col(c)), lit(0L))).first().getLong(0)
-      else 0L
-    sumOf(hist(table), "bsz") + sumOf(statlog(table), "n") == rows
-  }
+  def minhashIndexFsck(spark: SparkSession, table: String): Boolean =
+    consistentTouched(spark, table, 1).isDefined
 
   /** Append a delta's fingerprints to a standing [[Dedup.writeDHashIndex]]
     * table — a plain bucketed insert: the dHash index carries no

@@ -59,10 +59,7 @@ object Search {
     // Global stats: exact long sum of doc lengths -> one double divide.
     val statsRow = base.agg(count(lit(1)), sum(col("dl"))).first()
     val nDocs = statsRow.getLong(0)
-    val qrows: Seq[(Long, Seq[String])] = queries
-      .select(col("query_id").cast("long"), col("terms"))
-      .collect().toSeq
-      .map(r => r.getLong(0) -> r.getSeq[String](1))
+    val qrows = collectQueries(queries)
     if (nDocs == 0L || qrows.isEmpty)
       return base.select(lit(0L).as("query_id"), col(idCol),
         lit(0L).as("rnk"), lit(0.0).as("score")).limit(0)
@@ -71,24 +68,14 @@ object Search {
     // Per-term document frequency, restricted to the query vocabulary
     // by a codegen'd IN before the (map-side combined) aggregate.
     val allTerms = qrows.flatMap(_._2).distinct
-    val dfMap: Map[String, Long] = base
+    val termTriples = termIdfs(qrows, nDocs, base
       .select(explode(array_distinct(col("ws"))).as("token"))
       .where(col("token").isInCollection(allTerms))
-      .groupBy("token").agg(count(lit(1)).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    def idf(t: String): Double = dfMap.get(t) match {
-      case Some(df) => math.log(1.0 + (nDocs - df + 0.5) / (df + 0.5))
-      case None => 0.0 // absent term: tf is 0 everywhere anyway
-    }
+      .groupBy("token").agg(count(lit(1)).as("df")))
 
     // Fused scoring: ONE native token pass per document scores every
     // query ([[graft.functions.NativeExprs.Bm25ScoresExpr]] — the
     // unrolled Column form re-walked the token array once per term).
-    // Terms dedupe PER QUERY: a duplicated term contributes once,
-    // as on the index path.
-    val termTriples: Seq[(Long, String, Double)] = qrows.flatMap {
-      case (qid, terms) => terms.distinct.map(t => (qid, t, idf(t)))
-    }
     val scored = docs
       .select(col(idCol),
         explode(graft.functions.NativeExprs.bm25ScoresNative(
@@ -102,6 +89,26 @@ object Search {
       .where(col("rnk") <= k)
       .select(col("query_id"), col(idCol), col("rnk"),
         round(col("score"), 6).as("score"))
+  }
+
+  /** The collected query set of the driver-side scorers. */
+  private def collectQueries(queries: DataFrame): Seq[(Long, Seq[String])] =
+    queries.select(col("query_id").cast("long"), col("terms")).collect()
+      .toSeq.map(r => r.getLong(0) -> r.getSeq[String](1))
+
+  /** `(query_id, term, idf)` for each DISTINCT term of each query — a
+    * term listed twice in one query scores once, on every BM25 path
+    * (Bm25ScoresExpr's tf slots collapse duplicates; on the index
+    * path each extra row would join the postings again). idf from the
+    * collected `(token, df)` rows of the query vocabulary; an absent
+    * term gets 0 (its tf is 0 everywhere anyway). */
+  private def termIdfs(qrows: Seq[(Long, Seq[String])], nDocs: Long,
+                       dfRows: DataFrame): Seq[(Long, String, Double)] = {
+    val dfMap = dfRows.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    qrows.flatMap { case (qid, ts) => ts.distinct.map { t =>
+      (qid, t, dfMap.get(t).fold(0.0)(df =>
+        math.log(1.0 + (nDocs - df + 0.5) / (df + 0.5))))
+    } }
   }
 
   /** Top-`k` docs per query by query-term coverage (|terms ∩ token
@@ -199,92 +206,30 @@ object Search {
     * does. */
   def bm25TopKFromIndex(spark: org.apache.spark.sql.SparkSession,
                         prefix: String, queries: DataFrame, k: Int,
-                        k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val statsRow = spark.table(s"${prefix}_stats").first()
-    val nDocs = statsRow.getLong(0)
-    val qrows: Seq[(Long, Seq[String])] = queries
-      .select(col("query_id").cast("long"), col("terms"))
-      .collect().toSeq
-      .map(r => r.getLong(0) -> r.getSeq[String](1))
-    if (nDocs == 0L || qrows.isEmpty)
-      return spark.range(0).select(col("id").as("query_id"),
-        col("id").as("doc_id"), col("id").as("rnk"),
-        lit(0.0).as("score"))
-    val avgdl = statsRow.getLong(1).toDouble / nDocs
-    val allTerms = qrows.flatMap(_._2).distinct
-    val dfMap: Map[String, Long] = spark.table(s"${prefix}_df")
-      .where(col("token").isInCollection(allTerms))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    def idf(t: String): Double = dfMap.get(t) match {
-      case Some(df) => math.log(1.0 + (nDocs - df + 0.5) / (df + 0.5))
-      case None => 0.0
+                        k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    probeBm25Index(spark, prefix, k, k1, b) { nDocs =>
+      val qrows = collectQueries(queries)
+      if (qrows.isEmpty) None
+      else {
+        import spark.implicits._
+        val allTerms = qrows.flatMap(_._2).distinct
+        val termsDf = termIdfs(qrows, nDocs, spark.table(s"${prefix}_df")
+          .where(col("token").isInCollection(allTerms)))
+          .toDF("query_id", "token", "idf")
+        val joined = spark.table(s"${prefix}_postings")
+          .where(col("token").isInCollection(allTerms))
+          .join(broadcast(termsDf), "token")
+        Some((joined, qrows.map(_._1).toDF("query_id")))
+      }
     }
-    import spark.implicits._
-    // distinct PER QUERY: a term listed twice in one query must score
-    // once (the fused [[bm25TopK]] path counts it once — its tf slots
-    // collapse duplicates); without it each occurrence row would join
-    // the postings and double-count the contribution.
-    val termsDf = qrows.flatMap { case (qid, ts) => ts.distinct.map(t => (qid, t, idf(t))) }
-      .toDF("query_id", "token", "idf")
-
-    // Same arithmetic order (and the same HALF_UP law — Quantize is
-    // the single definition) as Bm25ScoresExpr: ((idf·tf)·(k1+1)) /
-    // (tf + k1·((1−b) + (b·dl)/avgdl)) · 1e6.
-    val dln = lit(k1) * (lit(1.0 - b) + (lit(b) * col("dl")) / lit(avgdl))
-    val li = graft.functions.Quantize.quantize(
-      col("idf") * col("tf") * lit(k1 + 1.0) / (col("tf") + dln), 6)
-    val scored = spark.table(s"${prefix}_postings")
-      .where(col("token").isInCollection(allTerms))
-      .join(broadcast(termsDf), "token")
-      .select(col("query_id"), col("doc_id"), li.as("li"))
-      .groupBy("query_id", "doc_id").agg(sum(col("li")).as("s"))
-      .where(col("s") > 0L)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("s").desc, col("doc_id").asc)
-    // cache(): topPos feeds THREE branches (the union's positive arm,
-    // the pad anti-join, and the counts aggregate) — left lazy, the
-    // postings probe + aggregate + WindowGroupLimit subtree executes
-    // once per branch (ReusedExchange recovers the shuffles but not
-    // the post-shuffle window work). The frame is ≤ |Q|·k rows.
-    // QUERY-SCOPED state, same policy as minhashNearDupPairs'
-    // candidate cache (Dedup.scala): long-lived sessions should
-    // spark.catalog.clearCache() between sweeps, as Bench does.
-    val topPos = scored
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= k)
-      .cache()
-
-    // Zero-score padding: candidates are the 2k lowest doc ids — at
-    // most k of them can be occupied by this query's positive top-k,
-    // so at least k remain for the by-id zero tail. All frames here
-    // are ≤ 2k·|Q| rows.
-    val counts = topPos.groupBy("query_id").agg(count(lit(1)).as("c"))
-    val qids = qrows.map(_._1).toDF("query_id")
-    val lowIds = spark.table(s"${prefix}_doclen")
-      .select(col("doc_id")).orderBy(col("doc_id").asc).limit(2 * k)
-    val wp = Window.partitionBy("query_id").orderBy(col("doc_id").asc)
-    val pads = qids.crossJoin(broadcast(lowIds))
-      .join(topPos.select(col("query_id"), col("doc_id")),
-        Seq("query_id", "doc_id"), "left_anti")
-      .join(counts, Seq("query_id"), "left").na.fill(0L, Seq("c"))
-      .withColumn("pr", row_number().over(wp).cast("long"))
-      .where(col("c") + col("pr") <= k)
-      .select(col("query_id"), col("doc_id"),
-        (col("c") + col("pr")).as("rnk"), lit(0L).as("s"))
-    topPos.select(col("query_id"), col("doc_id"), col("rnk"), col("s"))
-      .union(pads)
-      .select(col("query_id"), col("doc_id"), col("rnk"),
-        graft.functions.Quantize.dequantize(col("s"), 6).as("score"))
-  }
 
   /** The large-|Q| regime of [[bm25TopKFromIndex]]: queries stay a
     * DataFrame end-to-end — NOTHING is collected to the driver, so
     * millions of queries (hard-negative mining over a whole training
     * set) are one distributed plan instead of a driver-built literal.
     * Result-identical to [[bm25TopKFromIndex]] on the same queries:
-    * same scoring law, same per-term HALF_UP micro-unit quantization
-    * ([[graft.functions.Quantize]]), same per-query term dedupe, same
-    * tie and zero-padding rules.
+    * same per-query term dedupe, and the same scoring, tie and
+    * zero-padding body ([[probeBm25Index]]).
     *
     * Plan shape: explode+distinct the query terms, join the persisted
     * `_df` table for idf (token-keyed — absent tokens have no
@@ -315,10 +260,10 @@ object Search {
     * single task — and AQE's skew-join split cannot help, because the
     * bucketed postings side is unsplittable. Measured on the 31-token
     * corpus: the whole sf0.1 bulk probe runs at ~1 core. `saltChunks
-    * > 1` routes the join through
-    * [[ExplosiveJoin.explosiveBucketJoin]] — postings hash into one
-    * of `saltChunks` sub-keys by doc_id, query terms replicate over
-    * all of them, every (query-term, posting) pair still meets
+    * > 1` routes the join through [[ExplosiveJoin.saltedJoin]] with a
+    * global salt of that width — postings hash into one of
+    * `saltChunks` sub-keys by doc_id, query terms replicate over all
+    * of them, every (query-term, posting) pair still meets
     * exactly once — spreading each hot term over `saltChunks` tasks
     * at the price of re-shuffling the postings (the bucket layout no
     * longer covers the salted key) and ×chunks query-term fan-out.
@@ -331,7 +276,10 @@ object Search {
     * `maxKeyRows = max_t df(t)·qf(t)` (one small sizing aggregate
     * over the deduped query terms joined to the `_df` stats — ~the
     * cost of the query-side explode, never the postings join), via
-    * [[autoSaltChunks]]. Corpora whose heaviest key fits one task's
+    * [[ExplosiveJoin.crossJoinPlanFromSizes]] (the
+    * [[ExplosiveJoin.saltChunksFor]] law, salting only the measured-hot
+    * terms, through the same [[ExplosiveJoin.saltedJoin]]). Corpora
+    * whose heaviest key fits one task's
     * sort budget resolve to chunks = 1 — the gate corpora and any
     * Zipfian-truncated vocabulary keep the exact bucket-riding plan
     * with no caller intervention — while a head-term-dominated join
@@ -346,112 +294,115 @@ object Search {
     * query-scoped `cache()` on its top-k subtree (≤ |Q|·k rows);
     * long-lived sessions sweeping many query sets should
     * `spark.catalog.clearCache()` between sweeps. */
-  /** Salt width for a join whose heaviest key produces `maxKeyRows`
-    * pairs: enough chunks that no task sorts more than
-    * `targetPerTask` pair rows from one key, clamped to [1, 64].
-    * 4M rows ≈ 100 MB of (query, doc, contribution) pairs — inside
-    * one task's in-memory sort budget at the engine's executor
-    * sizing; 64 caps the ×chunks probe-side fan-out at the point
-    * where per-chunk overhead would rival the skew it removes. Pure
-    * (spec-pinned law); [[bm25TopKFromIndexBulk]] feeds it the
-    * measured max df·qf. Since round 11 this IS
-    * [[ExplosiveJoin.saltChunksFor]] — the law was promoted to the
-    * engine-wide explosive-join default; this alias keeps the
-    * BM25-side name. */
-  def autoSaltChunks(maxKeyRows: Long,
-                     targetPerTask: Long = ExplosiveJoin.DefaultTargetPerTask): Int =
-    ExplosiveJoin.saltChunksFor(maxKeyRows, targetPerTask)
-
   def bm25TopKFromIndexBulk(spark: org.apache.spark.sql.SparkSession,
                             prefix: String, queries: DataFrame, k: Int,
                             k1: Double = 1.2, b: Double = 0.75,
                             maxDfFrac: Double = 1.0,
-                            saltChunks: Int = 0): DataFrame = {
+                            saltChunks: Int = 0): DataFrame =
+    probeBm25Index(spark, prefix, k, k1, b) { nDocs =>
+      // distinct PER QUERY — the same duplicate-term contract as the
+      // driver-path termsDf and Bm25ScoresExpr.
+      val qterms = queries
+        .select(col("query_id").cast("long").as("query_id"),
+          explode(col("terms")).as("token"))
+        .distinct()
+      // idf from the persisted df table: (nDocs - df + 0.5) stays in
+      // the exact long domain until the +0.5, matching the driver
+      // path's math.log(1.0 + (nDocs - df + 0.5) / (df + 0.5))
+      // bit-for-bit. The df cap filters the vocab-sized _df side
+      // BEFORE the fan-out join (only added when active, keeping the
+      // default plan exact).
+      val dfTable0 = spark.table(s"${prefix}_df")
+      val dfTable = if (maxDfFrac < 1.0)
+        dfTable0.where(col("df") <= lit(math.floor(maxDfFrac * nDocs).toLong))
+      else dfTable0
+      val qidf = qterms.join(dfTable, "token")
+        .select(col("query_id"), col("token"),
+          log(lit(1.0) + (lit(nDocs) - col("df") + lit(0.5)) /
+            (col("df") + lit(0.5))).as("idf"))
+      val postings = spark.table(s"${prefix}_postings")
+      val plan = if (saltChunks == 0) {
+        // AUTO: one sizing aggregate over PERSISTED stats — per-token
+        // join volume qf·df, qf from the deduped query terms, df from
+        // the (capped) index df table; dropped-by-cap terms produce no
+        // join rows, so they are excluded from sizing too. The
+        // postings corpus is never re-scanned for sizing — this is the
+        // derive-from-persisted-stats path ExplosiveJoin.saltedJoin
+        // exists for. Factors capped at 2^31 before the product: the
+        // chunk decision saturates (64) at 256M rows anyway, and an
+        // uncapped qf·df can exceed Long.MaxValue at extreme |Q|·N,
+        // wrapping negative and silently disabling the salt exactly
+        // where it matters most. Balance-aware + SELECTIVE since r12
+        // (ExplosiveJoin.planFromPerKey): only measured-hot head terms
+        // fan out; the long tail of informative terms pays zero
+        // probe-side replication. MEMOIZED per (prefix, queries plan,
+        // cap): repeated plan constructions of the same probe (Bench
+        // reps, ScaleProbe repeats) size once per session — the sizing
+        // job itself costs ~0.5 s/call at sf0.1 (r10 judge). No
+        // unconditional skip when maxDfFrac < 1: capping df bounds one
+        // FACTOR, not the product — a capped head term with
+        // bulk-regime qf (≈|Q|) still yields df·qf ≫ one task's
+        // budget, so the measurement stays.
+        ExplosiveJoin.crossJoinPlanFromSizes(
+          ("bm25bulk", prefix, maxDfFrac,
+            queries.queryExecution.analyzed.canonicalized),
+          qterms.groupBy("token").agg(count(lit(1)).as("qf"))
+            .join(dfTable.select(col("token"), col("df")), "token"),
+          Seq("token"), "qf", "df", spark.sparkContext.defaultParallelism)
+      } else ExplosiveJoin.SaltPlan(saltChunks, Map.empty)
+      val joined = if (plan.chunks > 1)
+        ExplosiveJoin.saltedJoin(qidf, postings,
+          keys = Seq("token"), buildHashCol = "doc_id", plan = plan)
+      else postings.join(qidf, "token")
+      Some((joined, queries.select(col("query_id").cast("long").as("query_id"))
+        .distinct()))
+    }
+
+  /** The body both index probes share: `termsJoin(nDocs)` (not called
+    * on an empty index) gives the query terms joined to the postings —
+    * rows with `query_id`, `doc_id`, `idf`, `tf`, `dl` — and the query
+    * ids to pad, or None for an empty query set. The per-term
+    * contribution keeps Bm25ScoresExpr's arithmetic order and HALF_UP
+    * law (Quantize is the single definition): ((idf·tf)·(k1+1)) /
+    * (tf + k1·((1−b) + (b·dl)/avgdl)) · 1e6. */
+  private def probeBm25Index(spark: org.apache.spark.sql.SparkSession,
+                             prefix: String, k: Int, k1: Double, b: Double)(
+      termsJoin: Long => Option[(DataFrame, DataFrame)]): DataFrame = {
     val statsRow = spark.table(s"${prefix}_stats").first()
     val nDocs = statsRow.getLong(0)
-    if (nDocs == 0L)
+    val probe = if (nDocs == 0L) None else termsJoin(nDocs)
+    if (probe.isEmpty)
       return spark.range(0).select(col("id").as("query_id"),
         col("id").as("doc_id"), col("id").as("rnk"),
         lit(0.0).as("score"))
+    val (joined, qids) = probe.get
     val avgdl = statsRow.getLong(1).toDouble / nDocs
-
-    // distinct PER QUERY — the same duplicate-term contract as the
-    // driver-path termsDf and Bm25ScoresExpr.
-    val qterms = queries
-      .select(col("query_id").cast("long").as("query_id"),
-        explode(col("terms")).as("token"))
-      .distinct()
-    // idf from the persisted df table: (nDocs - df + 0.5) stays in the
-    // exact long domain until the +0.5, matching the driver path's
-    // math.log(1.0 + (nDocs - df + 0.5) / (df + 0.5)) bit-for-bit.
-    // The df cap filters the vocab-sized _df side BEFORE the fan-out
-    // join (only added when active, keeping the default plan exact).
-    val dfTable0 = spark.table(s"${prefix}_df")
-    val dfTable = if (maxDfFrac < 1.0)
-      dfTable0.where(col("df") <= lit(math.floor(maxDfFrac * nDocs).toLong))
-    else dfTable0
-    val qidf = qterms.join(dfTable, "token")
-      .select(col("query_id"), col("token"),
-        log(lit(1.0) + (lit(nDocs) - col("df") + lit(0.5)) /
-          (col("df") + lit(0.5))).as("idf"))
-
     val dln = lit(k1) * (lit(1.0 - b) + (lit(b) * col("dl")) / lit(avgdl))
     val li = graft.functions.Quantize.quantize(
       col("idf") * col("tf") * lit(k1 + 1.0) / (col("tf") + dln), 6)
-    val postings = spark.table(s"${prefix}_postings")
-    val plan = if (saltChunks == 0) {
-      // AUTO: one sizing aggregate over PERSISTED stats — per-token
-      // join volume qf·df, qf from the deduped query terms, df from
-      // the (capped) index df table; dropped-by-cap terms produce no
-      // join rows, so they are excluded from sizing too. The postings
-      // corpus is never re-scanned for sizing — this is the
-      // derive-from-persisted-stats path ExplosiveJoin.saltedJoin
-      // exists for. Factors capped at 2^31 before the product: the
-      // chunk decision saturates (64) at 256M rows anyway, and an
-      // uncapped qf·df can exceed Long.MaxValue at extreme |Q|·N,
-      // wrapping negative and silently disabling the salt exactly
-      // where it matters most. Balance-aware + SELECTIVE since r12
-      // (ExplosiveJoin.planFromPerKey): only measured-hot head terms
-      // fan out; the long tail of informative terms pays zero
-      // probe-side replication. MEMOIZED per (prefix, queries plan,
-      // cap): repeated plan constructions of the same probe (Bench
-      // reps, ScaleProbe repeats) size once per session — the sizing
-      // job itself costs ~0.5 s/call at sf0.1 (r10 judge). No
-      // unconditional skip when maxDfFrac < 1: capping df bounds one
-      // FACTOR, not the product — a capped head term with bulk-regime
-      // qf (≈|Q|) still yields df·qf ≫ one task's budget, so the
-      // measurement stays.
-      ExplosiveJoin.crossJoinPlanFromSizes(
-        ("bm25bulk", prefix, maxDfFrac,
-          queries.queryExecution.analyzed.canonicalized),
-        qterms.groupBy("token").agg(count(lit(1)).as("qf"))
-          .join(dfTable.select(col("token"), col("df")), "token"),
-        Seq("token"), "qf", "df", spark.sparkContext.defaultParallelism)
-    } else ExplosiveJoin.SaltPlan(saltChunks, Map.empty)
-    val joined = if (plan.chunks > 1)
-      ExplosiveJoin.saltedJoin(qidf, postings,
-        keys = Seq("token"), buildHashCol = "doc_id", plan = plan)
-    else postings.join(qidf, "token")
     val scored = joined
       .select(col("query_id"), col("doc_id"), li.as("li"))
       .groupBy("query_id", "doc_id").agg(sum(col("li")).as("s"))
       .where(col("s") > 0L)
     val w = Window.partitionBy("query_id")
       .orderBy(col("s").desc, col("doc_id").asc)
-    // cache(): same three-branch reuse as the driver path — without
-    // it the dominant postings join re-executes per branch, tripling
-    // the probe cost at bulk |Q|. ≤ |Q|·k rows; query-scoped (see
-    // bm25TopKFromIndex).
+    // cache(): topPos feeds THREE branches (the union's positive arm,
+    // the pad anti-join, and the counts aggregate) — left lazy, the
+    // postings probe + aggregate + WindowGroupLimit subtree executes
+    // once per branch (ReusedExchange recovers the shuffles but not
+    // the post-shuffle window work; at bulk |Q| that triples the
+    // dominant postings join). The frame is ≤ |Q|·k rows; query-scoped
+    // (see the CACHE NOTE of bm25TopKFromIndex).
     val topPos = scored
       .withColumn("rnk", row_number().over(w).cast("long"))
       .where(col("rnk") <= k)
       .cache()
 
-    // Zero-score padding, all-DataFrame: same 2k-lowest-ids law as
-    // the driver path, with the query ids taken from the frame.
+    // Zero-score padding: candidates are the 2k lowest doc ids — at
+    // most k of them can be occupied by this query's positive top-k,
+    // so at least k remain for the by-id zero tail. All frames here
+    // are ≤ 2k·|Q| rows.
     val counts = topPos.groupBy("query_id").agg(count(lit(1)).as("c"))
-    val qids = queries.select(col("query_id").cast("long").as("query_id"))
-      .distinct()
     val lowIds = spark.table(s"${prefix}_doclen")
       .select(col("doc_id")).orderBy(col("doc_id").asc).limit(2 * k)
     val wp = Window.partitionBy("query_id").orderBy(col("doc_id").asc)

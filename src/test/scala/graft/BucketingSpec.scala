@@ -565,6 +565,120 @@ class BucketingSpec extends AnyFunSuite {
       graft.sources.Sinks.dropTableAndLocation(spark, _))
   }
 
+  /** Seeded random docs of `n` words over a 20-word vocabulary. */
+  private def docGen(seed: Int): Int => String = {
+    val rnd = new scala.util.Random(seed)
+    val vocab = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
+      "eta", "theta", "iota", "kappa", "lambda", "mu", "nu", "xi", "omicron",
+      "pi", "rho", "sigma", "tau", "upsilon")
+    n => Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+  }
+
+  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  test("compactMinHashIndex refuses a bucket count other than the table's, naming both counts") {
+    import graft.operators.{Dedup, IndexLifecycle}
+    import spark.implicits._
+    val doc = docGen(23)
+    val day1 = (0L until 40L).map(i => (i, doc(50)))
+    val t = "spec_mh_wrong_buckets"
+    Seq(t, s"${t}_hist", s"${t}_statlog", s"${t}_full")
+      .foreach(graft.sources.Sinks.dropTableAndLocation(spark, _))
+    val d1 = day1.toDF("doc_id", "text")
+    val dm = Seq((500L, day1(3)._2)).toDF("doc_id", "text")
+    val dp = Seq((600L, day1(3)._2), (601L, day1(9)._2)).toDF("doc_id", "text")
+    // an 8-bucket index, one-doc delta, then a compaction told 64: the
+    // touched ids would be computed mod 64 and matched against file
+    // names carrying mod-8 ids
+    IndexLifecycle.writeGrowableMinHashIndex(d1, "doc_id", "text", t, 8)
+    IndexLifecycle.appendToMinHashIndex(dm, "doc_id", "text", t)
+    val ex = intercept[IllegalArgumentException] {
+      IndexLifecycle.compactMinHashIndex(spark, t, 64)
+    }
+    assert(ex.getMessage.contains("64") && ex.getMessage.contains("8 buckets"),
+      ex.getMessage)
+    // refused before any write: the appended generation is intact and
+    // still probes like a full rewrite
+    assert(spark.catalog.tableExists(s"${t}_statlog"), "statlog kept")
+    assert(IndexLifecycle.minhashIndexFsck(spark, t))
+    val baseAll = d1.unionByName(dm)
+    Dedup.writeMinHashIndex(baseAll, "doc_id", "text", s"${t}_full", 8)
+    val full = pairSet(Dedup.incrementalNearDupPairs(dp, "doc_id", "text",
+      spark.table(s"${t}_full"), baseAll, 0.5))
+    assert(full.exists(_._1 == 600L), "exact-copy probe pair must surface")
+    IndexLifecycle.compactMinHashIndex(spark, t, 8)
+    assert(pairSet(IndexLifecycle.probeStandingMinHashIndex(
+      dp, "doc_id", "text", t, baseAll, 0.5)) == full)
+    Seq(t, s"${t}_hist", s"${t}_full").foreach(
+      graft.sources.Sinks.dropTableAndLocation(spark, _))
+  }
+
+  test("repair path: a crashed append fails fsck (one query); compaction restores it and equals the full rewrite") {
+    import graft.operators.{Dedup, IndexLifecycle}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val doc = docGen(29)
+    val day1 = (0L until 60L).map(i => (i, doc(50)))
+    val t = "spec_mh_repair"
+    val buckets = 64
+    Seq(t, s"${t}_hist", s"${t}_statlog", s"${t}_full")
+      .foreach(graft.sources.Sinks.dropTableAndLocation(spark, _))
+    val d1 = day1.toDF("doc_id", "text")
+    val logged = Seq((500L, day1(7)._2)).toDF("doc_id", "text")
+    val crashed = Seq((510L, day1(11)._2)).toDF("doc_id", "text")
+    val dp = Seq((600L, day1(7)._2), (601L, day1(11)._2), (602L, doc(50)))
+      .toDF("doc_id", "text")
+    IndexLifecycle.writeGrowableMinHashIndex(d1, "doc_id", "text", t, buckets)
+    IndexLifecycle.appendToMinHashIndex(logged, "doc_id", "text", t)
+    // the crashed append: its band rows reached the index, its statlog
+    // rows never did (appendToMinHashIndex writes rows first)
+    graft.sources.Sinks.appendBucketed(
+      Dedup.minhashIndexFrame(crashed, "doc_id", "text"), t)
+    val sc = spark.sparkContext
+    val group = "fsck-job-pin"
+    // the SQL execution id of every job the check starts: AQE submits
+    // each shuffle stage as a job of its own, all under the execution
+    // id of the one query
+    val queries = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => queries.add(String.valueOf(
+            p.getProperty("spark.sql.execution.id"))))
+    }
+    sc.addSparkListener(listener)
+    val ok = try {
+      sc.setJobGroup(group, "minhashIndexFsck")
+      try IndexLifecycle.minhashIndexFsck(spark, t) finally sc.clearJobGroup()
+    } finally {
+      org.apache.spark.graftbridge.ListenerBusDrain.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(!ok, "fsck must flag rows the statlog never logged")
+    assert(queries.size == 1, s"fsck ran ${queries.size} queries, expected 1: $queries")
+    IndexLifecycle.compactMinHashIndex(spark, t, buckets)
+    assert(IndexLifecycle.minhashIndexFsck(spark, t), "fsck after repair")
+    assert(!spark.catalog.tableExists(s"${t}_statlog"), "statlog reset")
+    Seq(s"${t}_cnew", s"${t}_bak", s"${t}_hist_cnew", s"${t}_hist_bak")
+      .foreach(n => assert(!spark.catalog.tableExists(n), s"swap debris $n"))
+    val baseAll = d1.unionByName(logged).unionByName(crashed)
+    Dedup.writeMinHashIndex(baseAll, "doc_id", "text", s"${t}_full", buckets)
+    val full = pairSet(Dedup.incrementalNearDupPairs(dp, "doc_id", "text",
+      spark.table(s"${t}_full"), baseAll, 0.5))
+    val got = pairSet(IndexLifecycle.probeStandingMinHashIndex(
+      dp, "doc_id", "text", t, baseAll, 0.5))
+    assert(got == full,
+      s"missing=${(full -- got).take(5)} extra=${(got -- full).take(5)}")
+    assert(got.exists(_._1 == 601L), "the crashed append's doc must be found")
+    // the repaired rows carry true per-row bsz again
+    assert(pairSet(Dedup.incrementalNearDupPairs(dp, "doc_id", "text",
+      spark.table(t), baseAll, 0.5)) == full)
+    Seq(t, s"${t}_hist", s"${t}_full").foreach(
+      graft.sources.Sinks.dropTableAndLocation(spark, _))
+  }
+
   test("interrupted carry (crash after the swap renames) is finished by recoverSwappedTable") {
     import graft.sources.Sinks
     import spark.implicits._

@@ -2852,18 +2852,18 @@ class PipelineOpsSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
-  test("autoSaltChunks: ceil-div sizing clamped to [1, 64]") {
-    import graft.operators.Search.autoSaltChunks
-    assert(autoSaltChunks(0L) == 1)            // empty join still plans
-    assert(autoSaltChunks(1L) == 1)
-    assert(autoSaltChunks(4000000L) == 1)      // exactly one task's budget
-    assert(autoSaltChunks(4000001L) == 2)      // first row past it salts
-    assert(autoSaltChunks(40000000L) == 10)
-    assert(autoSaltChunks(10000000000L) == 64) // cap: fan-out cost floor
+  test("saltChunksFor: ceil-div sizing clamped to [1, 64]") {
+    import graft.operators.ExplosiveJoin.saltChunksFor
+    assert(saltChunksFor(0L) == 1)            // empty join still plans
+    assert(saltChunksFor(1L) == 1)
+    assert(saltChunksFor(4000000L) == 1)      // exactly one task's budget
+    assert(saltChunksFor(4000001L) == 2)      // first row past it salts
+    assert(saltChunksFor(40000000L) == 10)
+    assert(saltChunksFor(10000000000L) == 64) // cap: fan-out cost floor
     // the sf0.1 bulk regime that motivated the knob: max df·qf ≈
     // (N/2)² at N = 50k docs → 6.25e8 rows → the 64-chunk cap
-    assert(autoSaltChunks(625000000L) == 64)
-    assert(autoSaltChunks(7L, targetPerTask = 3L) == 3)
+    assert(saltChunksFor(625000000L) == 64)
+    assert(saltChunksFor(7L, targetPerTask = 3L) == 3)
   }
 
   test("evalBinary: single-class frame yields null AUC, never NaN/Infinity (r9 defect pin)") {

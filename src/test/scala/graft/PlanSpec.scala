@@ -346,7 +346,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("explosiveBucketJoin AUTO: measured salt width, identical rows at every width") {
     import graft.operators.ExplosiveJoin
-    ExplosiveJoin.clearSizingMemo()
+    ExplosiveJoin.invalidateSizing()
     // Hot key 1: 200 x 200 = 40k pairs; tail keys 1 x 1.
     val probe = spark.range(400).select(
       when(col("id") < 200, lit(1L)).otherwise(col("id")).as("bk"),
@@ -387,7 +387,7 @@ class PlanSpec extends AnyFunSuite {
     assert(ExplosiveJoin.memoizedChunks(("spec-memo-pin", 1)) {
       fail("memoized sizing must not recompute"); 0
     } == 7)
-    ExplosiveJoin.clearSizingMemo()
+    ExplosiveJoin.invalidateSizing()
   }
 
   test("ExplosiveJoin.selfJoinPlanFromSizes == autoSaltPlan on the same self-join") {
@@ -396,7 +396,7 @@ class PlanSpec extends AnyFunSuite {
     // aggregation would — it is the 100 TB replacement for it, not an
     // approximation. Hot key: 300 rows (90k ordered pairs), tail 1s.
     import graft.operators.ExplosiveJoin
-    ExplosiveJoin.clearSizingMemo()
+    ExplosiveJoin.invalidateSizing()
     val side = spark.range(500).select(
       when(col("id") < 300, lit(7L)).otherwise(col("id")).as("bk"),
       col("id").as("payload"))
@@ -419,7 +419,7 @@ class PlanSpec extends AnyFunSuite {
     val want = a.join(b, Seq("bk"))
       .agg(count(lit(1)), sum(col("pa") + col("pb"))).collect()(0)
     assert(got == want, s"got=$got want=$want")
-    ExplosiveJoin.clearSizingMemo()
+    ExplosiveJoin.invalidateSizing()
   }
 
   test("ExplosiveJoin.crossJoinPlanFromSizes == autoSaltPlan on the same cross join") {
@@ -430,7 +430,7 @@ class PlanSpec extends AnyFunSuite {
     // × 400 build = 24k pairs; key 6 is probe-only (no pairs — must
     // not size); tail 1×1.
     import graft.operators.ExplosiveJoin
-    ExplosiveJoin.clearSizingMemo()
+    ExplosiveJoin.invalidateSizing()
     val probe = spark.range(100).select(
       when(col("id") < 60, lit(5L))
         .otherwise(when(col("id") < 80, lit(6L)).otherwise(col("id"))).as("bk"),
@@ -456,7 +456,7 @@ class PlanSpec extends AnyFunSuite {
     val want = probe.join(build, Seq("bk"))
       .agg(count(lit(1)), sum(col("pa") + col("pb"))).collect()(0)
     assert(got == want, s"got=$got want=$want")
-    ExplosiveJoin.clearSizingMemo()
+    ExplosiveJoin.invalidateSizing()
   }
   test("minhashIndexFrame: index rows reach the bucketed write exchange-free") {
     import graft.operators.Dedup
