@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-round benchmark: runs every catalog query on SPARK_GRAFT_SF_DIR
   * and prints one JSON line. Results are forced through the noop sink —
@@ -45,7 +45,7 @@ object Bench {
     val RddPathReps = 6
     def repsFor(name: String): Int =
       if (name.startsWith("pmr_") || name == "ps_rank_stats") RddPathReps else Reps
-    // Per-gate executor CPU task-time next to wall (TaskTimeMeter):
+    // Per-gate executor CPU task-time next to wall (RunMetrics):
     // wall on a shared box has a multi-second noise floor and in r12
     // inflated four un-flagged gates 2.4-6.5x; CPU time does not
     // accrue while descheduled, so on frozen code it is the
@@ -53,71 +53,42 @@ object Bench {
     // TASK-time A/B divergence (a real plan/code difference), and a
     // separate `contended` list records gates whose wall diverged
     // while task-time agreed — box noise, ignore their wall readings.
-    val meter = new TaskTimeMeter(spark.sparkContext)
-    // Job counter for the side-effect test below (r15): a gate whose
-    // CONSTRUCTION fires Spark jobs (index writes, driver collects,
-    // sizing probes) is "eager" — its fn() is part of the measured
-    // operator and must re-run every rep, exactly as before. A gate
-    // whose construction fires no job is a pure plan build; reps exist
-    // to warm EXECUTION, not to re-pay Column-tree construction
-    // (measured 0.11-0.14 s per rep on the sub-second tail — the
-    // floor probe's decomposition, OPTIMIZATION_r15.md §7), so reps
-    // 2..r (and pass B) reuse the rep-1 DataFrame object. Timed
-    // semantics per rep are otherwise unchanged: every rep is a FULL
-    // noop execution (the write re-plans and re-runs the whole query;
-    // caches still clear between passes). The old-methodology record
-    // on identical engine code is committed next to the new one
-    // (plans/r15/bench_r15_mid.json) so the delta is attributable.
-    val jobCount = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet(); ()
-      }
-    })
-    def drain(): Unit =
-      org.apache.spark.graftbridge.ListenerBusDrain.drain(spark.sparkContext)
-    def noopOnce(name: String, df: org.apache.spark.sql.DataFrame): (Double, Double) = {
-      val c0 = meter.snapshotSec()
+    val metrics = new graft.obs.RunMetrics(spark.sparkContext)
+    def taskSec(): Double = metrics.snapshot().taskCpuSec
+    def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+    def once(name: String)(run: => Unit): (Double, Double) = {
+      val c0 = taskSec()
       val t0 = System.nanoTime()
-      try df.write.format("noop").mode("overwrite").save()
+      try run
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
       }
-      val wall = (System.nanoTime() - t0) / 1e9
-      (wall, meter.snapshotSec() - c0)
-    }
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
-      val c0 = meter.snapshotSec()
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      val wall = (System.nanoTime() - t0) / 1e9
-      (wall, meter.snapshotSec() - c0)
+      ((System.nanoTime() - t0) / 1e9, taskSec() - c0)
     }
     // Rep 1 (identical timing to the old methodology: fn + noop in the
-    // timed region) additionally classifies the gate: if fn() fired no
-    // job, the returned frame is reusable for the remaining reps.
-    def onceDetect(name: String,
-                   fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Double, Option[org.apache.spark.sql.DataFrame]) = {
-      val c0 = meter.snapshotSec()
-      val t0 = System.nanoTime()
-      var reusable: Option[org.apache.spark.sql.DataFrame] = None
-      try {
-        drain()
-        val j0 = jobCount.get
+    // timed region) additionally classifies the gate (r15). A gate whose
+    // CONSTRUCTION fires Spark jobs (index writes, driver collects,
+    // sizing probes) is "eager": its fn() is part of the measured
+    // operator and must re-run every rep. A gate whose construction
+    // fires no job is a pure plan build; reps exist to warm EXECUTION,
+    // not to re-pay Column-tree construction (measured 0.11-0.14 s per
+    // rep on the sub-second tail, OPTIMIZATION_r15.md §7), so reps 2..r
+    // (and pass B) reuse the rep-1 DataFrame object. Every rep is still
+    // a FULL noop execution (the write re-plans and re-runs the whole
+    // query; caches still clear between passes). The old-methodology
+    // record on identical engine code is committed next to the new one
+    // (plans/r15/bench_r15_mid.json) so the delta is attributable.
+    def onceDetect(name: String, fn: (SparkSession, String) => DataFrame)
+        : (Double, Double, Option[DataFrame]) = {
+      var reusable: Option[DataFrame] = None
+      val (wall, task) = once(name) {
+        val jobs0 = metrics.snapshot().jobs
         val df = fn(spark, sfDir)
-        drain()
-        if (jobCount.get == j0) reusable = Some(df)
-        df.write.format("noop").mode("overwrite").save()
-      } catch { case e: Throwable =>
-        reusable = None
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        val eager = metrics.snapshot().jobs != jobs0
+        noop(df)
+        if (!eager) reusable = Some(df)
       }
-      val wall = (System.nanoTime() - t0) / 1e9
-      (wall, meter.snapshotSec() - c0, reusable)
+      (wall, task, reusable)
     }
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     // Self-validating A/B: each query runs TWO back-to-back min-of-reps
@@ -138,10 +109,7 @@ object Bench {
     val results = ordered.map { case (n, f) =>
       val r = repsFor(n)
       val (w1, t1, reusable) = onceDetect(n, f)
-      def rep(): (Double, Double) = reusable match {
-        case Some(df) => noopOnce(n, df)
-        case None => once(n, f)
-      }
+      def rep(): (Double, Double) = once(n)(noop(reusable.getOrElse(f(spark, sfDir))))
       val a = (w1, t1) +: (2 to r).map(_ => rep())
       // Drop caches between passes and queries: operators cache
       // query-scoped frames (sigs, candidates) that a fresh cluster

@@ -111,16 +111,16 @@ object ClusterBench {
     // rehearsal now records the same contention-invariant executor-CPU
     // series as the single-JVM bench — the cross-check that
     // serialization + netty shuffle don't change a gate's CPU class.
-    val meter = new TaskTimeMeter(cluster.sparkContext)
+    val metrics = new graft.obs.RunMetrics(cluster.sparkContext)
     var failed = 0
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
       val got = digest(fn(cluster, sfDir))
       val t = (1 to 3).map { _ =>
-        val c0 = meter.snapshotSec()
+        val c0 = metrics.snapshot().taskCpuSec
         val t0 = System.nanoTime()
         fn(cluster, sfDir).write.format("noop").mode("overwrite").save()
-        ((System.nanoTime() - t0) / 1e9, meter.snapshotSec() - c0)
+        ((System.nanoTime() - t0) / 1e9, metrics.snapshot().taskCpuSec - c0)
       }.minBy(_._1)
       val ok = got == want(n)
       if (!ok) failed += 1

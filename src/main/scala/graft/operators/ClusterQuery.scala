@@ -74,7 +74,7 @@ final class ClusterQuery(spark: SparkSession) {
   /** E8/C7: never more partitions than tasks
     * (`maybetrimmedworkerpool`, /root/reference/src/clusterquery.jl:114-117). */
   def trimmedParallelism(len: Long): Int =
-    math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong, len)).toInt
+    PMapReduce.ranksFor(spark.sparkContext.defaultParallelism, len)
 }
 
 object ClusterQuery {

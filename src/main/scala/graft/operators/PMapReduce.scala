@@ -39,6 +39,15 @@ import graft.sources.ProductSplitSource
   */
 object PMapReduce {
 
+  /** The effective rank count `npEff`: `np` trimmed to the `len`
+    * elements, so no rank is empty (`E8`, reference
+    * src/clusterquery.jl:114-117), and at least 1 for an empty
+    * collection. `np < 1` is refused. */
+  private[graft] def ranksFor(np: Int, len: Long): Int = {
+    require(np >= 1, s"np must be >= 1, got $np")
+    math.max(1L, math.min(np.toLong, len)).toInt
+  }
+
   /** The rank-block law: ranks `1..npEff` as an RDD of
     * `min(npEff, defaultParallelism)` partitions. `parallelize` slices a
     * `Range` into contiguous ascending sub-ranges, so every partition
@@ -146,7 +155,7 @@ object PMapReduce {
                                          (f: ProductSlice => B, op: ReduceOp[B],
                                           init: Option[B] = None): B = {
     val len = ProductIndexMath.totalLength(iters)
-    val npEff = math.max(1L, math.min(np.toLong, len)).toInt
+    val npEff = ranksFor(np, len)
     if (npEff == 1) {
       foldInit(init, op, f(ProductIndexMath.productSplit(iters, 1, 1)))
     } else {
@@ -211,7 +220,7 @@ object PMapReduce {
                                             init: Option[B])
                                            (combine: (RDD[(Int, B)], Int) => B): B = {
     require(len > 0, "cannot reduce over an empty collection")
-    val npEff = math.max(1L, math.min(np.toLong, len)).toInt
+    val npEff = ranksFor(np, len)
     // Plain while loops, not Range.iterator.map(f).reduceLeft(op): the
     // per-rank fold may run 10^8+ iterations, and the iterator
     // chain (NumericRange[Long] boxing + two megamorphic apply sites)
@@ -245,7 +254,7 @@ object PMapReduce {
                             (f: IndexedSeq[Double] => T): Vector[T] = {
     val len = iters.map(_.numElems).min
     require(len > 0, "cannot map over an empty collection")
-    val npEff = math.max(1L, math.min(np.toLong, len)).toInt
+    val npEff = ranksFor(np, len)
     val g = zipped(iters, f)
     if (npEff == 1) (0L until len).iterator.map(g).toVector
     else rankBlocks(spark.sparkContext, npEff).flatMap { p =>
@@ -259,7 +268,7 @@ object PMapReduce {
   def pmapbatchProductSplit[T: ClassTag](spark: SparkSession, iters: IndexedSeq[PRange], np: Int)
                                         (f: ProductSlice => T): Vector[T] = {
     val len = ProductIndexMath.totalLength(iters)
-    val npEff = math.max(1L, math.min(np.toLong, len)).toInt
+    val npEff = ranksFor(np, len)
     if (npEff == 1) Vector(f(ProductIndexMath.productSplit(iters, 1, 1)))
     else ProductSplitSource.productSliceRDD(spark, iters, npEff)
       .map { case (_, slice) => f(slice) }

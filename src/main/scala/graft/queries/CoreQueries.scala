@@ -33,7 +33,7 @@ object CoreQueries {
     // S2: ProductSection window (1-based global indices 5..11 of (1:5,2:4,1:3)).
     "ps_section" -> ((s, _) =>
       ProductSplitSource.sectionDF(s,
-        IndexedSeq(PRange(1L, 5L), PRange(2L, 4L), PRange(1L, 3L)), 5L, 11L, names3, np = 2)),
+        IndexedSeq(PRange(1L, 5L), PRange(2L, 4L), PRange(1L, 3L)), 5L, 11L, names3)),
 
     // S4: zipped ranges (1:10) zip (2:2:20), np = 4.
     "ps_zip" -> ((s, _) =>

@@ -38,14 +38,12 @@ final case class ProductRow(id: Long, rank: Int, dims: Seq[Double])
   */
 object ProductSplitSource {
 
-  private def numParts(np: Int, len: Long): Int =
-    math.max(1L, math.min(np.toLong, len)).toInt
-
-  /** `spark.range` over `[0, len)` in at most `defaultParallelism`
-    * contiguous id blocks. */
-  private def idRange(spark: SparkSession, len: Long, np: Int): DataFrame =
-    spark.range(0, len, 1,
-      math.min(numParts(np, len), spark.sparkContext.defaultParallelism)).toDF("id")
+  /** `spark.range` over `[first, end)` in `min(np, defaultParallelism)`
+    * contiguous id blocks, trimmed so no block is empty. */
+  private def idRange(spark: SparkSession, first: Long, end: Long, np: Int): DataFrame = {
+    val parts = PMapReduce.ranksFor(np, end - first)
+    spark.range(first, end, 1, math.min(parts, spark.sparkContext.defaultParallelism)).toDF("id")
+  }
 
   /** True integral division (SQL `div`). The Column `/` operator is
     * DOUBLE division — exact only below 2^53, while products here can
@@ -94,21 +92,20 @@ object ProductSplitSource {
   def productDF(spark: SparkSession, iters: IndexedSeq[PRange], np: Int,
                 names: Seq[String] = Nil): DataFrame = {
     val len = ProductIndexMath.totalLength(iters)
-    withDecoded(idRange(spark, len, np), iters, names)
+    withDecoded(idRange(spark, 0, len, np), iters, names)
       .withColumn("rank", rankColumn(len, np, col("id")))
   }
 
   /** Arbitrary window of the product by 1-based inclusive global indices
     * (`ProductSection`, /root/reference/src/productsplit.jl:89-100).
-    * Backed by a pruned range scan — only the window is generated. */
+    * Backed by a pruned range scan — only the window is generated, in
+    * at most `defaultParallelism` contiguous id blocks. */
   def sectionDF(spark: SparkSession, iters: IndexedSeq[PRange],
-                firstInd1: Long, lastInd1: Long, names: Seq[String] = Nil,
-                np: Int = 1): DataFrame = {
+                firstInd1: Long, lastInd1: Long, names: Seq[String] = Nil): DataFrame = {
     val len = ProductIndexMath.totalLength(iters)
     require(firstInd1 >= 1 && lastInd1 <= len, "section bounds out of range")
-    val base = spark.range(firstInd1 - 1, lastInd1, 1,
-      numParts(np, lastInd1 - firstInd1 + 1)).toDF("id")
-    withDecoded(base, iters, names)
+    withDecoded(idRange(spark, firstInd1 - 1, lastInd1, spark.sparkContext.defaultParallelism),
+      iters, names)
   }
 
   /** Zip of equal-position elements across ranges, truncated to the
@@ -125,7 +122,7 @@ object ProductSplitSource {
         else lit(r.start) + col("id").cast("double") * lit(r.step)
       c.as(name)
     }
-    idRange(spark, len, np).select(col("id") +: cols: _*)
+    idRange(spark, 0, len, np).select(col("id") +: cols: _*)
       .withColumn("rank", rankColumn(len, np, col("id")))
   }
 
@@ -148,7 +145,7 @@ object ProductSplitSource {
     * `min(np, L)` so no rank is empty (`E8`,
     * /root/reference/src/clusterquery.jl:114-117). */
   def productSliceRDD(spark: SparkSession, iters: IndexedSeq[PRange], np: Int): RDD[(Int, ProductSlice)] = {
-    val npEff = numParts(np, ProductIndexMath.totalLength(iters))
+    val npEff = PMapReduce.ranksFor(np, ProductIndexMath.totalLength(iters))
     PMapReduce.rankBlocks(spark.sparkContext, npEff)
       .map(p => (p, ProductIndexMath.productSplit(iters, npEff, p)))
   }
@@ -156,7 +153,7 @@ object ProductSplitSource {
   /** Zip-mode slices: `(rank, indices [drop, drop+take) into the zip)`. */
   def zipSliceRDD(spark: SparkSession, iters: IndexedSeq[PRange], np: Int): RDD[(Int, (Long, Long))] = {
     val len = iters.map(_.numElems).min
-    val npEff = numParts(np, len)
+    val npEff = PMapReduce.ranksFor(np, len)
     PMapReduce.rankBlocks(spark.sparkContext, npEff)
       .map { p => (p, ProductIndexMath.dropTake(len, npEff, p)) }
   }

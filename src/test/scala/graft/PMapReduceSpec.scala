@@ -229,6 +229,19 @@ class PMapReduceSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
     val df = ProductSplitSource.productDF(spark, IndexedSeq(PRange(1, 40), PRange(1, 30)), 25)
     assert(df.rdd.getNumPartitions <= sc.defaultParallelism)
+    val section = ProductSplitSource.sectionDF(spark, IndexedSeq(PRange(1, 40), PRange(1, 30)), 5, 1100)
+    assert(section.rdd.getNumPartitions <= sc.defaultParallelism)
+  }
+
+  test("np < 1 is refused by name: productDF, pmapreduce, pmapbatchProductSplit") {
+    val iters = IndexedSeq(PRange(1, 4), PRange(1, 3))
+    def refused(np: Int)(call: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](call)
+      assert(e.getMessage.contains(s"np must be >= 1, got $np"), e.getMessage)
+    }
+    for (np <- Seq(0, -1)) refused(np)(ProductSplitSource.productDF(spark, iters, np))
+    refused(0)(pmapreduce(spark, iters, 0)(v => v(0).toLong, ReduceOp.commutative[Long](_ + _)))
+    refused(0)(pmapbatchProductSplit(spark, iters, 0)(_.length))
   }
 
   test("BroadcastStack axis-union reduction on OffsetArrays (misctests_singleprocess.jl:55-63)") {
