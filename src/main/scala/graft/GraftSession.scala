@@ -82,12 +82,17 @@ object GraftSession {
       // such groups would need tens of millions of input rows in one
       // partition — far past the partition sizing — before the
       // fallback engages. SPARK_GRAFT_OBJ_AGG_FALLBACK overrides.
-      // Adversarial bound MEASURED (r15, `ScaleProbe objagg 65536
-      // 1000`): ONE task holding 64k collect_list groups of 1000
-      // longs each (the documented per-group cap) completes without
-      // OOM — the sort fallback engages and spills (2.7 GB memory /
-      // 0.36 GB disk spill recorded in SCALE.md), so the threshold is
-      // a latency/spill trade, not a correctness cliff. CONTRACT for
+      // Adversarial case MEASURED (r15, `ScaleProbe objagg 65536
+      // 1000`, local[32], 8 GB driver): ONE task holding 64k
+      // collect_list groups of 1000 longs each (the documented
+      // per-group cap) completed without OOM; the sort fallback
+      // engaged and spilled 2.7 GB from memory / 0.36 GB to disk at
+      // 59.6 s task CPU (SCALE.md). What was measured is spill and
+      // CPU, not the heap the groups held before the fallback: the
+      // object hash map is outside Spark's execution-memory accounting,
+      // so no task metric reports its peak. On that evidence the
+      // threshold is a latency/spill trade, not a correctness cliff,
+      // at that heap size. CONTRACT for
       // new operators: anything that plans an ObjectHashAggregate
       // through this session must bound per-group state (the existing
       // operators cap at maxDocsPerSpan / maxBucketSize <= 10^3); an

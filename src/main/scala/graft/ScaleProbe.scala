@@ -43,9 +43,14 @@ object ScaleProbe {
     * fallback-threshold adversarial memory bound (VERDICT r14 #8) —
     * ONE task holding `groups` collect_list groups of `perGroup` longs
     * each (the worst case the 64k sortBased.fallbackThreshold admits
-    * with the engine's cap-bounded buffers), reporting the task's peak
-    * execution memory, spill, and CPU so the headroom claim in
-    * GraftSession.scala is a measured number, not an estimate. */
+    * with the engine's cap-bounded buffers), reporting the task's
+    * spill and CPU so the headroom claim in GraftSession.scala is a
+    * measured number, not an estimate. No peak-memory figure: Spark's
+    * `ObjectAggregationIterator` keeps its groups as JVM objects in an
+    * `ObjectAggregationMap`, outside the execution-memory pool, and,
+    * unlike `TungstenAggregationIterator`, never calls
+    * `incPeakExecutionMemory`, so the task metric reads 0 at every
+    * size, past the fallback too. */
   private def objAggProbe(groups: Int, perGroup: Int): Unit = withSession { spark =>
     val metrics = new graft.obs.RunMetrics(spark.sparkContext)
     val s0 = metrics.snapshot()
@@ -62,7 +67,6 @@ object ScaleProbe {
     val d = metrics.snapshot() - s0
     println(f"SCALEPROBE objagg groups=$groups perGroup=$perGroup " +
       s"nGroups=${out.getLong(0)} maxLen=${out.getInt(1)} " +
-      f"peakExecMemMB=${d.peakExecutionMemory / 1048576.0}%.1f " +
       f"spillMemMB=${d.memorySpillBytes / 1048576.0}%.1f " +
       f"spillDiskMB=${d.diskSpillBytes / 1048576.0}%.1f " +
       f"cpu=${d.taskCpuSec}%.2f s wall=$wall%.2f s " +

@@ -13,7 +13,10 @@ trait ReduceOp[B] extends ((B, B) => B) with Serializable {
 }
 
 object ReduceOp {
-  private final case class Plain[B](f: (B, B) => B, commutative: Boolean) extends ReduceOp[B] {
+  /** An op built from a plain function. `private[graft]` so the rank
+    * fold can call `f`'s specialised `Function2` entry with a primitive
+    * accumulator (`PMapReduce`'s unboxed Long fold). */
+  private[graft] final case class Plain[B](f: (B, B) => B, commutative: Boolean) extends ReduceOp[B] {
     def apply(a: B, b: B): B = f(a, b)
   }
 

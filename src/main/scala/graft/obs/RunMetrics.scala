@@ -1,7 +1,5 @@
 package graft.obs
 
-import scala.collection.mutable
-
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
@@ -28,8 +26,6 @@ final class RunMetrics(sc: SparkContext) {
   private var shuffleWriteBytes, shuffleWriteRecords, shuffleReadBytes = 0L
   private var memorySpillBytes, diskSpillBytes = 0L
   private var stageRows = Vector.empty[StageRow]
-  // largest task peakExecutionMemory of each running stage attempt
-  private val runningPeak = mutable.Map.empty[(Int, Int), Long]
 
   sc.addSparkListener(new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -47,8 +43,6 @@ final class RunMetrics(sc: SparkContext) {
           shuffleReadBytes += m.shuffleReadMetrics.totalBytesRead
           memorySpillBytes += m.memoryBytesSpilled
           diskSpillBytes += m.diskBytesSpilled
-          val k = (e.stageId, e.stageAttemptId)
-          runningPeak(k) = math.max(runningPeak.getOrElse(k, 0L), m.peakExecutionMemory)
         }
       }
 
@@ -61,8 +55,7 @@ final class RunMetrics(sc: SparkContext) {
         val stageCpuNs =
           if (tm == null) 0L else tm.executorCpuTime + tm.executorDeserializeCpuTime
         stages += 1
-        stageRows :+= StageRow(si.stageId, si.name, si.numTasks, wallMs / 1e3,
-          stageCpuNs / 1e9, runningPeak.remove((si.stageId, si.attemptNumber())).getOrElse(0L))
+        stageRows :+= StageRow(si.stageId, si.name, si.numTasks, wallMs / 1e3, stageCpuNs / 1e9)
       }
   })
 
@@ -77,11 +70,9 @@ final class RunMetrics(sc: SparkContext) {
 }
 
 object RunMetrics {
-  /** One completed stage attempt: wall from submission to completion,
-    * task CPU as in [[Snapshot.taskCpuSec]], and its largest task
-    * `peakExecutionMemory`. */
-  final case class StageRow(id: Int, name: String, tasks: Int, wallSec: Double,
-                            cpuSec: Double, peakExecutionMemory: Long)
+  /** One completed stage attempt: wall from submission to completion
+    * and task CPU as in [[Snapshot.taskCpuSec]]. */
+  final case class StageRow(id: Int, name: String, tasks: Int, wallSec: Double, cpuSec: Double)
 
   /** Counter values at one instant; `later - earlier` is the window
     * between two snapshots, its `stageRows` the stages completed in it. */
@@ -91,9 +82,6 @@ object RunMetrics {
                             memorySpillBytes: Long, diskSpillBytes: Long,
                             stageRows: Vector[StageRow]) {
     def taskCpuSec: Double = (cpuNs + deserCpuNs) / 1e9
-    /** Largest task `peakExecutionMemory` of the completed stages. */
-    def peakExecutionMemory: Long =
-      stageRows.iterator.map(_.peakExecutionMemory).maxOption.getOrElse(0L)
 
     def -(earlier: Snapshot): Snapshot = Snapshot(
       jobs - earlier.jobs, stages - earlier.stages, tasks - earlier.tasks,

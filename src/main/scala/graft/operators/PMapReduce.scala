@@ -1,11 +1,13 @@
 package graft.operators
 
+import scala.collection.AbstractIterator
+import scala.collection.immutable.{AbstractSeq, ArraySeq}
 import scala.reflect.ClassTag
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import graft.functions.ReduceOp
-import graft.plans.{PRange, ProductIndexMath, ProductSlice}
+import graft.plans.{PRange, ProductIndexMath, ProductOdometer, ProductSlice}
 import graft.sources.ProductSplitSource
 
 /** The execution operators E1–E4: distributed map + rank-ordered reduce
@@ -23,7 +25,19 @@ import graft.sources.ProductSplitSource
   * Spark-first design: per-rank partial aggregation happens inside each
   * task (map-side combine ≙ the reference's per-worker serial
   * `mapreduce`, reference src/mapreduce.jl:104-124), one serial
-  * fold per rank over that rank's `dropTake` window. Commutative
+  * fold per rank over that rank's `dropTake` window.
+  *
+  * The rank fold boxes nothing of its own per element. Each rank walks
+  * its window with a [[Cursor]] whose element index is a primitive
+  * field; a zip element reaches `f` as one immutable lazy [[ZipPoint]],
+  * a product element through a [[ProductOdometer]] (one decode per
+  * rank, then carry-increments). When `B` is `Long` and `op` is a
+  * plain function ([[ReduceOp.Plain]]), the accumulator is a primitive
+  * and each step calls the function's specialised `Function2` entry
+  * (`apply$mcJJJ$sp`); an unspecialised function reaches the same
+  * result through Scala's boxing default. Every other op folds through
+  * `op.apply`. What is left per element is `f` itself: its argument
+  * and, for a primitive `B`, its boxed result. Commutative
   * ops then combine partials with `treeReduce` (the two-level
   * aggregation tree subsumes the reference's host-segmented reduction
   * tree, /root/reference/src/trees.jl:42-63). Non-commutative ops use
@@ -165,23 +179,100 @@ object PMapReduce {
     }
   }
 
-  /** Element `j` of the zip of `iters`, splatted into `f`. The element
-    * tuple is built in a primitive array (one allocation, no builders)
-    * — this runs once per element of potentially 10^8+. */
-  private def zipped[B](iters: IndexedSeq[PRange], f: IndexedSeq[Double] => B): Long => B = {
-    val rs = iters.toArray
-    j => {
-      val arr = new Array[Double](rs.length)
-      var k = 0
-      while (k < rs.length) { arr(k) = rs(k)(j); k += 1 }
-      f(scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))
+  /** One rank's walk over its elements in index order: `next()` is the
+    * element under the cursor, then the cursor steps to the following
+    * one. The element index is a primitive field, so the walk boxes no
+    * index. Mutable: opened per rank, used by one thread. */
+  private abstract class Cursor[B] {
+    def next(): B
+  }
+
+  /** Element `j` of the zip of `rs`, read lazily: `apply(k)` is
+    * `rs(k)(j)`. One 24-byte immutable object per element, so `f` may
+    * keep it (no buffer is ever reused); serialized as the `ArraySeq`
+    * of its values. A point's class is not part of the contract: one
+    * kept on the driver of a one-rank call is a `ZipPoint`, one that
+    * came back from a task an `ArraySeq`; both are `IndexedSeq[Double]`
+    * and compare and hash as the seq of their values. */
+  private final class ZipPoint(rs: Array[PRange], j: Long)
+      extends AbstractSeq[Double] with IndexedSeq[Double] with Serializable {
+    def length: Int = rs.length
+    def apply(k: Int): Double = rs(k)(j)
+    protected[this] def writeReplace(): AnyRef = ArraySeq.unsafeWrapArray(Array.tabulate(rs.length)(apply))
+  }
+
+  private final class ZipCursor[B](rs: Array[PRange], f: IndexedSeq[Double] => B, private[this] var j: Long)
+      extends Cursor[B] {
+    def next(): B = {
+      val b = f(new ZipPoint(rs, j))
+      j += 1
+      b
     }
+  }
+
+  private final class ProductCursor[B](iters: IndexedSeq[PRange], f: IndexedSeq[Double] => B, first: Long)
+      extends Cursor[B] {
+    private[this] val walk = new ProductOdometer(iters, first)
+    def next(): B = {
+      val b = f(walk.element())
+      walk.advance()
+      b
+    }
+  }
+
+  /** Cursors over the zip of `iters`, opened at a 0-based element index. */
+  private def zipped[B](iters: IndexedSeq[PRange], f: IndexedSeq[Double] => B): Long => Cursor[B] = {
+    val rs = iters.toArray
+    j => new ZipCursor(rs, f, j)
+  }
+
+  /** The next `n` elements of `cur`, as an iterator. */
+  private def elements[B](cur: Cursor[B], n: Long): Iterator[B] = new AbstractIterator[B] {
+    private[this] var left = n
+    def hasNext: Boolean = left > 0
+    def next(): B = {
+      if (left <= 0) throw new NoSuchElementException("next on an exhausted rank")
+      left -= 1
+      cur.next()
+    }
+  }
+
+  /** The serial left fold of one rank's `take >= 1` elements. A plain
+    * `op` over `Long` folds a primitive accumulator through the
+    * function's specialised entry; anything else folds through
+    * `op.apply`. Chosen once per call, on the driver; the two loops are
+    * separate methods so their JIT profiles do not mix. */
+  private def rankFold[B](op: ReduceOp[B])(implicit tag: ClassTag[B]): (Cursor[B], Long) => B =
+    op match {
+      case ReduceOp.Plain(g, _) if tag == ClassTag.Long =>
+        val gl = g.asInstanceOf[(Long, Long) => Long]
+        (cur, take) => foldLong(gl, cur.asInstanceOf[Cursor[Long]], take).asInstanceOf[B]
+      case _ =>
+        (cur, take) => foldAny(op, cur, take)
+    }
+
+  // Plain while loops, not an iterator chain: the per-rank fold may run
+  // 10^8+ iterations, and a monomorphic while loop reaches compiled
+  // steady state in a fraction of them.
+  private def foldLong(g: (Long, Long) => Long, cur: Cursor[Long], take: Long): Long = {
+    var acc = cur.next()
+    var n = 1L
+    while (n < take) { acc = g(acc, cur.next()); n += 1 }
+    acc
+  }
+
+  private def foldAny[B](op: ReduceOp[B], cur: Cursor[B], take: Long): B = {
+    var acc = cur.next()
+    var n = 1L
+    while (n < take) { acc = op(acc, cur.next()); n += 1 }
+    acc
   }
 
   /** E1 (zip mode): splat the j-th element of every range into `f`,
     * reduce with `op` (reference src/mapreduce.jl:266-287). Each
     * rank left-folds its slice serially (ordered within rank), so
-    * only one partial per rank crosses the network. */
+    * only one partial per rank crosses the network. A point that a
+    * partial keeps is only an `IndexedSeq[Double]` (see [[ZipPoint]]). */
   def pmapreduce[B: ClassTag](spark: SparkSession, iters: IndexedSeq[PRange], np: Int)
                              (f: IndexedSeq[Double] => B, op: ReduceOp[B],
                               init: Option[B] = None): B =
@@ -190,57 +281,32 @@ object PMapReduce {
 
   /** E1 (product mode): elements of the full product split across ranks,
     * each splatted into `f` (`pmapreduce(f, op, product(...))`,
-    * /root/reference/src/mapreduce.jl:18-30,266-287). The mixed-radix
-    * decode runs inline into one primitive array per element (the
-    * general `elementAt` builds two IndexedSeqs per call — too much
-    * garbage for a loop that may run 10^8+ times). */
+    * reference src/mapreduce.jl:18-30,266-287). Each rank decodes
+    * its first flat index once and then steps a [[ProductOdometer]]
+    * (the general `elementAt` builds two IndexedSeqs per call — too
+    * much garbage for a loop that may run 10^8+ times). */
   def pmapreduceProduct[B: ClassTag](spark: SparkSession, iters: IndexedSeq[PRange], np: Int)
                                     (f: IndexedSeq[Double] => B, op: ReduceOp[B],
-                                     init: Option[B] = None): B = {
-    val len = ProductIndexMath.totalLength(iters)
-    val rs = iters.toArray
-    mapReduceIndexed(spark, len, np, { j =>
-      val arr = new Array[Double](rs.length)
-      var rem = j
-      var k = 0
-      while (k < rs.length) {
-        val n = rs(k).numElems
-        arr(k) = rs(k)(rem % n)
-        rem /= n
-        k += 1
-      }
-      f(scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))
-    }, op, init)((partials, _) => reducePartials(partials, op))
-  }
+                                     init: Option[B] = None): B =
+    mapReduceIndexed(spark, ProductIndexMath.totalLength(iters), np,
+      j => new ProductCursor(iters, f, j), op, init)((partials, _) => reducePartials(partials, op))
 
-  /** Fold element `j` = 0 until `len` per rank under the split law, then
-    * `combine` the `(rank, partial)` pairs of the `npEff` ranks. */
+  /** Fold element `j` = 0 until `len` per rank under the split law, each
+    * rank from a cursor `open`ed at its first index, then `combine` the
+    * `(rank, partial)` pairs of the `npEff` ranks. */
   private def mapReduceIndexed[B: ClassTag](spark: SparkSession, len: Long, np: Int,
-                                            f: Long => B, op: ReduceOp[B],
+                                            open: Long => Cursor[B], op: ReduceOp[B],
                                             init: Option[B])
                                            (combine: (RDD[(Int, B)], Int) => B): B = {
     require(len > 0, "cannot reduce over an empty collection")
     val npEff = ranksFor(np, len)
-    // Plain while loops, not Range.iterator.map(f).reduceLeft(op): the
-    // per-rank fold may run 10^8+ iterations, and the iterator
-    // chain (NumericRange[Long] boxing + two megamorphic apply sites)
-    // both costs per element and takes C2 several seconds of profiling
-    // to JIT — which showed up as multi-second scatter in repeated
-    // bench records of frozen code. A monomorphic while loop reaches
-    // compiled steady state in a fraction of the iterations.
-    def foldRange(drop: Long, take: Long): B = {
-      var acc = f(drop)
-      var j = drop + 1
-      val end = drop + take
-      while (j < end) { acc = op(acc, f(j)); j += 1 }
-      acc
-    }
+    val fold = rankFold(op)
     if (npEff == 1) {
-      foldInit(init, op, foldRange(0L, len))
+      foldInit(init, op, fold(open(0L), len))
     } else {
       val partials = rankBlocks(spark.sparkContext, npEff).map { p =>
         val (drop, take) = ProductIndexMath.dropTake(len, npEff, p)
-        (p, foldRange(drop, take))
+        (p, fold(open(drop), take))
       }
       foldInit(init, op, combine(partials, npEff))
     }
@@ -249,17 +315,19 @@ object PMapReduce {
   /** E3: `pmap` — ordered per-element results
     * (reference src/mapreduce.jl:316-324). Each task emits its
     * ranks' elements in rank order and partitions hold ascending rank
-    * blocks, so `collect` reproduces the `vcat` concatenation. */
+    * blocks, so `collect` reproduces the `vcat` concatenation. A point
+    * that `f` returns or keeps is only an `IndexedSeq[Double]`; its
+    * class depends on the path (see [[ZipPoint]]). */
   def pmapbatch[T: ClassTag](spark: SparkSession, iters: IndexedSeq[PRange], np: Int)
                             (f: IndexedSeq[Double] => T): Vector[T] = {
     val len = iters.map(_.numElems).min
     require(len > 0, "cannot map over an empty collection")
     val npEff = ranksFor(np, len)
-    val g = zipped(iters, f)
-    if (npEff == 1) (0L until len).iterator.map(g).toVector
+    val open = zipped(iters, f)
+    if (npEff == 1) elements(open(0L), len).toVector
     else rankBlocks(spark.sparkContext, npEff).flatMap { p =>
       val (drop, take) = ProductIndexMath.dropTake(len, npEff, p)
-      (drop until drop + take).iterator.map(g)
+      elements(open(drop), take)
     }.collect().toVector
   }
 

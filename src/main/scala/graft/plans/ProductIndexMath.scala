@@ -231,6 +231,54 @@ object ProductIndexMath {
   }
 }
 
+/** A walk over the product of `iters` in flat (reverse-lex) order from
+  * 0-based flat index `first` — the reference `ProductSplit`'s
+  * `iterate`. `first` is decoded once; each [[advance]] carry-increments
+  * the per-dim index tuple, dimension 1 fastest, and recomputes only
+  * the values of the dimensions that moved, so a step costs no `%` or
+  * `/`. Values are `start + i*step` from the integer index, exactly
+  * [[ProductIndexMath.elementAt]]'s. Stepping past the last element
+  * wraps to the first; callers count their steps. Mutable: one walk
+  * per thread. */
+private[graft] final class ProductOdometer(iters: IndexedSeq[PRange], first: Long) {
+  private[this] val rs: Array[PRange] = iters.toArray
+  private[this] val idx: Array[Long] = new Array[Long](rs.length)
+  private[this] val values: Array[Double] = new Array[Double](rs.length)
+
+  {
+    var rem = first
+    var k = 0
+    while (k < rs.length) {
+      val n = rs(k).numElems
+      idx(k) = rem % n
+      values(k) = rs(k)(idx(k))
+      rem /= n
+      k += 1
+    }
+  }
+
+  /** The element under the walk, as a fresh immutable seq (the caller
+    * may keep it). */
+  def element(): IndexedSeq[Double] =
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(values.clone())
+
+  /** Step to the next flat index. */
+  def advance(): Unit = {
+    var k = 0
+    while (k < rs.length) {
+      val i = idx(k) + 1
+      if (i < rs(k).numElems) {
+        idx(k) = i
+        values(k) = rs(k)(i)
+        return
+      }
+      idx(k) = 0L
+      values(k) = rs(k)(0L)
+      k += 1
+    }
+  }
+}
+
 /** A contiguous window `[firstFlat, lastFlat]` (0-based inclusive; empty
   * when lastFlat < firstFlat) into the outer product of `iters` — the
   * engine's `ProductSplit`/`ProductSection`
@@ -314,14 +362,18 @@ final case class ProductSlice(iters: IndexedSeq[PRange], firstFlat: Long, lastFl
   }
 
   /** Materialize the slice (lazy iterator ≙ `takedrop`,
-    * /root/reference/src/productsplit.jl:61-65). */
+    * reference src/productsplit.jl:61-65), walked by a
+    * [[ProductOdometer]] from `firstFlat`. */
   def iterator: Iterator[IndexedSeq[Double]] = new Iterator[IndexedSeq[Double]] {
-    private[this] var flat = firstFlat
-    def hasNext: Boolean = flat <= lastFlat
+    private[this] var left = ProductSlice.this.length
+    // an empty slice may sit on a zero-length dimension: no walk to decode
+    private[this] val walk = if (left > 0) new ProductOdometer(iters, firstFlat) else null
+    def hasNext: Boolean = left > 0
     def next(): IndexedSeq[Double] = {
       if (!hasNext) throw new NoSuchElementException("next on an exhausted slice iterator")
-      val e = decode(flat)
-      flat += 1
+      val e = walk.element()
+      walk.advance()
+      left -= 1
       e
     }
   }

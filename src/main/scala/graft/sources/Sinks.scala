@@ -143,7 +143,10 @@ object Sinks {
     * in `table` is skipped, so re-running after a crash mid-carry
     * finishes the remainder. No-op without a manifest. The bak table
     * is NOT dropped here (the caller decides when the generation is
-    * fully committed). */
+    * fully committed). A listed file that is in neither directory is
+    * lost: the generation cannot be completed from the bak, and the
+    * error names the table, the manifest, the file and the repair
+    * (rebuild the table). */
   def completeCarry(spark: org.apache.spark.sql.SparkSession,
                     table: String): Unit = {
     val dir = tableLocation(spark, table)
@@ -160,7 +163,10 @@ object Sinks {
       val dst = new org.apache.hadoop.fs.Path(dir, name)
       if (!fs.exists(dst)) {
         val src = new org.apache.hadoop.fs.Path(bakDir, name)
-        require(fs.exists(src), s"carry source missing: $src")
+        if (!fs.exists(src)) throw new IllegalStateException(
+          s"cannot complete the carry into table $table: its manifest $manifest lists $name, " +
+            s"which is in neither $dir nor ${table}_bak's directory $bakDir. This generation " +
+            s"cannot be completed from the bak; rebuild $table with a full rewrite.")
         require(fs.rename(src, dst), s"carry rename $src -> $dst failed")
       }
     }

@@ -740,6 +740,29 @@ class BucketingSpec extends AnyFunSuite {
     Sinks.dropTableAndLocation(spark, "spec_carry_clash")
   }
 
+  test("a carry whose file is gone fails by name: table, manifest, file and the rebuild repair") {
+    import graft.sources.Sinks
+    import spark.implicits._
+    Seq("spec_lost", "spec_lost_new", "spec_lost_bak")
+      .foreach(Sinks.dropTableAndLocation(spark, _))
+    Sinks.saveTableReplacing(Seq((1L, "old")).toDF("k", "v"), "spec_lost")
+    Sinks.saveTableReplacing(Seq((2L, "new")).toDF("k", "v"), "spec_lost_new")
+    // the manifest names a file the old generation never had
+    val gone = "part-00000-gone.c000.snappy.parquet"
+    Sinks.writeCarryManifest(spark, "spec_lost_new", Seq(gone))
+    def assertNamed(e: IllegalStateException): Unit = {
+      val msg = e.getMessage
+      Seq("spec_lost", "_carry_from_bak", gone, "spec_lost_bak", "rebuild spec_lost")
+        .foreach(part => assert(msg.contains(part), s"'$part' missing from: $msg"))
+    }
+    assertNamed(intercept[IllegalStateException](Sinks.swapInTable(spark, "spec_lost_new", "spec_lost")))
+    // the swap renames are done and the bak is kept: recovery meets the
+    // same loss and says the same
+    assert(spark.catalog.tableExists("spec_lost_bak"))
+    assertNamed(intercept[IllegalStateException](Sinks.recoverSwappedTable(spark, "spec_lost")))
+    Seq("spec_lost", "spec_lost_bak").foreach(Sinks.dropTableAndLocation(spark, _))
+  }
+
   test("swapInTable/recoverSwappedTable: two-rename law survives both crash windows") {
     import graft.sources.Sinks
     import spark.implicits._

@@ -203,6 +203,70 @@ class PMapReduceSpec extends AnyFunSuite {
     }
   }
 
+  test("retention: f may keep its point — pmapbatch(v => v) and concat of Vector(v) for every np") {
+    val zip = IndexedSeq(PRange(1, 97), PRange.stepped(5, 3, 5 + 3 * 96), PRange.steppedD(0.5, 0.25, 40.0))
+    val zipWant = (0L until 97L).map(j => zip.map(_(j)))
+    val prod = IndexedSeq(PRange(1, 4), PRange(3, 3), PRange.steppedD(0.5, 0.25, 2.0)) // 4 * 1 * 7
+    val prodWant = (0L until 28L).map(ProductIndexMath.elementAt(prod, _))
+    val concat = ReduceOp.concat[IndexedSeq[Double]]
+    // a point's class is unspecified (it depends on whether it crossed
+    // to the driver); on every path it equals and hashes as the seq of
+    // its values
+    def samePoints(got: Seq[IndexedSeq[Double]], clue: String): Unit = {
+      assertSameSeq(got, zipWant, clue)
+      assert(got.map(_.hashCode) == zipWant.map(_.hashCode), s"$clue: hashCode")
+    }
+    for (np <- Seq(1, 3, 16, 64)) {
+      samePoints(pmapbatch(spark, zip, np)(v => v), s"pmapbatch np=$np")
+      samePoints(pmapreduce(spark, zip, np)(v => Vector(v), concat), s"pmapreduce np=$np")
+      assertSameSeq(pmapreduceProduct(spark, prod, np)(v => Vector(v), concat), prodWant,
+        s"pmapreduceProduct np=$np")
+    }
+  }
+
+  test("plain Long and Double ops fold as the generic fold does, with and without init") {
+    // the same function behind an op that is not a plain function, so
+    // the rank fold can only reach it through op.apply
+    def generic[B](op: ReduceOp[B]): ReduceOp[B] = new ReduceOp[B] {
+      def apply(a: B, b: B): B = op(a, b)
+      def commutative: Boolean = op.commutative
+    }
+    // built where T is erased: an unspecialised Function2
+    def numericPlus[T](implicit num: Numeric[T]): ReduceOp[T] = ReduceOp.commutative[T](num.plus)
+    val zip = IndexedSeq(PRange(1, 1000), PRange.steppedD(-3.0, 0.1, 200.0))
+    val prod = IndexedSeq(PRange(1, 9), PRange(4, 4), PRange.stepped(2, 3, 62)) // 9 * 1 * 21
+    def check[B: scala.reflect.ClassTag](name: String, f: IndexedSeq[Double] => B, op: ReduceOp[B],
+                                         init: B): Unit =
+      for (np <- Seq(1, 3, 16); in <- Seq(None, Some(init))) {
+        val clue = s"$name np=$np init=$in"
+        val z = pmapreduce(spark, zip, np)(f, op, in)
+        assert(z == pmapreduce(spark, zip, np)(f, generic(op), in), s"zip $clue")
+        val p = pmapreduceProduct(spark, prod, np)(f, op, in)
+        assert(p == pmapreduceProduct(spark, prod, np)(f, generic(op), in), s"product $clue")
+        if (np == 1) {
+          // one rank: the serial left fold, then init
+          def serial(points: Seq[IndexedSeq[Double]]): B = {
+            val r = points.map(f).reduceLeft(op)
+            in.fold(r)(op(_, r))
+          }
+          assert(z == serial((0L until 1000L).map(j => zip.map(_(j)))), s"zip serial $clue")
+          assert(p == serial((0L until 189L).map(ProductIndexMath.elementAt(prod, _))), s"product serial $clue")
+        }
+      }
+    val fl: IndexedSeq[Double] => Long = v => math.round(v(0) * 7 + v(v.length - 1) * 10)
+    // quarter-multiples well inside 2^53: every partial sum is exact, so
+    // a commutative Double op gives one result in any combine order
+    // (treeReduce merges task results as they arrive)
+    val fd: IndexedSeq[Double] => Double = v => v(0) * 0.25 + math.rint(v(v.length - 1) * 4) / 4
+    check("Long +", fl, ReduceOp.commutative[Long](_ + _), 5L)
+    check("Long 31a+b", fl, ReduceOp[Long]((a, b) => 31 * a + b), 5L)
+    check("Long flip(31a+b)", fl, ReduceOp.flip(ReduceOp[Long]((a, b) => 31 * a + b)), 5L)
+    check("Long Numeric.plus", fl, numericPlus[Long], 5L)
+    check("Double +", fd, ReduceOp.commutative[Double](_ + _), 2.5)
+    check("Double 0.5a+b", fd, ReduceOp[Double]((a, b) => 0.5 * a + b), 2.5)
+    check("Double Numeric.plus", fd, numericPlus[Double], 2.5)
+  }
+
   test("rank blocks: 224 ranks run as at most defaultParallelism tasks; productDF(np = 25) likewise") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import scala.jdk.CollectionConverters._

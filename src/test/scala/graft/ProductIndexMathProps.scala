@@ -2,7 +2,7 @@ package graft
 
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
-import graft.plans.{PRange, ProductIndexMath}
+import graft.plans.{PRange, ProductIndexMath, ProductOdometer}
 
 /** ScalaCheck upgrade of the bounded sweeps (SURVEY §5): the partition
   * laws as properties over arbitrary iterator shapes and (np, p). */
@@ -98,5 +98,31 @@ object ProductIndexMathProps extends Properties("ProductIndexMath") {
       Prop((1L to sl.length).forall(i => sl(i) == want((i - 1).toInt))) &&
         Prop(sl.iterator.toVector == want) &&
         Prop(sl.isEmpty || (sl.firstElement == want.head && sl.lastElement == want.last))
+    }
+
+  private val genWalkRange: Gen[PRange] = Gen.frequency(
+    3 -> genRange,
+    1 -> Gen.chooseNum(-5L, 5L).map(lo => PRange(lo, lo)),
+    2 -> (for {
+      lo <- Gen.chooseNum(-3.0, 3.0)
+      step <- Gen.oneOf(0.1, 0.25, 0.3, 1.5)
+      n <- Gen.chooseNum(1, 9)
+    } yield PRange.steppedD(lo, step, lo + step * (n - 1))))
+
+  property("odometer walk == elementAt for every flat index of every rank window") =
+    forAll(Gen.chooseNum(1, 4).flatMap(n => Gen.listOfN(n, genWalkRange).map(_.toIndexedSeq)),
+      Gen.chooseNum(1, 12)) { (iters, np) =>
+      val L = ProductIndexMath.totalLength(iters)
+      Prop((1 to np).forall { p =>
+        val (drop, take) = ProductIndexMath.dropTake(L, np, p)
+        take == 0 || {
+          val walk = new ProductOdometer(iters, drop)
+          (drop until drop + take).forall { flat =>
+            val same = walk.element() == ProductIndexMath.elementAt(iters, flat)
+            walk.advance()
+            same
+          }
+        }
+      })
     }
 }
