@@ -1,6 +1,6 @@
 package graft.operators
 
-import scala.collection.AbstractIterator
+import java.lang.invoke.MethodHandles
 import scala.collection.immutable.{AbstractSeq, ArraySeq}
 import scala.reflect.ClassTag
 import org.apache.spark.SparkContext
@@ -27,20 +27,24 @@ import graft.sources.ProductSplitSource
   * `mapreduce`, reference src/mapreduce.jl:104-124), one serial
   * fold per rank over that rank's `dropTake` window.
   *
-  * The rank fold boxes nothing of its own per element. Each rank walks
-  * its window with a [[Cursor]] whose element index is a primitive
-  * field; a zip element reaches `f` as one immutable lazy [[ZipPoint]],
-  * a product element through a [[ProductOdometer]] (one decode per
-  * rank, then carry-increments). When `B` is `Long` and `op` is a
-  * plain function ([[ReduceOp.Plain]]), the accumulator is a primitive
-  * and each step calls the function's specialised `Function2` entry
+  * Each rank's loop runs in a copy of its own per lambda class
+  * ([[RankLoops]]): the loop bytecode is copied into a hidden class per
+  * class of `f`, so its calls to `f` and `op` have a profile of their
+  * own and C2 inlines them. A zip element is one immutable lazy
+  * [[ZipPoint]]; once `f` is inlined, a point that `f` does not keep
+  * and `f`'s boxed result for a primitive `B` are scalar-replaced, so
+  * a zip element allocates nothing that `f` does not. A product
+  * element comes from a [[ProductOdometer]] (one decode per rank, then
+  * carry-increments), whose point is still a fresh array per element.
+  * When `B` is `Long` and `op` is a plain function
+  * ([[ReduceOp.Plain]]), the accumulator is a primitive and each step
+  * calls the function's specialised `Function2` entry
   * (`apply$mcJJJ$sp`); an unspecialised function reaches the same
   * result through Scala's boxing default. Every other op folds through
-  * `op.apply`. What is left per element is `f` itself: its argument
-  * and, for a primitive `B`, its boxed result. Commutative
-  * ops then combine partials with `treeReduce` (the two-level
-  * aggregation tree subsumes the reference's host-segmented reduction
-  * tree, /root/reference/src/trees.jl:42-63). Non-commutative ops use
+  * `op.apply`. Commutative ops then combine partials with
+  * `treeReduce` (the two-level aggregation tree subsumes the
+  * reference's host-segmented reduction tree,
+  * /root/reference/src/trees.jl:42-63). Non-commutative ops use
   * the one semantic Spark doesn't give natively: partials are tagged
   * with their rank, gathered, sorted by rank, and left-folded — exactly
   * the reference's root combine (`_maybesort` + `reducechannel`,
@@ -157,7 +161,7 @@ object PMapReduce {
                                       (f: IndexedSeq[Double] => B, op: ReduceOp[B],
                                        init: Option[B] = None,
                                        segments: Option[Int] = None): B =
-    mapReduceIndexed(spark, iters.map(_.numElems).min, np, zipped(iters, f), op, init)(
+    mapReduceIndexed(spark, iters.map(_.numElems).min, np, zipFold(iters, f, op), op, init)(
       (partials, npEff) => hostSegmentedReduce(spark, partials, npEff, op, segments))
 
   /** E2: `f` receives each rank's whole ProductSlice once (MPI-style;
@@ -179,14 +183,6 @@ object PMapReduce {
     }
   }
 
-  /** One rank's walk over its elements in index order: `next()` is the
-    * element under the cursor, then the cursor steps to the following
-    * one. The element index is a primitive field, so the walk boxes no
-    * index. Mutable: opened per rank, used by one thread. */
-  private abstract class Cursor[B] {
-    def next(): B
-  }
-
   /** Element `j` of the zip of `rs`, read lazily: `apply(k)` is
     * `rs(k)(j)`. One 24-byte immutable object per element, so `f` may
     * keep it (no buffer is ever reused); serialized as the `ArraySeq`
@@ -194,79 +190,47 @@ object PMapReduce {
     * kept on the driver of a one-rank call is a `ZipPoint`, one that
     * came back from a task an `ArraySeq`; both are `IndexedSeq[Double]`
     * and compare and hash as the seq of their values. */
-  private final class ZipPoint(rs: Array[PRange], j: Long)
+  private[operators] final class ZipPoint(rs: Array[PRange], j: Long)
       extends AbstractSeq[Double] with IndexedSeq[Double] with Serializable {
     def length: Int = rs.length
     def apply(k: Int): Double = rs(k)(j)
     protected[this] def writeReplace(): AnyRef = ArraySeq.unsafeWrapArray(Array.tabulate(rs.length)(apply))
   }
 
-  private final class ZipCursor[B](rs: Array[PRange], f: IndexedSeq[Double] => B, private[this] var j: Long)
-      extends Cursor[B] {
-    def next(): B = {
-      val b = f(new ZipPoint(rs, j))
-      j += 1
-      b
-    }
-  }
-
-  private final class ProductCursor[B](iters: IndexedSeq[PRange], f: IndexedSeq[Double] => B, first: Long)
-      extends Cursor[B] {
-    private[this] val walk = new ProductOdometer(iters, first)
-    def next(): B = {
-      val b = f(walk.element())
-      walk.advance()
-      b
-    }
-  }
-
-  /** Cursors over the zip of `iters`, opened at a 0-based element index. */
-  private def zipped[B](iters: IndexedSeq[PRange], f: IndexedSeq[Double] => B): Long => Cursor[B] = {
-    val rs = iters.toArray
-    j => new ZipCursor(rs, f, j)
-  }
-
-  /** The next `n` elements of `cur`, as an iterator. */
-  private def elements[B](cur: Cursor[B], n: Long): Iterator[B] = new AbstractIterator[B] {
-    private[this] var left = n
-    def hasNext: Boolean = left > 0
-    def next(): B = {
-      if (left <= 0) throw new NoSuchElementException("next on an exhausted rank")
-      left -= 1
-      cur.next()
-    }
-  }
-
-  /** The serial left fold of one rank's `take >= 1` elements. A plain
-    * `op` over `Long` folds a primitive accumulator through the
-    * function's specialised entry; anything else folds through
-    * `op.apply`. Chosen once per call, on the driver; the two loops are
-    * separate methods so their JIT profiles do not mix. */
-  private def rankFold[B](op: ReduceOp[B])(implicit tag: ClassTag[B]): (Cursor[B], Long) => B =
+  /** `op`'s function when `B` is `Long` and `op` is a plain function:
+    * the rank loop then folds a primitive accumulator. */
+  private def plainLong[B](op: ReduceOp[B])(implicit tag: ClassTag[B]): Option[(Long, Long) => Long] =
     op match {
-      case ReduceOp.Plain(g, _) if tag == ClassTag.Long =>
-        val gl = g.asInstanceOf[(Long, Long) => Long]
-        (cur, take) => foldLong(gl, cur.asInstanceOf[Cursor[Long]], take).asInstanceOf[B]
-      case _ =>
-        (cur, take) => foldAny(op, cur, take)
+      case ReduceOp.Plain(g, _) if tag == ClassTag.Long => Some(g.asInstanceOf[(Long, Long) => Long])
+      case _                                            => None
     }
 
-  // Plain while loops, not an iterator chain: the per-rank fold may run
-  // 10^8+ iterations, and a monomorphic while loop reaches compiled
-  // steady state in a fraction of them.
-  private def foldLong(g: (Long, Long) => Long, cur: Cursor[Long], take: Long): Long = {
-    var acc = cur.next()
-    var n = 1L
-    while (n < take) { acc = g(acc, cur.next()); n += 1 }
-    acc
+  /** One rank's serial left fold over the zip of `iters`: `(first, take)`
+    * folds the `take >= 1` elements from 0-based index `first` in `f`'s
+    * copy of the rank loops. The loop is chosen once per call, on the
+    * driver; the copy is looked up where the rank runs. */
+  private def zipFold[B: ClassTag](iters: IndexedSeq[PRange], f: IndexedSeq[Double] => B,
+                                   op: ReduceOp[B]): (Long, Long) => B = {
+    val rs = iters.toArray
+    plainLong(op) match {
+      case Some(g) =>
+        val fl = f.asInstanceOf[IndexedSeq[Double] => Long]
+        (first, take) => RankLoops.of(f).zipLong(rs, fl, g, first, take).asInstanceOf[B]
+      case None =>
+        (first, take) => RankLoops.of(f).zipAny(rs, f, op, first, take)
+    }
   }
 
-  private def foldAny[B](op: ReduceOp[B], cur: Cursor[B], take: Long): B = {
-    var acc = cur.next()
-    var n = 1L
-    while (n < take) { acc = op(acc, cur.next()); n += 1 }
-    acc
-  }
+  /** [[zipFold]] over the product of `iters`. */
+  private def productFold[B: ClassTag](iters: IndexedSeq[PRange], f: IndexedSeq[Double] => B,
+                                       op: ReduceOp[B]): (Long, Long) => B =
+    plainLong(op) match {
+      case Some(g) =>
+        val fl = f.asInstanceOf[IndexedSeq[Double] => Long]
+        (first, take) => RankLoops.of(f).productLong(iters, fl, g, first, take).asInstanceOf[B]
+      case None =>
+        (first, take) => RankLoops.of(f).productAny(iters, f, op, first, take)
+    }
 
   /** E1 (zip mode): splat the j-th element of every range into `f`,
     * reduce with `op` (reference src/mapreduce.jl:266-287). Each
@@ -276,7 +240,7 @@ object PMapReduce {
   def pmapreduce[B: ClassTag](spark: SparkSession, iters: IndexedSeq[PRange], np: Int)
                              (f: IndexedSeq[Double] => B, op: ReduceOp[B],
                               init: Option[B] = None): B =
-    mapReduceIndexed(spark, iters.map(_.numElems).min, np, zipped(iters, f), op, init)(
+    mapReduceIndexed(spark, iters.map(_.numElems).min, np, zipFold(iters, f, op), op, init)(
       (partials, _) => reducePartials(partials, op))
 
   /** E1 (product mode): elements of the full product split across ranks,
@@ -288,46 +252,54 @@ object PMapReduce {
   def pmapreduceProduct[B: ClassTag](spark: SparkSession, iters: IndexedSeq[PRange], np: Int)
                                     (f: IndexedSeq[Double] => B, op: ReduceOp[B],
                                      init: Option[B] = None): B =
-    mapReduceIndexed(spark, ProductIndexMath.totalLength(iters), np,
-      j => new ProductCursor(iters, f, j), op, init)((partials, _) => reducePartials(partials, op))
+    mapReduceIndexed(spark, ProductIndexMath.totalLength(iters), np, productFold(iters, f, op), op, init)(
+      (partials, _) => reducePartials(partials, op))
 
   /** Fold element `j` = 0 until `len` per rank under the split law, each
-    * rank from a cursor `open`ed at its first index, then `combine` the
+    * rank's window through `fold(drop, take)`, then `combine` the
     * `(rank, partial)` pairs of the `npEff` ranks. */
   private def mapReduceIndexed[B: ClassTag](spark: SparkSession, len: Long, np: Int,
-                                            open: Long => Cursor[B], op: ReduceOp[B],
+                                            fold: (Long, Long) => B, op: ReduceOp[B],
                                             init: Option[B])
                                            (combine: (RDD[(Int, B)], Int) => B): B = {
     require(len > 0, "cannot reduce over an empty collection")
     val npEff = ranksFor(np, len)
-    val fold = rankFold(op)
     if (npEff == 1) {
-      foldInit(init, op, fold(open(0L), len))
+      foldInit(init, op, fold(0L, len))
     } else {
       val partials = rankBlocks(spark.sparkContext, npEff).map { p =>
         val (drop, take) = ProductIndexMath.dropTake(len, npEff, p)
-        (p, fold(open(drop), take))
+        (p, fold(drop, take))
       }
       foldInit(init, op, combine(partials, npEff))
     }
   }
 
   /** E3: `pmap` — ordered per-element results
-    * (reference src/mapreduce.jl:316-324). Each task emits its
-    * ranks' elements in rank order and partitions hold ascending rank
-    * blocks, so `collect` reproduces the `vcat` concatenation. A point
-    * that `f` returns or keeps is only an `IndexedSeq[Double]`; its
-    * class depends on the path (see [[ZipPoint]]). */
+    * (reference src/mapreduce.jl:316-324). Each rank maps its window
+    * in `f`'s copy of the rank loops; each task emits its ranks'
+    * results in rank order and partitions hold ascending rank blocks,
+    * so `collect` reproduces the `vcat` concatenation. A point that `f`
+    * returns or keeps is only an `IndexedSeq[Double]`; its class
+    * depends on the path (see [[ZipPoint]]). */
   def pmapbatch[T: ClassTag](spark: SparkSession, iters: IndexedSeq[PRange], np: Int)
                             (f: IndexedSeq[Double] => T): Vector[T] = {
     val len = iters.map(_.numElems).min
     require(len > 0, "cannot map over an empty collection")
     val npEff = ranksFor(np, len)
-    val open = zipped(iters, f)
-    if (npEff == 1) elements(open(0L), len).toVector
+    val rs = iters.toArray
+    // `f` of the `take` elements from `first`, boxed where `T` is primitive
+    val walk: (Long, Long) => Array[AnyRef] = { (first, take) =>
+      val out = new Array[AnyRef](Math.toIntExact(take))
+      RankLoops.of(f).zipMap(rs, f, first, out)
+      out
+    }
+    if (npEff == 1) walk(0L, len).toVector.asInstanceOf[Vector[T]]
     else rankBlocks(spark.sparkContext, npEff).flatMap { p =>
       val (drop, take) = ProductIndexMath.dropTake(len, npEff, p)
-      elements(open(drop), take)
+      // typed as `T`, so a task's result is an `Array[T]`: a primitive
+      // array ships whole, not as one serialized box per element
+      walk(drop, take).iterator.asInstanceOf[Iterator[T]]
     }.collect().toVector
   }
 
@@ -341,5 +313,99 @@ object PMapReduce {
     else ProductSplitSource.productSliceRDD(spark, iters, npEff)
       .map { case (_, slice) => f(slice) }
       .collect().toVector
+  }
+}
+
+/** The rank loops of the `pmapreduce` family, one copy per lambda
+  * class. [[RankLoops.of]] gives `f` a copy whose class is a hidden
+  * class defined from the bytes of [[RankLoopTemplate]], cached per
+  * class of `f`. Each copy's bytecode is its own, so its JIT profile
+  * is too: the calls to `f` and `op` see one receiver class each and
+  * C2 inlines them, which a loop shared by every caller does not get
+  * once a second lambda runs through it. A copy holds nothing: `f`,
+  * `op` and the ranges are arguments of every call. A copy's frames
+  * are hidden-class frames, so stack traces leave them out; an
+  * exception from `f` or `op` still shows their own frames. */
+private[graft] abstract class RankLoops {
+  /** The serial left fold of `f` over the `take >= 1` zip elements of
+    * `rs` from 0-based index `first`, through a plain `Long` function. */
+  def zipLong(rs: Array[PRange], f: IndexedSeq[Double] => Long, g: (Long, Long) => Long,
+              first: Long, take: Long): Long
+  /** [[zipLong]] through any op. */
+  def zipAny[B](rs: Array[PRange], f: IndexedSeq[Double] => B, op: (B, B) => B,
+                first: Long, take: Long): B
+  /** [[zipLong]] over the product of `iters`, in flat-index order. */
+  def productLong(iters: IndexedSeq[PRange], f: IndexedSeq[Double] => Long, g: (Long, Long) => Long,
+                  first: Long, take: Long): Long
+  /** [[productLong]] through any op. */
+  def productAny[B](iters: IndexedSeq[PRange], f: IndexedSeq[Double] => B, op: (B, B) => B,
+                    first: Long, take: Long): B
+  /** `out(i) = f(zip element first + i)` for every slot of `out`. */
+  def zipMap[T](rs: Array[PRange], f: IndexedSeq[Double] => T, first: Long, out: Array[AnyRef]): Unit
+}
+
+private[graft] object RankLoops {
+  private[this] val template: Array[Byte] = {
+    val in = classOf[RankLoopTemplate].getResourceAsStream(classOf[RankLoopTemplate].getSimpleName + ".class")
+    try in.readAllBytes() finally in.close()
+  }
+
+  private[this] val copies = new ClassValue[RankLoops] {
+    protected def computeValue(lambda: Class[_]): RankLoops =
+      MethodHandles.lookup().defineHiddenClass(template, true).lookupClass()
+        .getDeclaredConstructor().newInstance().asInstanceOf[RankLoops]
+  }
+
+  /** The copy of the rank loops for `f`'s class. */
+  def of(f: AnyRef): RankLoops = copies.get(f.getClass)
+}
+
+/** The bytes that every [[RankLoops]] copy is defined from. Each loop
+  * calls `f` and `op` itself, with no object in between whose method,
+  * once inlined, would bring a profile shared by every lambda. It
+  * declares no field and has no companion, so a copy keeps nothing of
+  * any `f`; it uses no lambda, so a copy's bytes define no other class. */
+private[graft] final class RankLoopTemplate extends RankLoops {
+  // Plain while loops, not an iterator chain: a rank may fold 10^8+
+  // elements.
+  def zipLong(rs: Array[PRange], f: IndexedSeq[Double] => Long, g: (Long, Long) => Long,
+              first: Long, take: Long): Long = {
+    var acc = f(new PMapReduce.ZipPoint(rs, first))
+    var j = first + 1
+    val end = first + take
+    while (j < end) { acc = g(acc, f(new PMapReduce.ZipPoint(rs, j))); j += 1 }
+    acc
+  }
+
+  def zipAny[B](rs: Array[PRange], f: IndexedSeq[Double] => B, op: (B, B) => B,
+                first: Long, take: Long): B = {
+    var acc = f(new PMapReduce.ZipPoint(rs, first))
+    var j = first + 1
+    val end = first + take
+    while (j < end) { acc = op(acc, f(new PMapReduce.ZipPoint(rs, j))); j += 1 }
+    acc
+  }
+
+  def productLong(iters: IndexedSeq[PRange], f: IndexedSeq[Double] => Long, g: (Long, Long) => Long,
+                  first: Long, take: Long): Long = {
+    val walk = new ProductOdometer(iters, first)
+    var acc = f(walk.element())
+    var n = 1L
+    while (n < take) { walk.advance(); acc = g(acc, f(walk.element())); n += 1 }
+    acc
+  }
+
+  def productAny[B](iters: IndexedSeq[PRange], f: IndexedSeq[Double] => B, op: (B, B) => B,
+                    first: Long, take: Long): B = {
+    val walk = new ProductOdometer(iters, first)
+    var acc = f(walk.element())
+    var n = 1L
+    while (n < take) { walk.advance(); acc = op(acc, f(walk.element())); n += 1 }
+    acc
+  }
+
+  def zipMap[T](rs: Array[PRange], f: IndexedSeq[Double] => T, first: Long, out: Array[AnyRef]): Unit = {
+    var i = 0
+    while (i < out.length) { out(i) = f(new PMapReduce.ZipPoint(rs, first + i)).asInstanceOf[AnyRef]; i += 1 }
   }
 }

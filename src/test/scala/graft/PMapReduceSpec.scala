@@ -267,6 +267,87 @@ class PMapReduceSpec extends AnyFunSuite {
     check("Double Numeric.plus", fd, numericPlus[Double], 2.5)
   }
 
+  /** One lambda class: every instance is the same class, whatever `k`. */
+  private def scaled(k: Long): IndexedSeq[Double] => Long = v => k * v(0).toLong
+
+  test("capturing lambda: two instances of one class, interleaved, each folds its own capture") {
+    val (a, b) = (scaled(3), scaled(7))
+    assert(a.getClass eq b.getClass, "the two instances must share a lambda class")
+    val zip = IndexedSeq(PRange(1, 1000), PRange.stepped(2, 2, 2000))
+    val prod = IndexedSeq(PRange(1, 9), PRange(4, 4), PRange.stepped(2, 3, 62)) // 9 * 1 * 21
+    // the same sum behind an op that is not a plain function, so the
+    // fold takes its generic loop
+    val plain = ReduceOp.commutative[Long](_ + _)
+    val generic = new ReduceOp[Long] {
+      def apply(x: Long, y: Long): Long = x + y
+      def commutative: Boolean = true
+    }
+    for (np <- Seq(1, 3, 16); op <- Seq(plain, generic); k <- Seq(3L, 7L)) {
+      val f = if (k == 3L) a else b
+      val clue = s"k=$k np=$np op=${if (op eq plain) "plain" else "generic"}"
+      assert(pmapreduce(spark, zip, np)(f, op) == k * 500500L, s"zip $clue")
+      assert(pmapreduceProduct(spark, prod, np)(f, op) == k * 45L * 21L, s"product $clue")
+      assert(pmapbatch(spark, zip, np)(f) == (1L to 1000L).map(k * _).toVector, s"pmapbatch $clue")
+    }
+  }
+
+  test("call order does not matter: five lambdas through zip, product and pmapbatch, in two orders") {
+    val zip = IndexedSeq(PRange(1, 301), PRange.stepped(2, 3, 2 + 3 * 300))
+    val prod = IndexedSeq(PRange(1, 7), PRange(2, 2), PRange.stepped(1, 2, 41)) // 7 * 1 * 21
+    val zipPoints = (0L until 301L).map(j => zip.map(_(j)))
+    val prodPoints = (0L until 147L).map(ProductIndexMath.elementAt(prod, _))
+    def norm(x: Any): Any = x match {
+      case a: Array[Double] => a.toVector
+      case other            => other
+    }
+    // every rank's serial left fold, then the rank partials left-folded in
+    // rank order: the serial left fold at np = 1, and for a commutative
+    // op what any combine order gives
+    def ranked[B](points: IndexedSeq[IndexedSeq[Double]], np: Int, f: IndexedSeq[Double] => B,
+                  op: ReduceOp[B]): B = {
+      val npEff = math.min(np, points.length)
+      (1 to npEff).map { p =>
+        val (drop, take) = ProductIndexMath.dropTake(points.length.toLong, npEff, p)
+        points.slice(drop.toInt, (drop + take).toInt).map(f).reduceLeft(op)
+      }.reduceLeft(op)
+    }
+    def check[B: scala.reflect.ClassTag](name: String, f: IndexedSeq[Double] => B, op: ReduceOp[B])
+                                        (np: Int): Unit = {
+      val clue = s"$name np=$np"
+      assert(norm(pmapreduce(spark, zip, np)(f, op)) == norm(ranked(zipPoints, np, f, op)), s"zip $clue")
+      assert(norm(pmapreduceProduct(spark, prod, np)(f, op)) == norm(ranked(prodPoints, np, f, op)),
+        s"product $clue")
+      assertSameSeq(pmapbatch(spark, zip, np)(f).map(norm), zipPoints.map(f).map(norm), s"pmapbatch $clue")
+    }
+    val cases: Seq[Int => Unit] = Seq(
+      check("Long +", v => v(0).toLong * 3 + v(v.length - 1).toLong, ReduceOp.commutative[Long](_ + _)),
+      check("Long 31a+b", v => v(0).toLong - 2 * v(v.length - 1).toLong, ReduceOp[Long]((x, y) => 31 * x + y)),
+      check("flip(Long 31a+b)", v => v(v.length - 1).toLong + 5,
+        ReduceOp.flip(ReduceOp[Long]((x, y) => 31 * x + y))),
+      check("Vector concat", v => Vector(v(0).toLong, v(v.length - 1).toLong), ReduceOp.concat[Long]),
+      check("elementwiseSum", v => Array(v(0), v(0) * v(v.length - 1)), ReduceOp.elementwiseSum))
+    for (order <- Seq(cases, cases.reverse); np <- Seq(1, 3, 16); run <- order) run(np)
+  }
+
+  test("rank loops: one hidden-class copy per lambda class, from a template with no fields or companion") {
+    import graft.operators.{RankLoops, RankLoopTemplate}
+    val template = classOf[RankLoopTemplate]
+    assert(template.getDeclaredFields.isEmpty, template.getDeclaredFields.toSeq)
+    assert(scala.util.Try(Class.forName(template.getName + "$", false, template.getClassLoader)).isFailure,
+      "the template has a companion")
+    val (a, b) = (scaled(1), scaled(2))
+    val c: IndexedSeq[Double] => Long = v => v(0).toLong
+    assert(a.getClass eq b.getClass)
+    assert(a.getClass ne c.getClass)
+    assert(RankLoops.of(a) eq RankLoops.of(b), "two instances of one lambda class share a copy")
+    assert(RankLoops.of(a).getClass ne RankLoops.of(c).getClass, "two lambda classes share a copy")
+    for (g <- Seq(a, c)) {
+      val copy = RankLoops.of(g).getClass
+      assert(copy.isHidden, s"$copy is not a hidden class")
+      assert(copy.getSuperclass eq classOf[RankLoops])
+    }
+  }
+
   test("rank blocks: 224 ranks run as at most defaultParallelism tasks; productDF(np = 25) likewise") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import scala.jdk.CollectionConverters._
