@@ -38,7 +38,7 @@ object ClusterBench {
     "dd_edit_join",
     // round-12 sixth wave: the fuzzy-index sweep — bucketed index
     // WRITE from one set of executor JVMs, then the probe's
-    // exchange-free bucketed read + pushed bsz filter from others
+    // exchange-free bucketed read + broadcast hot-bucket cap from others
     "dd_incr_fuzzy",
     // round-12 seventh wave: the DSIR pair — the 65536-long λ array
     // rides task closures as a reference object inside the fused
@@ -99,8 +99,7 @@ object ClusterBench {
       // mirror the engine session's shuffle-writer choice (see
       // GraftSession.build) so the multi-JVM numbers measure the same
       // exchange mechanics the bench does
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
+      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
       .config("spark.ui.enabled", "false")
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()

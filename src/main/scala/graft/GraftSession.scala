@@ -9,20 +9,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (native functions + RangePruneRule). */
 object GraftSession {
 
-  /** AQE initial-partition multiplier from SPARK_GRAFT_AQE_INIT_MULT
-    * (default 8 — a measured optimum, see the inline comment below).
-    * Validated here so a malformed or non-positive value fails with a
-    * message naming the env var, not a NumberFormatException (or a
-    * Spark conf-validation error) deep in session construction. */
-  private def aqeInitMult(): Int =
-    sys.env.get("SPARK_GRAFT_AQE_INIT_MULT") match {
-      case None => 8
-      case Some(s) =>
-        val parsed = scala.util.Try(s.trim.toInt).toOption
-        parsed.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
-          s"SPARK_GRAFT_AQE_INIT_MULT must be an integer >= 1, got '$s'"))
-    }
-
   def build(master: String, cores: Int, appName: String = "graft"): SparkSession =
     SparkSession.builder()
       .master(master)
@@ -45,15 +31,13 @@ object GraftSession {
       // family). ×8 at local[32] = 256 initial partitions ≈ 12M
       // records/task at the sf30 minhash shuffle — inside one
       // task's in-memory sort budget. Explicit repartition(n, keys)
-      // pins are untouched. SPARK_GRAFT_AQE_INIT_MULT overrides
-      // (runtime-settable conf; scale tools may re-set it per run).
-      // Re-A/B'd in r14 under the sort shuffle writer (part of the
-      // old ×1 penalty was the bypass-writer tax below): wall now a
-      // wash (×8 105.32 vs ×1 104.59 full suite) but ×1 doubles the
-      // knn family's task CPU (knn_pq 6.65→14.70 CPU-s — the
-      // verify-join starvation r12 recorded). ×8 stays.
+      // pins are untouched. Re-A/B'd in r14 under the sort shuffle
+      // writer (part of the old ×1 penalty was the bypass-writer tax
+      // below): wall now a wash (×8 105.32 vs ×1 104.59 full suite)
+      // but ×1 doubles the knn family's task CPU (knn_pq 6.65→14.70
+      // CPU-s — the verify-join starvation r12 recorded). ×8 stays.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cores * aqeInitMult()).toString)
+        (cores * 8).toString)
       // Shuffle writer: NEVER the bypass-merge writer. Below
       // spark.shuffle.sort.bypassMergeThreshold (default 200) each map
       // task writes one file PER REDUCE PARTITION and concatenates —
@@ -66,10 +50,8 @@ object GraftSession {
       // everywhere: one output file + index per map task regardless of
       // R — also the scale-correct shape (at cluster widths R > 200
       // exchanges never bypassed anyway; fewer, larger files is the
-      // §2.2 discipline). SPARK_GRAFT_BYPASS_THRESHOLD overrides for
-      // A/B on fast-local-disk deployments where bypass could win.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
+      // §2.2 discipline).
+      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
       // ObjectHashAggregate (collect_list/collect_set — the span,
       // frame, LSH-bucket and ED-prefix aggregates) falls back to
       // SORT-based aggregation at 128 distinct keys per task by
@@ -81,7 +63,7 @@ object GraftSession {
       // (maxDocsPerSpan / maxBucketSize ≤ 10^3) and a task holding 64k
       // such groups would need tens of millions of input rows in one
       // partition — far past the partition sizing — before the
-      // fallback engages. SPARK_GRAFT_OBJ_AGG_FALLBACK overrides.
+      // fallback engages.
       // Adversarial case MEASURED (r15, `ScaleProbe objagg 65536
       // 1000`, local[32], 8 GB driver): ONE task holding 64k
       // collect_list groups of 1000 longs each (the documented
@@ -98,7 +80,7 @@ object GraftSession {
       // operators cap at maxDocsPerSpan / maxBucketSize <= 10^3); an
       // uncapped collect_list group breaks the arithmetic above.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "65536"))
+        "65536")
       // let cached plans keep AQE's coalesced output partitioning —
       // off by default, which pins tiny cached frames (LSH signature
       // tables) at the full shuffle-partition count

@@ -74,14 +74,12 @@ object ScaleProbe {
   }
 
   /** `idxgrow <sfDir> [deltaPermille]`: price the three ways a day's
-    * delta reaches the standing MinHash index — the r13 contract's
-    * hidden daily cost vs the r14 lifecycle ops:
-    *   rewrite = writeMinHashIndex over base+delta (O(corpus) text
-    *             re-banded + full index rewritten — what every sweep
-    *             implicitly paid before append existed);
-    *   append  = appendToMinHashIndex(delta) (O(delta) text + one
-    *             histogram scan);
-    *   compact = compactMinHashIndex (O(index 4-long rows), ZERO
+    * delta reaches the standing MinHash index:
+    *   rewrite = writeGrowableMinHashIndex over base+delta (O(corpus)
+    *             text re-banded + full index rewritten);
+    *   append  = appendToMinHashIndex(delta) (O(delta) text and
+    *             rows);
+    *   compact = compactMinHashIndex (O(index 3-long rows), ZERO
     *             text — the occasional fold, amortized across many
     *             appends).
     * Also probes the grown and rewritten indexes and requires equal
@@ -105,14 +103,14 @@ object ScaleProbe {
       .writeGrowableMinHashIndex(base, "doc_id", "text", "probe_mh_grow", buckets))
     val (tAppend, _) = timed(graft.operators.IndexLifecycle
       .appendToMinHashIndex(delta, "doc_id", "text", "probe_mh_grow"))
-    val (tRewrite, _) = timed(graft.operators.Dedup
-      .writeMinHashIndex(merged, "doc_id", "text", "probe_mh_rw", buckets))
+    val (tRewrite, _) = timed(graft.operators.IndexLifecycle
+      .writeGrowableMinHashIndex(merged, "doc_id", "text", "probe_mh_rw", buckets))
     val (tProbeG, nG) = timed(graft.operators.IndexLifecycle
       .probeStandingMinHashIndex(probeSet, "doc_id", "text",
         "probe_mh_grow", merged, threshold = 0.7).count())
-    val (tProbeR, nR) = timed(graft.operators.Dedup
-      .incrementalNearDupPairs(probeSet, "doc_id", "text",
-        spark.table("probe_mh_rw"), merged, threshold = 0.7).count())
+    val (tProbeR, nR) = timed(graft.operators.IndexLifecycle
+      .probeStandingMinHashIndex(probeSet, "doc_id", "text",
+        "probe_mh_rw", merged, threshold = 0.7).count())
     require(nG == nR, s"grown=$nG rewrite=$nR must agree")
     val (tCompact, _) = timed(graft.operators.IndexLifecycle
       .compactMinHashIndex(spark, "probe_mh_grow", buckets))

@@ -111,10 +111,8 @@ object Dedup {
     // bucket) shuffle. (The former shape cached the sig frame to stop
     // projection collapse re-computing it per band; fusing removes the
     // problem instead of caching around it.)
-    val banded = Repartition.forCompute(df).select(col(idCol),
-      posexplode(graft.functions.NativeExprs.minhashBandBucketsNative(
-        col(textCol), shingleK, numHashes, bands, rowsPerBand)))
-      .select(col(idCol), col("pos").as("band"), col("col").as("bucket"))
+    val banded = bandRows(df, idCol, textCol, numHashes, bands, rowsPerBand,
+      shingleK, outIdCol = idCol)
     // cache() + eager count(): the pair frame feeds BOTH the
     // semi-join's probe side and the verify join spine — left lazy,
     // one cold run schedules the whole candidate chain (banding
@@ -567,7 +565,8 @@ object Dedup {
       .select(col(idCol), col("__fp"), col("c.chunk").as("chunk"), col("c.v").as("v"))
 
   /** Persist the dHash fingerprint index of a standing media corpus —
-    * the image analogue of [[writeMinHashIndex]], completing the
+    * the image analogue of
+    * [[IndexLifecycle.writeGrowableMinHashIndex]], completing the
     * incremental family across modalities: exact dedup probes the
     * digest index, fuzzy text probes the band index, image near-dup
     * probes this one. One row per (chunk, v, id, dhash) — 4 rows ×
@@ -575,9 +574,9 @@ object Dedup {
     * so every future probe join reads it exchange-free. The payload
     * bytes are touched exactly once (the fingerprint pass at write
     * time); every daily sweep thereafter runs on fingerprints alone.
-    * No bsz column here: a 16-bit chunk of a 64-bit perceptual hash
-    * has no boilerplate-bucket pathology worth a write-time stat —
-    * the exact Hamming verify in the probe projection is the cap. */
+    * No bucket histogram here: a 16-bit chunk of a 64-bit perceptual
+    * hash has no boilerplate-bucket pathology worth a cap — the exact
+    * Hamming verify in the probe projection is the cap. */
   def writeDHashIndex(media: DataFrame, table: String, buckets: Int): Unit =
     graft.sources.Sinks.writeBucketed(dhashIndexFrame(media),
       table, buckets, Seq("chunk", "v"))
@@ -1168,186 +1167,17 @@ object Dedup {
       .groupBy("digest")
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n"))
 
-  /** Persist a MinHash LSH band index over the standing corpus — the
-    * NEAR-dup analogue of [[writeDigestIndex]], closing the
-    * incremental-sweep family: exact dedup probes the digest index,
-    * fuzzy dedup probes this one. One row per (band, bucket, id) from
-    * the same fused text→band-buckets pass as [[minhashNearDupPairs]]
-    * (bit-identical buckets, so a probe batch hashed with the same
-    * parameters collides exactly where a self-join would), written
-    * BUCKETED by (band, bucket) so every future probe join reads it
-    * exchange-free.
-    *
-    * Each row also carries its bucket's member count `bsz`,
-    * denormalized at write time: the degenerate-bucket cap at probe
-    * time becomes a scan-local pushed filter (`bsz <= cap`) instead of
-    * an aggregate — the daily sweep never re-scans the index to
-    * re-learn which boilerplate buckets to skip, and the cap rides
-    * parquet min/max skipping within each bucket file. Cost: 8
-    * bytes/row on a 3-long row, paid once at write.
-    *
-    * `bsz` is derived by a map-side-combined (band, bucket) count
-    * aggregate broadcast-joined back — NOT a window — so the write
-    * path shuffles the index-sized row set exactly once (the bucketed
-    * write's own clustering; a window's hash partitioning would be a
-    * second full exchange of the band table). Only COLLIDING buckets
-    * (count >= 2) ride the broadcast — singleton buckets coalesce to
-    * bsz = 1 — so the broadcast is bounded by the number of buckets
-    * that hold a candidate pair at all, the same set the probe join
-    * materializes; a corpus where that set is too big to broadcast is
-    * a corpus where dedup output itself is corpus-sized.
-    *
-    * `bsz` is WRITE-SCOPED: it counts members of this write's corpus
-    * only. The index contract is rewrite-on-compaction — to fold a
-    * delta in, re-run writeMinHashIndex over the merged corpus.
-    * APPENDING band rows to the table would leave every bucket's
-    * `bsz` counting only its own batch, so a bucket crossing the cap
-    * across appends gets PARTIALLY filtered (old rows kept, new
-    * dropped, or vice versa) — a shape no probe oracle models.
-    * Between rewrites, sweep deltas against the standing index
-    * ([[incrementalNearDupPairs]]) and against each other.
-    *
-    * Scale: the index is `bands`× the corpus row count but 4 longs
-    * wide — at 100 TB of text it is ~3 orders of magnitude smaller
-    * than the corpus. `buckets` (the table's bucket count) is the
-    * probe join's parallelism, fixed at write time — size it to the
-    * sweep cluster (hundreds+), not to the writer. */
-  def writeMinHashIndex(df: DataFrame, idCol: String, textCol: String,
-                        table: String, buckets: Int,
-                        numHashes: Int = 128, bands: Int = 32,
-                        rowsPerBand: Int = 4, shingleK: Int = 8): Unit = {
-    // cache() the band rows ACROSS the stats aggregate and the write:
-    // the bsz broadcast must materialize before the write's join probe
-    // executes, so without the cache the CPU-dense text→band native
-    // pass runs TWICE per write (once under the stats agg, once under
-    // the insert). The write path is EAGER, so the pin is released in
-    // the same call (try/finally — the surgical-cache policy); the
-    // cached frame is the 3-long index rows, ~3 orders smaller than
-    // the corpus text it replaces re-banding of, and spills to disk
-    // past memory (MEMORY_AND_DISK default).
-    val banded = bandRows(df, idCol, textCol, numHashes, bands, rowsPerBand,
-      shingleK).cache()
-    try graft.sources.Sinks.writeBucketed(
-      withBucketSizes(banded, bucketCounts(banded)),
-      table, buckets, Seq("band", "bucket"))
-    finally { banded.unpersist(false); () }
-  }
-
-  /** The fused text→(band, bucket) rows every MinHash index path
-    * shares — self-join, index write, delta append, and standing-index
-    * probe all hash into the SAME bucket space because they all come
+  /** The fused text→(band, bucket) rows every MinHash path shares —
+    * self-join, index build, delta append, and standing-index probe
+    * all hash into the SAME bucket space because they all come
     * through here. */
-  private[operators] def bandRows(df: DataFrame, idCol: String,
-                                  textCol: String, numHashes: Int,
-                                  bands: Int, rowsPerBand: Int,
-                                  shingleK: Int,
-                                  outIdCol: String = "id"): DataFrame =
+  private[graft] def bandRows(df: DataFrame, idCol: String,
+                              textCol: String, numHashes: Int,
+                              bands: Int, rowsPerBand: Int,
+                              shingleK: Int,
+                              outIdCol: String = "id"): DataFrame =
     Repartition.forCompute(df).select(col(idCol).as(outIdCol),
       posexplode(graft.functions.NativeExprs.minhashBandBucketsNative(
         col(textCol), shingleK, numHashes, bands, rowsPerBand)))
       .select(col(outIdCol), col("pos").as("band"), col("col").as("bucket"))
-
-  /** Candidate `(id_a, id_b)` pairs of the delta band rows `d` (id
-    * column `id_a`) that share a (band, bucket) with the index rows
-    * `idx` (id column `id_b`), verified by exact Jaccard: join the
-    * texts back by id and keep pairs at or above `threshold` — the
-    * shared tail of [[incrementalNearDupPairs]] and the standing-index
-    * probe ([[IndexLifecycle.probeStandingMinHashIndex]]). */
-  private[operators] def verifiedIndexPairs(d: DataFrame, idx: DataFrame,
-                                            delta: DataFrame, idCol: String,
-                                            textCol: String, base: DataFrame,
-                                            threshold: Double,
-                                            shingleK: Int): DataFrame = {
-    val cands = d.join(idx, Seq("band", "bucket"))
-      .select("id_a", "id_b").distinct()
-    val ta = delta.select(col(idCol).as("id_a"), col(textCol).as("__ta"))
-    val tb = base.select(col(idCol).as("id_b"), col(textCol).as("__tb"))
-    cands.join(ta, "id_a").join(tb, "id_b")
-      .select(col("id_a"), col("id_b"), round(
-        graft.functions.NativeExprs.jaccardTextsNative(
-          col("__ta"), col("__tb"), shingleK), 6).as("jaccard"))
-      .where(col("jaccard") >= threshold)
-  }
-
-  /** The frame [[writeMinHashIndex]] writes — exposed so PlanSpec /
-    * Explain can pin its shape: the index-sized (id, band, bucket)
-    * rows flow from the fused banding pass straight into the bucketed
-    * write with NO exchange of their own; the only ShuffleExchange in
-    * this frame carries map-side-combined (band, bucket) partial
-    * COUNTS (collision-bucket-sized), broadcast-joined back as `bsz`.
-    * The single index-sized shuffle of the write path is the bucketed
-    * write's own clustering, added by the insert command. */
-  def minhashIndexFrame(df: DataFrame, idCol: String, textCol: String,
-                        numHashes: Int = 128, bands: Int = 32,
-                        rowsPerBand: Int = 4, shingleK: Int = 8): DataFrame = {
-    val banded = bandRows(df, idCol, textCol, numHashes, bands, rowsPerBand,
-      shingleK)
-    withBucketSizes(banded, bucketCounts(banded))
-  }
-
-  /** `(band, bucket, bsz)`: the member count of every bucket of the
-    * band rows `rows` (also a growable index's histogram). */
-  private[operators] def bucketCounts(rows: DataFrame): DataFrame =
-    rows.groupBy("band", "bucket").agg(count(lit(1)).as("bsz"))
-
-  /** The per-row `bsz` law of every MinHash index write (build and
-    * compaction; why it is shaped so: [[writeMinHashIndex]]), given
-    * the [[bucketCounts]] of `rows`. */
-  private[operators] def withBucketSizes(rows: DataFrame,
-                                         counts: DataFrame): DataFrame = {
-    val sizes = counts.where(col("bsz") >= 2)
-      .select(col("band"), col("bucket"), col("bsz").as("__bsz"))
-    rows.join(broadcast(sizes), Seq("band", "bucket"), "left")
-      .select(col("id"), col("band"), col("bucket"),
-        coalesce(col("__bsz"), lit(1L)).as("bsz"))
-  }
-
-  /** Near-dup pairs of a delta batch vs a persisted
-    * [[writeMinHashIndex]] table: every (delta, base) pair with exact
-    * shingle Jaccard >= `threshold`, found through the index's band
-    * buckets — the incremental-ingest form of [[minhashNearDupPairs]],
-    * costing O(delta × collision rate) per sweep instead of another
-    * full-corpus self-join. Recall is the banding S-curve of the
-    * index's parameters (pass the SAME `numHashes`/`bands`/
-    * `rowsPerBand`/`shingleK` the index was written with — the probe
-    * must hash into the index's bucket space); precision is 1.0
-    * (exact verification).
-    *
-    * Plan, and why each stage stays 100 TB-shaped:
-    *  1. ONE fused native pass bands the DELTA (delta-sized, small by
-    *     definition of a sweep).
-    *  2. The candidate join probes the index on (band, bucket): the
-    *     index side is exchange-free under its bucket layout, only
-    *     delta band rows shuffle. The degenerate-bucket cap is the
-    *     pushed filter `bsz <= maxBucketSize` on the index scan —
-    *     write-time stats, zero probe-time aggregation — bounding any
-    *     one bucket's expansion at (delta-in-bucket × cap).
-    *  3. Candidates distinct on (id_a, id_b) — candidate-sized, the
-    *     irreducible LSH cost (a pair collides in ≤ `bands` buckets).
-    *  4. Exact verify joins the TEXTS back by id: the delta side is
-    *     delta-sized; the base side is an id-equijoin against the
-    *     standing corpus — persist the corpus bucketed by id and the
-    *     sweep's only corpus-sized exchange disappears too.
-    *
-    * Output: `(id_a, id_b, jaccard)` with `id_a` from the delta and
-    * `id_b` from the indexed base corpus. Ids are CALLER-scoped: the
-    * two sides are assumed disjoint corpora (the incremental
-    * contract — the delta is not yet in the index); if a delta doc
-    * was already appended, its self-pair comes back at jaccard 1.0
-    * like any other near-dup, which is NOT filtered here because an
-    * id collision across genuinely different corpora must not drop a
-    * real pair. */
-  def incrementalNearDupPairs(delta: DataFrame, idCol: String, textCol: String,
-                              index: DataFrame, base: DataFrame,
-                              threshold: Double, numHashes: Int = 128,
-                              bands: Int = 32, rowsPerBand: Int = 4,
-                              shingleK: Int = 8,
-                              maxBucketSize: Int = 1000): DataFrame = {
-    val d = bandRows(delta, idCol, textCol, numHashes, bands, rowsPerBand,
-      shingleK, outIdCol = "id_a")
-    val idx = index.where(col("bsz") <= maxBucketSize)
-      .select(col("band"), col("bucket"), col("id").as("id_b"))
-    verifiedIndexPairs(d, idx, delta, idCol, textCol, base, threshold,
-      shingleK)
-  }
 }

@@ -5,15 +5,16 @@ import org.apache.spark.sql.functions._
 import graft.sources.Sinks
 
 /** Multi-day lifecycle of the standing dedup indexes: build once,
-  * APPEND deltas daily, compact occasionally — closing the gap where
-  * the daily incremental sweep silently depended on an O(corpus)
-  * full-index rewrite to fold each day's survivors in
-  * (rewrite-on-compaction was the r13 MinHash index contract, because
-  * that index denormalizes a per-row bucket count `bsz` that appends
-  * would leave generation-scoped and therefore cap-inconsistent).
+  * APPEND deltas daily, compact occasionally.
   *
-  * The growable MinHash index keeps the band rows append-only and
-  * moves bucket-count truth OUT of the rows into two side tables,
+  * The MinHash index is the NEAR-dup analogue of
+  * [[Dedup.writeDigestIndex]]: one row `(id, band, bucket)` per
+  * (document, band) from the same fused text→band-buckets pass as
+  * [[Dedup.minhashNearDupPairs]] (bit-identical buckets, so a probe
+  * batch hashed with the same parameters collides exactly where a
+  * self-join would), written BUCKETED by (band, bucket) so every
+  * probe join reads it exchange-free. The rows are append-only and
+  * carry no statistics; bucket-count truth lives in two side tables,
   * LSM-style:
   *
   *  - `<t>_hist` — the generation-0 FULL bucket histogram
@@ -25,42 +26,42 @@ import graft.sources.Sinks
   *    touched buckets (O(delta) rows).
   *
   * A bucket's true current size is `hist ⊕ Σ statlog`, so the
-  * degenerate-bucket cap at probe time is EXACT across generations —
-  * including the pathology that killed naive appends: a bucket
-  * crossing the cap only across appends is dropped whole, never
-  * partially (per-row `bsz` is generation-scoped and advisory on a
-  * grown index; the probe here never reads it).
+  * degenerate-bucket cap at probe time is EXACT across generations: a
+  * bucket crossing the cap only across appends is dropped whole,
+  * never partially.
   *
-  * Cost model at 100 TB (why each op is shaped this way):
-  *  - append: band the delta (O(delta) text), ONE column-pruned scan
-  *    of `_hist` to fetch old counts of touched buckets (no shuffle —
-  *    the touched set broadcasts), O(delta) appended rows + log rows.
-  *    The probe already scans the whole index every sweep, so a
-  *    3-long-column histogram scan per append is strictly cheaper
-  *    than what every probe pays — and ~3 orders of magnitude cheaper
-  *    than re-banding corpus text.
-  *  - probe: identical to [[Dedup.incrementalNearDupPairs]] except
-  *    the cap comes from `hist ⊕ log` as a broadcast anti-join on the
-  *    DELTA band rows (hot buckets number at most index_rows / cap —
-  *    bounded far below the index, same argument as the write-path
-  *    stats broadcast).
-  *  - compact: re-count + rewrite from the 4-long index rows only —
-  *    ZERO text; folds the per-append bucket files and the statlog,
-  *    restoring per-row bsz = true count. ONE routine does it for
-  *    both regimes, differing only in the rows it recounts and the
-  *    files it carries: the touched file-buckets' files, every other
-  *    file carried forward by rename (O(touched)), or — after a
-  *    crashed append, or when every file-bucket was touched — the
-  *    whole bucketed table with nothing carried (O(index)).
+  * Scale: the index is `bands`× the corpus row count but 3 longs
+  * wide — at 100 TB of text it is ~3 orders of magnitude smaller
+  * than the corpus. `buckets` (the table's bucket count) is the probe
+  * join's parallelism, fixed at build time — size it to the sweep
+  * cluster (hundreds+), not to the writer. Cost per op at that scale:
+  *  - build: ONE text→band pass; the rows' only index-sized shuffle
+  *    is the bucketed write's own clustering; the histogram is an
+  *    exchange-free recount of the written rows.
+  *  - append: band the delta (O(delta) text), O(delta) appended rows
+  *    + O(delta) log rows; the index and histogram are not read.
+  *  - probe: band the delta, anti-join the hot buckets of
+  *    `hist ⊕ log` onto the DELTA band rows (a broadcast: hot buckets
+  *    number at most index_rows / cap), then the candidate join with
+  *    the index side exchange-free ([[probeStandingMinHashIndex]]).
+  *  - compact: re-count + rewrite from the 3-long index rows only —
+  *    ZERO text; folds the per-append bucket files and the statlog.
+  *    ONE routine does it for both regimes, differing only in the
+  *    rows it recounts and the files it carries: the touched
+  *    file-buckets' files, every other file carried forward by rename
+  *    (O(touched)), or — after a crashed append, or when every
+  *    file-bucket was touched — the whole bucketed table with nothing
+  *    carried (O(index)).
   *
   * Durability: appends write rows THEN log (a crash between leaves the
   * log undercounting — [[minhashIndexFsck]] detects, [[compactMinHashIndex]]
-  * repairs); table swaps follow the two-rename law
-  * ([[Sinks.swapInTable]]) with [[Sinks.recoverSwappedTable]] run at
-  * every entry point. Single-writer per index (maintenance-window
-  * contract), readers any time.
+  * repairs, as it does a build that crashed before its histogram);
+  * table swaps follow the two-rename law ([[Sinks.swapInTable]]) with
+  * [[Sinks.recoverSwappedTable]] run at every entry point.
+  * Single-writer per index (maintenance-window contract), readers any
+  * time.
   *
-  * The dHash and digest indexes carry no denormalized stats, so their
+  * The dHash and digest indexes carry no bucket counts, so their
   * appends are plain bucketed inserts ([[appendToDHashIndex]],
   * [[appendToDigestIndex]]). */
 object IndexLifecycle {
@@ -68,22 +69,36 @@ object IndexLifecycle {
   private def hist(table: String) = s"${table}_hist"
   private def statlog(table: String) = s"${table}_statlog"
 
-  /** Build the growable index: the standard [[Dedup.writeMinHashIndex]]
-    * band table PLUS the generation-0 full histogram, derived by
-    * re-counting the just-written 3-long rows (exchange-free groupBy
-    * under the bucket layout — the text is banded exactly once). Any
-    * pre-existing statlog is dropped: this is generation 0. */
+  /** Refuse to read or grow an index whose histogram is missing (a
+    * build that crashed between its two writes), naming the repair. */
+  private def requireHist(spark: SparkSession, table: String,
+                          op: String): Unit =
+    require(spark.catalog.tableExists(hist(table)),
+      s"$op($table): histogram table ${hist(table)} is missing; " +
+        s"run compactMinHashIndex($table) to rebuild it")
+
+  /** Build the MinHash index over the standing corpus: the band rows
+    * of `df` written bucketed by (band, bucket), then the
+    * generation-0 full histogram, re-counted from the just-written
+    * rows (exchange-free groupBy under the bucket layout — the text
+    * is banded exactly once). Any pre-existing statlog is dropped:
+    * this is generation 0. */
   def writeGrowableMinHashIndex(df: DataFrame, idCol: String, textCol: String,
                                 table: String, buckets: Int,
                                 numHashes: Int = 128, bands: Int = 32,
                                 rowsPerBand: Int = 4, shingleK: Int = 8): Unit = {
     val spark = df.sparkSession
-    Dedup.writeMinHashIndex(df, idCol, textCol, table, buckets,
-      numHashes, bands, rowsPerBand, shingleK)
-    Sinks.writeBucketed(Dedup.bucketCounts(spark.table(table)), hist(table),
+    Sinks.writeBucketed(Dedup.bandRows(df, idCol, textCol, numHashes, bands,
+      rowsPerBand, shingleK), table, buckets, Seq("band", "bucket"))
+    Sinks.writeBucketed(bucketCounts(spark.table(table)), hist(table),
       buckets, Seq("band", "bucket"))
     Sinks.dropTableAndLocation(spark, statlog(table))
   }
+
+  /** `(band, bucket, bsz)`: the member count of every bucket of the
+    * band rows `rows` (the histogram, and an append's log rows). */
+  private def bucketCounts(rows: DataFrame): DataFrame =
+    rows.groupBy("band", "bucket").agg(count(lit(1)).as("bsz"))
 
   /** 0-row frame with the statlog's exact shape — the no-appends-yet
     * stand-in (`band` int, `bucket` long, the count column long). An
@@ -104,11 +119,9 @@ object IndexLifecycle {
     else emptyLog(spark, "n")
 
   /** Fold a day's delta into the standing index WITHOUT rewriting it:
-    * O(delta) appended band rows + O(delta) statlog rows + one
-    * column-pruned histogram scan. Appended rows carry per-row `bsz`
-    * = the bucket's true total AS OF THIS APPEND (write-time truth,
-    * advisory thereafter — the probe derives the cap from hist ⊕ log,
-    * never from row bsz on a grown index). */
+    * O(delta) appended band rows + O(delta) statlog rows (the delta's
+    * own (band, bucket) counts). cache(): the band rows feed both
+    * writes, so the text→band pass runs once. */
   def appendToMinHashIndex(delta: DataFrame, idCol: String, textCol: String,
                            table: String, numHashes: Int = 128,
                            bands: Int = 32, rowsPerBand: Int = 4,
@@ -116,55 +129,23 @@ object IndexLifecycle {
     val spark = delta.sparkSession
     Sinks.recoverSwappedTable(spark, table)
     Sinks.recoverSwappedTable(spark, hist(table))
+    requireHist(spark, table, "appendToMinHashIndex")
     val d = Dedup.bandRows(delta, idCol, textCol, numHashes, bands,
       rowsPerBand, shingleK).cache()
     try {
-      // this append's touched buckets and their delta counts —
-      // O(delta·bands) rows, the broadcast bound of every join below
-      // (a sweep's delta is small by definition; a "delta" too big to
-      // broadcast its bucket histogram belongs in a build, not an
-      // append)
-      val dCounts = d.groupBy("band", "bucket")
-        .agg(count(lit(1)).as("dn")).cache()
-      try {
-        val touched = dCounts.select("band", "bucket")
-        // old totals for the touched buckets: gen-0 histogram counts
-        // (one 3-long-column scan, broadcast join, no shuffle) plus
-        // prior appends' partials from the (small) statlog
-        val oldHist = spark.table(hist(table))
-          .join(broadcast(touched), Seq("band", "bucket"))
-          .select(col("band"), col("bucket"), col("bsz").as("__h"))
-        val oldLog = statlogRows(spark, table)
-          .join(broadcast(touched), Seq("band", "bucket"))
-          .groupBy("band", "bucket").agg(sum("n").as("__l"))
-        val merged = dCounts
-          .join(oldHist, Seq("band", "bucket"), "left")
-          .join(oldLog, Seq("band", "bucket"), "left")
-          .select(col("band"), col("bucket"), col("dn"),
-            (col("dn") + coalesce(col("__h"), lit(0L))
-              + coalesce(col("__l"), lit(0L))).as("bsz"))
-          .cache()
-        try {
-          // rows FIRST, then the log: a crash between the two leaves
-          // the log undercounting actual rows — detectable
-          // (minhashIndexFsck) and repairable (compactMinHashIndex).
-          // The reverse order would overcount silently.
-          Sinks.appendBucketed(
-            d.join(broadcast(merged.select("band", "bucket", "bsz")),
-                Seq("band", "bucket"))
-              .select("id", "band", "bucket", "bsz"),
-            table)
-          merged.select(col("band"), col("bucket"), col("dn").as("n"))
-            .write.mode("append").saveAsTable(statlog(table))
-        } finally { merged.unpersist(false); () }
-      } finally { dCounts.unpersist(false); () }
+      // rows FIRST, then the log: a crash between the two leaves the
+      // log undercounting actual rows — detectable (minhashIndexFsck)
+      // and repairable (compactMinHashIndex). The reverse order would
+      // overcount silently.
+      Sinks.appendBucketed(d, table)
+      bucketCounts(d).withColumnRenamed("bsz", "n")
+        .write.mode("append").saveAsTable(statlog(table))
     } finally { d.unpersist(false); () }
   }
 
   /** The buckets whose TRUE current size (gen-0 histogram ⊕ statlog)
-    * exceeds `cap` — the exact multi-generation form of the per-row
-    * `bsz > cap` test. A bucket absent from the histogram is covered
-    * by the log-only branch (`Σn > cap` alone); one present in both is
+    * exceeds `cap`. A bucket absent from the histogram is covered by
+    * the log-only branch (`Σn > cap` alone); one present in both is
     * covered by the joined branch (hist.bsz >= 1 there, so the
     * log-only row it may also emit is a harmless duplicate — the
     * result is only ever the right side of an anti-join). */
@@ -179,16 +160,45 @@ object IndexLifecycle {
     joined.union(logSum.where(col("__ln") > cap).select("band", "bucket"))
   }
 
-  /** Probe a delta against the GROWN standing index — the multi-day
-    * form of [[Dedup.incrementalNearDupPairs]]: identical candidate
-    * join and exact-Jaccard verify, but the degenerate-bucket cap is
-    * [[minhashHotBuckets]] anti-joined onto the delta's band rows
-    * (dropping a hot bucket's delta rows drops the bucket's pairs
-    * entirely — the index side streams through the equijoin
-    * unmatched), so a bucket that crossed the cap ACROSS appends is
-    * handled exactly as a full rewrite would. `base` supplies the
-    * verify texts of the standing corpus (day-1 ∪ every appended
-    * delta). */
+  /** Near-dup pairs of a delta batch vs the standing index: every
+    * (delta, base) pair with exact shingle Jaccard >= `threshold`,
+    * found through the index's band buckets — the incremental-ingest
+    * form of [[Dedup.minhashNearDupPairs]], costing O(delta ×
+    * collision rate) per sweep instead of another full-corpus
+    * self-join. Recall is the banding S-curve of the index's
+    * parameters (pass the SAME `numHashes`/`bands`/`rowsPerBand`/
+    * `shingleK` the index was built with — the probe must hash into
+    * the index's bucket space); precision is 1.0 (exact verification).
+    *
+    * Plan, and why each stage stays 100 TB-shaped:
+    *  1. ONE fused native pass bands the DELTA (delta-sized, small by
+    *     definition of a sweep).
+    *  2. The degenerate-bucket cap: [[minhashHotBuckets]] (buckets
+    *     whose `hist ⊕ log` size exceeds `maxBucketSize`) anti-joined
+    *     onto the delta's band rows. Dropping a hot bucket's delta
+    *     rows drops the bucket's pairs entirely — the index side
+    *     streams through the equijoin unmatched — so a bucket that
+    *     crossed the cap ACROSS appends is capped exactly as on a
+    *     fresh build of the merged corpus.
+    *  3. The candidate join probes the index on (band, bucket): the
+    *     index side is exchange-free under its bucket layout, only
+    *     delta band rows shuffle.
+    *  4. Candidates distinct on (id_a, id_b) — candidate-sized, the
+    *     irreducible LSH cost (a pair collides in ≤ `bands` buckets).
+    *  5. Exact verify joins the TEXTS back by id: the delta side is
+    *     delta-sized; the base side is an id-equijoin against the
+    *     standing corpus — persist the corpus bucketed by id and the
+    *     sweep's only corpus-sized exchange disappears too.
+    *
+    * `base` supplies the verify texts of the standing corpus (the
+    * build ∪ every appended delta). Output: `(id_a, id_b, jaccard)`
+    * with `id_a` from the delta and `id_b` from the indexed corpus.
+    * Ids are CALLER-scoped: the two sides are assumed disjoint (the
+    * incremental contract — the delta is not yet in the index); if a
+    * delta doc was already appended, its self-pair comes back at
+    * jaccard 1.0 like any other near-dup, which is NOT filtered here
+    * because an id collision across genuinely different corpora must
+    * not drop a real pair. */
   def probeStandingMinHashIndex(delta: DataFrame, idCol: String,
                                 textCol: String, table: String,
                                 base: DataFrame, threshold: Double,
@@ -198,19 +208,27 @@ object IndexLifecycle {
     val spark = delta.sparkSession
     Sinks.recoverSwappedTable(spark, table)
     Sinks.recoverSwappedTable(spark, hist(table))
+    requireHist(spark, table, "probeStandingMinHashIndex")
     val d = Dedup.bandRows(delta, idCol, textCol, numHashes, bands,
         rowsPerBand, shingleK, outIdCol = "id_a")
       .join(broadcast(minhashHotBuckets(spark, table, maxBucketSize)),
         Seq("band", "bucket"), "left_anti")
-    val idx = spark.table(table)
-      .select(col("band"), col("bucket"), col("id").as("id_b"))
-    Dedup.verifiedIndexPairs(d, idx, delta, idCol, textCol, base,
-      threshold, shingleK)
+    val cands = d.join(spark.table(table)
+        .select(col("band"), col("bucket"), col("id").as("id_b")),
+        Seq("band", "bucket"))
+      .select("id_a", "id_b").distinct()
+    val ta = delta.select(col(idCol).as("id_a"), col(textCol).as("__ta"))
+    val tb = base.select(col(idCol).as("id_b"), col(textCol).as("__tb"))
+    cands.join(ta, "id_a").join(tb, "id_b")
+      .select(col("id_a"), col("id_b"), round(
+        graft.functions.NativeExprs.jaccardTextsNative(
+          col("__ta"), col("__tb"), shingleK), 6).as("jaccard"))
+      .where(col("jaccard") >= threshold)
   }
 
   /** Fold the appended generations down: re-count buckets from the
-    * index's own 4-long rows (text is NEVER re-banded), rewrite rows
-    * with per-row bsz = true count, refresh the histogram, and reset
+    * index's own 3-long rows (text is NEVER re-banded), rewrite the
+    * rows into one file per bucket, refresh the histogram, and reset
     * the statlog.
     *
     * Compaction cost is ∝ TOUCHED buckets, not index size (§2.4/§6):
@@ -224,22 +242,22 @@ object IndexLifecycle {
     * Correctness of the pruning: all rows of a (band, bucket) hash to
     * ONE file-bucket, so recounting the touched file-buckets' rows
     * yields the exact new count of every bucket living there, and an
-    * untouched file-bucket's rows kept their build-time bsz = still
-    * the true count. The histogram is bucketed by the same
-    * (band, bucket) spec, so its files prune identically: new hist =
-    * recount of touched file-buckets ∪ carried hist files. File names
-    * carry the TABLE's bucket ids, so a `buckets` other than the
-    * table's bucket count (which would pick the wrong files) is refused.
+    * untouched file-bucket's histogram rows are still the true count.
+    * The histogram is bucketed by the same (band, bucket) spec, so its
+    * files prune identically: new hist = recount of touched
+    * file-buckets ∪ carried hist files. File names carry the TABLE's
+    * bucket ids, so a `buckets` other than the table's bucket count
+    * (which would pick the wrong files) is refused.
     *
     * The partial path requires a CONSISTENT index ([[minhashIndexFsck]]
     * — checked first): a crashed append leaves rows the statlog never
     * logged, whose buckets the touched set would miss, so the repair
-    * path (fsck false) falls back to the full recount + rewrite of
-    * every file-bucket, as does a compaction that touched every
-    * file-bucket; both regimes run [[rewrite]]. Swaps are the
-    * two-rename law; the statlog reset comes LAST, so the one crash
-    * window (new hist + old log) OVERcounts — conservative for the
-    * cap, flagged by fsck, fixed by re-running compact. */
+    * path (fsck false, or no histogram at all) falls back to the full
+    * recount + rewrite of every file-bucket, as does a compaction that
+    * touched every file-bucket; both regimes run [[rewrite]]. Swaps
+    * are the two-rename law; the statlog reset comes LAST, so the one
+    * crash window (new hist + old log) OVERcounts — conservative for
+    * the cap, flagged by fsck, fixed by re-running compact. */
   def compactMinHashIndex(spark: SparkSession, table: String,
                           buckets: Int): Unit = {
     Sinks.recoverSwappedTable(spark, table)
@@ -254,8 +272,8 @@ object IndexLifecycle {
       else consistentTouched(spark, table, buckets)
     touched match {
       case Some(fbs) if fbs.isEmpty =>
-        // consistent and nothing appended since the last fold — per-row
-        // bsz and the histogram are already write-time truth
+        // consistent and nothing appended since the last fold — the
+        // histogram is already the true count
         Sinks.dropTableAndLocation(spark, statlog(table))
       case Some(fbs) if fbs.length < buckets =>
         val (idxTouched, idxCarry) = splitFiles(spark, table, fbs.toSet)
@@ -266,7 +284,6 @@ object IndexLifecycle {
         rewrite(spark, table, buckets, spark.read.parquet(idxTouched: _*),
           idxCarry, histCarry)
       case _ =>
-        // the bucketed scan keeps the recount exchange-free
         rewrite(spark, table, buckets, spark.table(table), Nil, Nil)
     }
   }
@@ -311,38 +328,34 @@ object IndexLifecycle {
     (touch.map(_.getPath.toString), carry.map(_.getPath.getName))
   }
 
-  /** The one compaction body: recount `source`'s rows, write them with
-    * per-row bsz and the recount as the new histogram (the bsz join is
-    * 1:1, so Σ hist.bsz == count(rows) by construction), declare the
-    * carried files, swap both tables in, reset the statlog. cache():
-    * the recount feeds both writes; bucket-count-sized. */
+  /** The one compaction body: write `source`'s rows as the new
+    * generation, recount the written rows as the new histogram (so
+    * Σ hist.bsz == count(rows) by construction; the bucketed scan
+    * keeps the recount exchange-free), declare the carried files, swap
+    * both tables in, reset the statlog. */
   private def rewrite(spark: SparkSession, table: String, buckets: Int,
                       source: DataFrame, idxCarry: Seq[String],
                       histCarry: Seq[String]): Unit = {
-    val rows = source.select("id", "band", "bucket")
-    val recount = Dedup.bucketCounts(rows).cache()
-    try {
-      Sinks.writeBucketed(Dedup.withBucketSizes(rows, recount),
-        s"${table}_cnew", buckets, Seq("band", "bucket"))
-      Sinks.writeBucketed(recount, s"${table}_hist_cnew", buckets,
-        Seq("band", "bucket"))
-      // declare the carried generations BEFORE the swaps — the swap
-      // completes the carry (or recovery does, after a crash)
-      if (idxCarry.nonEmpty)
-        Sinks.writeCarryManifest(spark, s"${table}_cnew", idxCarry)
-      if (histCarry.nonEmpty)
-        Sinks.writeCarryManifest(spark, s"${table}_hist_cnew", histCarry)
-      Sinks.swapInTable(spark, s"${table}_cnew", table)
-      Sinks.swapInTable(spark, s"${table}_hist_cnew", hist(table))
-      Sinks.dropTableAndLocation(spark, statlog(table))
-    } finally { recount.unpersist(false); () }
+    Sinks.writeBucketed(source.select("id", "band", "bucket"),
+      s"${table}_cnew", buckets, Seq("band", "bucket"))
+    Sinks.writeBucketed(bucketCounts(spark.table(s"${table}_cnew")),
+      s"${table}_hist_cnew", buckets, Seq("band", "bucket"))
+    // declare the carried generations BEFORE the swaps — the swap
+    // completes the carry (or recovery does, after a crash)
+    if (idxCarry.nonEmpty)
+      Sinks.writeCarryManifest(spark, s"${table}_cnew", idxCarry)
+    if (histCarry.nonEmpty)
+      Sinks.writeCarryManifest(spark, s"${table}_hist_cnew", histCarry)
+    Sinks.swapInTable(spark, s"${table}_cnew", table)
+    Sinks.swapInTable(spark, s"${table}_hist_cnew", hist(table))
+    Sinks.dropTableAndLocation(spark, statlog(table))
   }
 
   /** Consistency check: `Σ hist.bsz + Σ statlog.n == count(index
-    * rows)` — false exactly when a crash split an append (rows
-    * without log) or a compaction (new hist with stale log). One
-    * action: the compaction pre-check with a single file-bucket.
-    * Repair: [[compactMinHashIndex]]. */
+    * rows)` — false exactly when a crash split a build (rows without
+    * hist), an append (rows without log) or a compaction (new hist
+    * with stale log). One action: the compaction pre-check with a
+    * single file-bucket. Repair: [[compactMinHashIndex]]. */
   def minhashIndexFsck(spark: SparkSession, table: String): Boolean =
     consistentTouched(spark, table, 1).isDefined
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
-import graft.operators.{Dedup, Multimodal, Similarity}
+import graft.operators.{Dedup, IndexLifecycle, Multimodal, Similarity}
 
 /** Training-data-pipeline queries over `documents` and `embeddings`:
   * text analysis, deduplication, similarity search, multimodal
@@ -622,8 +622,8 @@ object PipelineQueries {
 
     // Incremental FUZZY dedup: the near-dup analogue of
     // dd_incremental — the 80% "standing corpus" is persisted as a
-    // MinHash band-bucket index (bucketed by (band, bucket), per-row
-    // bucket counts for the scan-local cap), and the 20% "delta"
+    // MinHash band-bucket index (bucketed by (band, bucket), bucket
+    // counts in its histogram for the cap), and the 20% "delta"
     // probes it: index side exchange-free, exact-Jaccard verified.
     // Same recall argument as dd_minhash_lsh (32×4 bands at j >= 0.9
     // true pairs: miss ~1e-15), so the gate provably equals the
@@ -631,46 +631,47 @@ object PipelineQueries {
     "dd_incr_fuzzy" -> ((s, dir) => {
       val d = docs(s, dir)
       val bkt = graft.operators.Sampling.hashBucket(col("doc_id"))
-      Dedup.writeMinHashIndex(d.where(bkt < 800), "doc_id", "text",
-        GateTables.name("g_mh_idx"), 8)
-      Dedup.incrementalNearDupPairs(d.where(bkt >= 800), "doc_id", "text",
-        s.table(GateTables.name("g_mh_idx")), d.where(bkt < 800), threshold = 0.7)
+      val t = GateTables.name("g_mh_idx")
+      IndexLifecycle.writeGrowableMinHashIndex(d.where(bkt < 800), "doc_id",
+        "text", t, 8)
+      IndexLifecycle.probeStandingMinHashIndex(d.where(bkt >= 800), "doc_id",
+        "text", t, d.where(bkt < 800), threshold = 0.7)
     }),
 
     // The multi-day index LIFECYCLE: day-1 build (hash split < 600),
     // day-2 APPEND (600..799) — O(delta), no index rewrite — day-3
-    // probe (>= 800) against the GROWN index. Result must equal the
-    // full-rewrite path exactly (same bucket space by construction;
-    // cap truth = gen-0 histogram (+) statlog), so the gate shares
-    // dd_incr_fuzzy's brute-force cross-Jaccard oracle: delta >= 800
-    // vs base < 800, however the base was accumulated.
+    // probe (>= 800) against the GROWN index. Result must equal a
+    // fresh build over the merged base exactly (same bucket space by
+    // construction; cap truth = gen-0 histogram (+) statlog), so the
+    // gate shares dd_incr_fuzzy's brute-force cross-Jaccard oracle:
+    // delta >= 800 vs base < 800, however the base was accumulated.
     "pipe_idx_lifecycle" -> ((s, dir) => {
       val d = docs(s, dir)
       val bkt = graft.operators.Sampling.hashBucket(col("doc_id"))
       val t = GateTables.name("g_mh_grow")
-      graft.operators.IndexLifecycle.writeGrowableMinHashIndex(
+      IndexLifecycle.writeGrowableMinHashIndex(
         d.where(bkt < 600), "doc_id", "text", t, 8)
-      graft.operators.IndexLifecycle.appendToMinHashIndex(
+      IndexLifecycle.appendToMinHashIndex(
         d.where(bkt >= 600 && bkt < 800), "doc_id", "text", t)
-      graft.operators.IndexLifecycle.probeStandingMinHashIndex(
+      IndexLifecycle.probeStandingMinHashIndex(
         d.where(bkt >= 800), "doc_id", "text", t,
         d.where(bkt < 800), threshold = 0.7)
     }),
 
     // Day-4 of the lifecycle: COMPACT the grown index (re-count from
-    // the 4-long rows only — text is never re-banded; statlog folds
-    // away, per-row bsz true again), then probe. Same oracle as the
+    // the 3-long rows only — text is never re-banded; the statlog
+    // folds into the histogram), then probe. Same oracle as the
     // lifecycle gate: compaction must be result-invisible.
     "pipe_idx_compact" -> ((s, dir) => {
       val d = docs(s, dir)
       val bkt = graft.operators.Sampling.hashBucket(col("doc_id"))
       val t = GateTables.name("g_mh_grow2")
-      graft.operators.IndexLifecycle.writeGrowableMinHashIndex(
+      IndexLifecycle.writeGrowableMinHashIndex(
         d.where(bkt < 600), "doc_id", "text", t, 8)
-      graft.operators.IndexLifecycle.appendToMinHashIndex(
+      IndexLifecycle.appendToMinHashIndex(
         d.where(bkt >= 600 && bkt < 800), "doc_id", "text", t)
-      graft.operators.IndexLifecycle.compactMinHashIndex(s, t, 8)
-      graft.operators.IndexLifecycle.probeStandingMinHashIndex(
+      IndexLifecycle.compactMinHashIndex(s, t, 8)
+      IndexLifecycle.probeStandingMinHashIndex(
         d.where(bkt >= 800), "doc_id", "text", t,
         d.where(bkt < 800), threshold = 0.7)
     }),
@@ -687,9 +688,10 @@ object PipelineQueries {
       val bkt = graft.operators.Sampling.hashBucket(col("doc_id"))
       val base = d.where(bkt < 800)
       val delta = d.where(bkt >= 800)
-      Dedup.writeMinHashIndex(base, "doc_id", "text", GateTables.name("g_mh_idx2"), 8)
-      val crossDup = Dedup.incrementalNearDupPairs(delta, "doc_id", "text",
-          s.table(GateTables.name("g_mh_idx2")), base, threshold = 0.7)
+      val t = GateTables.name("g_mh_idx2")
+      IndexLifecycle.writeGrowableMinHashIndex(base, "doc_id", "text", t, 8)
+      val crossDup = IndexLifecycle.probeStandingMinHashIndex(delta, "doc_id",
+          "text", t, base, threshold = 0.7)
         .select(col("id_a").as("doc_id")).distinct()
       // cache(): fresh feeds the within-delta banding, the verify
       // text joins, and the survivor anti-join — uncached, each

@@ -303,15 +303,14 @@ class BucketingSpec extends AnyFunSuite {
   }
 
   test("incremental fuzzy probe reads the minhash index exchange-free") {
-    import graft.operators.Dedup
+    import graft.operators.IndexLifecycle
     val dir = "/root/testdata/sf0.001"
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    Dedup.writeMinHashIndex(docs.where(col("doc_id") % 2 === 0),
+    IndexLifecycle.writeGrowableMinHashIndex(docs.where(col("doc_id") % 2 === 0),
       "doc_id", "text", "spec_mh_idx", 4)
-    val probe = Dedup.incrementalNearDupPairs(
-      docs.where(col("doc_id") % 2 === 1), "doc_id", "text",
-      spark.table("spec_mh_idx"), docs.where(col("doc_id") % 2 === 0),
-      threshold = 0.7)
+    val probe = IndexLifecycle.probeStandingMinHashIndex(
+      docs.where(col("doc_id") % 2 === 1), "doc_id", "text", "spec_mh_idx",
+      docs.where(col("doc_id") % 2 === 0), threshold = 0.7)
     val plan = probe.queryExecution.executedPlan.toString
     // the candidate join must be sort-merge on (band, bucket) with the
     // INDEX side exchange-free under its bucket layout — exactly ONE
@@ -321,9 +320,6 @@ class BucketingSpec extends AnyFunSuite {
       .findAllIn(plan).size
     assert(bbExchanges == 1, s"expected 1 (band,bucket) exchange, got $bbExchanges:\n$plan")
     assert(plan.contains("Bucketed: true"), plan)
-    // the degenerate-bucket cap is a PUSHED scan filter on the index's
-    // denormalized bsz column, not a post-scan aggregate
-    assert(plan.contains("PushedFilters: [IsNotNull(bsz), LessThanOrEqual(bsz,1000)"), plan)
     // and the probe is sane: every emitted pair is cross-parity
     val rows = probe.collect()
     rows.foreach { r =>
@@ -365,7 +361,7 @@ class BucketingSpec extends AnyFunSuite {
   }
 
   test("growable MinHash index: build->append->probe equals full rewrite; cap crosses appends exactly; compact folds") {
-    import graft.operators.{Dedup, IndexLifecycle}
+    import graft.operators.IndexLifecycle
     import spark.implicits._
     val rnd = new scala.util.Random(41)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
@@ -394,38 +390,27 @@ class BucketingSpec extends AnyFunSuite {
     IndexLifecycle.writeGrowableMinHashIndex(d1, "doc_id", "text", t, 4)
     IndexLifecycle.appendToMinHashIndex(d2, "doc_id", "text", t)
     assert(IndexLifecycle.minhashIndexFsck(spark, t), "rows==hist+log after append")
-    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val grown = pairs(IndexLifecycle.probeStandingMinHashIndex(
+    val grown = pairSet(IndexLifecycle.probeStandingMinHashIndex(
       dd, "doc_id", "text", t, baseAll, 0.5, maxBucketSize = cap))
-    Dedup.writeMinHashIndex(baseAll, "doc_id", "text", "spec_mh_full", 4)
-    val full = pairs(Dedup.incrementalNearDupPairs(dd, "doc_id", "text",
-      spark.table("spec_mh_full"), baseAll, 0.5, maxBucketSize = cap))
+    // the reference: a fresh build over the merged base
+    IndexLifecycle.writeGrowableMinHashIndex(baseAll, "doc_id", "text",
+      "spec_mh_full", 4)
+    val full = pairSet(IndexLifecycle.probeStandingMinHashIndex(
+      dd, "doc_id", "text", "spec_mh_full", baseAll, 0.5, maxBucketSize = cap))
     assert(grown == full,
       s"missing=${(full -- grown).take(5)} extra=${(grown -- full).take(5)}")
     // the cross-generation hot bucket is dropped WHOLE by both paths
-    assert(!full.exists(_._1 == 320L), "full rewrite drops the hot bucket")
+    assert(!full.exists(_._1 == 320L), "fresh build drops the hot bucket")
     assert(!grown.exists(_._1 == 320L), "grown probe drops the hot bucket")
     // non-hot near-dups survive, so the equality above is non-vacuous
     assert(grown.exists(_._1 == 200L), "exact-copy delta pair must surface")
-    // POWER CHECK (the r13-documented pathology): per-row bsz on the
-    // grown table is generation-scoped (day-1 rows say 4 <= cap), so
-    // the naive pushed-filter probe PARTIALLY keeps the hot bucket
-    val stale = pairs(Dedup.incrementalNearDupPairs(dd, "doc_id", "text",
-      spark.table(t), baseAll, 0.5, maxBucketSize = cap))
-    assert(stale.exists(_._1 == 320L),
-      "the stale per-row filter must leak day-1 pairs of the crossed bucket")
-    // compact: re-count from rows only; probe identical; per-row bsz
-    // true again, so even the naive filter now agrees; statlog folded
+    // compact: re-count from rows only; probe identical; statlog folded
     IndexLifecycle.compactMinHashIndex(spark, t, 4)
     assert(!spark.catalog.tableExists(s"${t}_statlog"), "statlog reset")
     assert(IndexLifecycle.minhashIndexFsck(spark, t), "fsck after compact")
-    val compacted = pairs(IndexLifecycle.probeStandingMinHashIndex(
+    val compacted = pairSet(IndexLifecycle.probeStandingMinHashIndex(
       dd, "doc_id", "text", t, baseAll, 0.5, maxBucketSize = cap))
     assert(compacted == full)
-    val postStale = pairs(Dedup.incrementalNearDupPairs(dd, "doc_id", "text",
-      spark.table(t), baseAll, 0.5, maxBucketSize = cap))
-    assert(postStale == full, "compaction restores per-row bsz = true count")
     // plan pin: the probe against the grown index reads the index
     // bucketed (exchange-free under its layout) — the ONLY
     // (band, bucket) exchange is the delta's band rows; the hot set
@@ -438,7 +423,7 @@ class BucketingSpec extends AnyFunSuite {
     assert(bandExchanges == 1,
       s"expected 1 (band,bucket) exchange (the delta side), got $bandExchanges:\n$probePlan")
     assert(probePlan.contains("Bucketed: true"), probePlan)
-    Seq(t, s"${t}_hist", "spec_mh_full").foreach(
+    Seq(t, s"${t}_hist", "spec_mh_full", "spec_mh_full_hist").foreach(
       graft.sources.Sinks.dropTableAndLocation(spark, _))
   }
 
@@ -487,7 +472,7 @@ class BucketingSpec extends AnyFunSuite {
   }
 
   test("partial compaction: only touched file-buckets rewritten, rest carried by rename; equals full rewrite; bucket-id law pinned") {
-    import graft.operators.{Dedup, IndexLifecycle}
+    import graft.operators.IndexLifecycle
     import spark.implicits._
     val rnd = new scala.util.Random(17)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
@@ -545,23 +530,15 @@ class BucketingSpec extends AnyFunSuite {
       "a carried file sits in a touched file-bucket")
     assert(newNames.forall(n => touched.contains(fbOf(n))),
       "a rewritten file sits in an untouched file-bucket")
-    // result parity: compacted index == full-rewrite index, for the
-    // probe AND for the naive per-row-bsz filter (bsz true again)
+    // result parity: compacted index == a fresh build over the merged base
     val baseAll = d1.unionByName(dm)
-    Dedup.writeMinHashIndex(baseAll, "doc_id", "text", s"${t}_full", buckets)
-    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val full = pairs(Dedup.incrementalNearDupPairs(dp, "doc_id", "text",
-      spark.table(s"${t}_full"), baseAll, 0.5))
-    val got = pairs(IndexLifecycle.probeStandingMinHashIndex(
+    val full = freshProbe(baseAll, dp, s"${t}_full", buckets)
+    val got = pairSet(IndexLifecycle.probeStandingMinHashIndex(
       dp, "doc_id", "text", t, baseAll, 0.5))
     assert(got == full,
       s"missing=${(full -- got).take(5)} extra=${(got -- full).take(5)}")
     assert(got.exists(_._1 == 600L), "exact-copy probe pair must surface")
-    val naive = pairs(Dedup.incrementalNearDupPairs(dp, "doc_id", "text",
-      spark.table(t), baseAll, 0.5))
-    assert(naive == full, "partial compaction must restore per-row bsz")
-    Seq(t, s"${t}_hist", s"${t}_full").foreach(
+    Seq(t, s"${t}_hist", s"${t}_full", s"${t}_full_hist").foreach(
       graft.sources.Sinks.dropTableAndLocation(spark, _))
   }
 
@@ -577,8 +554,19 @@ class BucketingSpec extends AnyFunSuite {
   private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
+  /** The reference for a grown or repaired index: the pairs of `probe`
+    * against a fresh build over the merged base, in table `table`. */
+  private def freshProbe(base: org.apache.spark.sql.DataFrame,
+                         probe: org.apache.spark.sql.DataFrame,
+                         table: String, buckets: Int): Set[(Long, Long, Double)] = {
+    import graft.operators.IndexLifecycle
+    IndexLifecycle.writeGrowableMinHashIndex(base, "doc_id", "text", table, buckets)
+    pairSet(IndexLifecycle.probeStandingMinHashIndex(
+      probe, "doc_id", "text", table, base, 0.5))
+  }
+
   test("compactMinHashIndex refuses a bucket count other than the table's, naming both counts") {
-    import graft.operators.{Dedup, IndexLifecycle}
+    import graft.operators.IndexLifecycle
     import spark.implicits._
     val doc = docGen(23)
     val day1 = (0L until 40L).map(i => (i, doc(50)))
@@ -599,18 +587,16 @@ class BucketingSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("64") && ex.getMessage.contains("8 buckets"),
       ex.getMessage)
     // refused before any write: the appended generation is intact and
-    // still probes like a full rewrite
+    // still probes like a fresh build
     assert(spark.catalog.tableExists(s"${t}_statlog"), "statlog kept")
     assert(IndexLifecycle.minhashIndexFsck(spark, t))
     val baseAll = d1.unionByName(dm)
-    Dedup.writeMinHashIndex(baseAll, "doc_id", "text", s"${t}_full", 8)
-    val full = pairSet(Dedup.incrementalNearDupPairs(dp, "doc_id", "text",
-      spark.table(s"${t}_full"), baseAll, 0.5))
+    val full = freshProbe(baseAll, dp, s"${t}_full", 8)
     assert(full.exists(_._1 == 600L), "exact-copy probe pair must surface")
     IndexLifecycle.compactMinHashIndex(spark, t, 8)
     assert(pairSet(IndexLifecycle.probeStandingMinHashIndex(
       dp, "doc_id", "text", t, baseAll, 0.5)) == full)
-    Seq(t, s"${t}_hist", s"${t}_full").foreach(
+    Seq(t, s"${t}_hist", s"${t}_full", s"${t}_full_hist").foreach(
       graft.sources.Sinks.dropTableAndLocation(spark, _))
   }
 
@@ -634,7 +620,7 @@ class BucketingSpec extends AnyFunSuite {
     // the crashed append: its band rows reached the index, its statlog
     // rows never did (appendToMinHashIndex writes rows first)
     graft.sources.Sinks.appendBucketed(
-      Dedup.minhashIndexFrame(crashed, "doc_id", "text"), t)
+      Dedup.bandRows(crashed, "doc_id", "text", 128, 32, 4, 8), t)
     val sc = spark.sparkContext
     val group = "fsck-job-pin"
     // the SQL execution id of every job the check starts: AQE submits
@@ -664,18 +650,49 @@ class BucketingSpec extends AnyFunSuite {
     Seq(s"${t}_cnew", s"${t}_bak", s"${t}_hist_cnew", s"${t}_hist_bak")
       .foreach(n => assert(!spark.catalog.tableExists(n), s"swap debris $n"))
     val baseAll = d1.unionByName(logged).unionByName(crashed)
-    Dedup.writeMinHashIndex(baseAll, "doc_id", "text", s"${t}_full", buckets)
-    val full = pairSet(Dedup.incrementalNearDupPairs(dp, "doc_id", "text",
-      spark.table(s"${t}_full"), baseAll, 0.5))
+    val full = freshProbe(baseAll, dp, s"${t}_full", buckets)
     val got = pairSet(IndexLifecycle.probeStandingMinHashIndex(
       dp, "doc_id", "text", t, baseAll, 0.5))
     assert(got == full,
       s"missing=${(full -- got).take(5)} extra=${(got -- full).take(5)}")
     assert(got.exists(_._1 == 601L), "the crashed append's doc must be found")
-    // the repaired rows carry true per-row bsz again
-    assert(pairSet(Dedup.incrementalNearDupPairs(dp, "doc_id", "text",
-      spark.table(t), baseAll, 0.5)) == full)
-    Seq(t, s"${t}_hist", s"${t}_full").foreach(
+    Seq(t, s"${t}_hist", s"${t}_full", s"${t}_full_hist").foreach(
+      graft.sources.Sinks.dropTableAndLocation(spark, _))
+  }
+
+  test("a MinHash index whose histogram is missing is refused by name; compaction rebuilds it") {
+    import graft.operators.IndexLifecycle
+    import spark.implicits._
+    val doc = docGen(31)
+    val day1 = (0L until 40L).map(i => (i, doc(50)))
+    val t = "spec_mh_nohist"
+    val buckets = 8
+    Seq(t, s"${t}_hist", s"${t}_statlog", s"${t}_full", s"${t}_full_hist")
+      .foreach(graft.sources.Sinks.dropTableAndLocation(spark, _))
+    val d1 = day1.toDF("doc_id", "text")
+    val dm = Seq((500L, day1(5)._2)).toDF("doc_id", "text")
+    val dp = Seq((600L, day1(5)._2), (601L, doc(50))).toDF("doc_id", "text")
+    // a build that crashed between the row write and the histogram write
+    IndexLifecycle.writeGrowableMinHashIndex(d1, "doc_id", "text", t, buckets)
+    graft.sources.Sinks.dropTableAndLocation(spark, s"${t}_hist")
+    assert(!IndexLifecycle.minhashIndexFsck(spark, t), "fsck must flag the missing histogram")
+    def refusal(op: => Any): String =
+      intercept[IllegalArgumentException](op).getMessage
+    Seq(
+      refusal(IndexLifecycle.appendToMinHashIndex(dm, "doc_id", "text", t)),
+      refusal(IndexLifecycle.probeStandingMinHashIndex(dp, "doc_id", "text", t, d1, 0.5))
+    ).foreach { msg =>
+      assert(msg.contains(s"${t}_hist") && msg.contains("compactMinHashIndex"), msg)
+    }
+    // the refused append wrote nothing
+    assert(spark.table(t).count() == day1.size * 32L, "no rows appended")
+    IndexLifecycle.compactMinHashIndex(spark, t, buckets)
+    assert(IndexLifecycle.minhashIndexFsck(spark, t), "fsck after compaction")
+    val got = pairSet(IndexLifecycle.probeStandingMinHashIndex(
+      dp, "doc_id", "text", t, d1, 0.5))
+    assert(got == freshProbe(d1, dp, s"${t}_full", buckets))
+    assert(got.exists(_._1 == 600L), "exact-copy probe pair must surface")
+    Seq(t, s"${t}_hist", s"${t}_full", s"${t}_full_hist").foreach(
       graft.sources.Sinks.dropTableAndLocation(spark, _))
   }
 

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
-import graft.operators.{AsofJoin, Dedup, Multimodal, Similarity}
+import graft.operators.{AsofJoin, Dedup, IndexLifecycle, Multimodal, Similarity}
 
 /** Brute-force oracles for the pipeline operators that have no SQL
   * oracle in the driver gate: MinHash/LSH and SimHash near-dup, ANN
@@ -160,9 +160,9 @@ class PipelineOpsSpec extends AnyFunSuite {
     // near-dups + the exact dup (ids >= 100) play the daily delta.
     val baseDf = docsDF.where(col("doc_id") < 100)
     val deltaDf = docsDF.where(col("doc_id") >= 100)
-    Dedup.writeMinHashIndex(baseDf, "doc_id", "text", "t_mh_idx", 4)
-    val got = Dedup.incrementalNearDupPairs(deltaDf, "doc_id", "text",
-      spark.table("t_mh_idx"), baseDf, threshold = threshold)
+    IndexLifecycle.writeGrowableMinHashIndex(baseDf, "doc_id", "text", "t_mh_idx", 4)
+    val got = IndexLifecycle.probeStandingMinHashIndex(deltaDf, "doc_id", "text",
+      "t_mh_idx", baseDf, threshold = threshold)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val want = (for {
       (ia, ta) <- corpus if ia >= 100L

@@ -458,20 +458,4 @@ class PlanSpec extends AnyFunSuite {
     assert(got == want, s"got=$got want=$want")
     ExplosiveJoin.invalidateSizing()
   }
-  test("minhashIndexFrame: index rows reach the bucketed write exchange-free") {
-    import graft.operators.Dedup
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val p = physical(Dedup.minhashIndexFrame(docs, "doc_id", "text"))
-    // Exactly ONE hashpartitioning exchange, and it carries the
-    // (band, bucket) COUNT partials (map-side combined: partial+final
-    // HashAggregate pair), not the index-sized band rows; those flow
-    // scan -> generate -> broadcast-join -> project with no shuffle of
-    // their own, so the write path's single index-sized exchange is
-    // the bucketed write's clustering. (VERDICT r12 #6: the old
-    // window-based bsz added a second full exchange of the index.)
-    assert(countOccurrences(p, "Exchange hashpartitioning") == 1, p)
-    assert(countOccurrences(p, "HashAggregate") == 2, p)
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("Window"), p)
-  }
 }

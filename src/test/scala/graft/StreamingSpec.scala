@@ -400,7 +400,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming fuzzy dedup: foreachBatch over the persisted minhash index equals batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import graft.operators.Dedup
+    import graft.operators.IndexLifecycle
 
     // standing corpus with planted near-dup partners for the stream
     val rnd = new scala.util.Random(7)
@@ -410,7 +410,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq.fill(80)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
     val baseRows = (0L until 30L).map(i => (i, doc()))
     val baseDf = baseRows.toDF("doc_id", "text")
-    Dedup.writeMinHashIndex(baseDf, "doc_id", "text", "t_stream_mh", 4)
+    IndexLifecycle.writeGrowableMinHashIndex(baseDf, "doc_id", "text", "t_stream_mh", 4)
 
     // stream = near-copies of base docs 0-5 (one word changed) plus
     // one novel doc with no partner
@@ -423,17 +423,22 @@ class StreamingSpec extends AnyFunSuite {
     val got = scala.collection.mutable.Set[(Long, Long, Double)]()
     // fuzzy candidate generation needs a distinct over candidate pairs
     // (not stream-native in append mode), so the production shape is
-    // foreachBatch running the BATCH probe against the static index —
-    // per-micro-batch delta semantics are exactly what a continuous
-    // crawl wants. The index itself is rewrite-on-compaction, never
-    // appended to (bsz is write-scoped — see writeMinHashIndex):
-    // between rewrites every batch probes the same standing index.
+    // foreachBatch running the BATCH probe against the standing index.
+    // Each micro-batch probes, then appends itself, so the next batch
+    // is swept against it too — the continuous-crawl shape; the verify
+    // texts are the base plus every batch appended so far.
+    val appended = scala.collection.mutable.ArrayBuffer[(Long, String)]()
     val q = input.toDF().writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         got.synchronized {
-          got ++= Dedup.incrementalNearDupPairs(batch, "doc_id", "text",
-              spark.table("t_stream_mh"), baseDf, threshold = 0.5)
+          val rows = batch.select("doc_id", "text").as[(Long, String)].collect()
+          val delta = rows.toSeq.toDF("doc_id", "text")
+          got ++= IndexLifecycle.probeStandingMinHashIndex(delta, "doc_id",
+              "text", "t_stream_mh", baseDf.union(appended.toSeq.toDF("doc_id", "text")),
+              threshold = 0.5)
             .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+          IndexLifecycle.appendToMinHashIndex(delta, "doc_id", "text", "t_stream_mh")
+          appended ++= rows
         }
         ()
       }
@@ -443,10 +448,14 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       input.addData(deltaRows.drop(3): _*)
       q.processAllAvailable()
-      val want = Dedup.incrementalNearDupPairs(
+      assert(IndexLifecycle.minhashIndexFsck(spark, "t_stream_mh"),
+        "rows == hist + log after the streamed appends")
+      assert(appended.map(_._1).toSet == deltaRows.map(_.doc_id).toSet)
+      IndexLifecycle.writeGrowableMinHashIndex(baseDf, "doc_id", "text",
+        "t_stream_mh_ref", 4)
+      val want = IndexLifecycle.probeStandingMinHashIndex(
           deltaRows.map(d => (d.doc_id, d.text)).toDF("doc_id", "text"),
-          "doc_id", "text", spark.table("t_stream_mh"), baseDf,
-          threshold = 0.5)
+          "doc_id", "text", "t_stream_mh_ref", baseDf, threshold = 0.5)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       // every planted partner found (j ~ 0.9+ >> 0.5), novel doc clean
       assert(want.map(_._1) == (100L until 106L).toSet)
