@@ -81,10 +81,10 @@ object ParallelUtilities {
   def halveZip(drop: Long, take: Long): ((Long, Long), (Long, Long)) =
     ProductIndexMath.halveZip(drop, take)
 
-  /** T2 host-segmented two-stage reduction: reduce within each node
-    * before anything crosses the network
-    * (reference src/trees.jl:42-63). Non-commutative ops keep
-    * rank order. */
+  /** T2 segmented two-stage reduction: fold each rank block in its
+    * map task, then one segment per host, so the driver receives one
+    * partial per host (reference src/trees.jl:42-63). Non-commutative
+    * ops keep rank order. */
   def pmapreduceSegmented[B: ClassTag](spark: SparkSession, iters: IndexedSeq[PRange], np: Int)
                                       (f: IndexedSeq[Double] => B, op: ReduceOp[B],
                                        init: Option[B] = None,

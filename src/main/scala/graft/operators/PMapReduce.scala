@@ -1,13 +1,12 @@
 package graft.operators
 
 import java.lang.invoke.MethodHandles
-import scala.collection.immutable.{AbstractSeq, ArraySeq}
 import scala.reflect.ClassTag
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import graft.functions.ReduceOp
-import graft.plans.{PRange, ProductIndexMath, ProductOdometer, ProductSlice}
+import graft.plans.{PRange, ProductIndexMath, ProductOdometer, ProductSlice, WalkPoint}
 import graft.sources.ProductSplitSource
 
 /** The execution operators E1–E4: distributed map + rank-ordered reduce
@@ -35,7 +34,11 @@ import graft.sources.ProductSplitSource
   * and `f`'s boxed result for a primitive `B` are scalar-replaced, so
   * a zip element allocates nothing that `f` does not. A product
   * element comes from a [[ProductOdometer]] (one decode per rank, then
-  * carry-increments), whose point is still a fresh array per element.
+  * carry-increments): an immutable `(v1, snapshot)` point whose
+  * dimension 1 is a primitive and whose dimensions 2..N are an array
+  * shared until dimension 1 wraps, so a product element allocates
+  * nothing that `f` does not either, apart from one `N-1`-double
+  * snapshot per `len(dim 1)` elements.
   * When `B` is `Long` and `op` is a plain function
   * ([[ReduceOp.Plain]]), the accumulator is a primitive and each step
   * calls the function's specialised `Function2` entry
@@ -89,20 +92,22 @@ object PMapReduce {
   private def foldInit[B](init: Option[B], op: ReduceOp[B], result: B): B =
     init.map(i => op(i, result)).getOrElse(result)
 
-  /** T2: host-segmented two-stage reduction for COMMUTATIVE ops — the
-    * reference's `SegmentedOrderedBinaryTree` rationale: reduce WITHIN
-    * each node before anything crosses the network
-    * (/root/reference/src/trees.jl:42-63, docs/src/index.md:34).
+  /** T2: segmented two-stage reduction for COMMUTATIVE ops — the
+    * reference's `SegmentedOrderedBinaryTree` rationale: fold as much
+    * as possible where the partials are made, so few payloads cross
+    * the network (reference src/trees.jl:42-63,
+    * docs/src/index.md:34).
     *
-    * Stage 1 is a shuffle-free locality-aware `coalesce` to one
-    * partition per host — Spark's partition coalescer groups parent
-    * partitions by preferred location, so each group folds HOST-LOCAL
-    * partials through a serial (in-place-friendly) `reduceLeft` with
-    * zero network traffic. Stage 2 ships ONE partial per host to the
-    * driver fold: with H hosts and np ranks carrying an 800 KB array
-    * payload, the driver-bound traffic is H payloads, not np (and
-    * unlike `treeReduce(depth=2)`, no intermediate partial ever
-    * crosses a node boundary before being combined).
+    * Stage 1 folds each partition's partials (a rank block, under the
+    * rank-block law) through a serial (in-place-friendly) `reduceLeft`
+    * inside its own map task, so the map runs on every core. Stage 2
+    * shuffles the one partial per map task into one segment per host,
+    * folds each segment serially, and ships ONE partial per segment to
+    * the driver fold: with H hosts, P map tasks (at most
+    * `defaultParallelism`) and np ranks carrying an 800 KB array
+    * payload, the shuffle moves P payloads and the driver receives H,
+    * never np. The shuffle is not locality-aware, so a block partial
+    * may cross a node boundary once before it is combined.
     *
     * `segments` overrides the segment count for single-host testing;
     * the reference fakes multi-host topologies the same way
@@ -116,8 +121,8 @@ object PMapReduce {
     * the engine's own split law ([[ProductIndexMath.rankOfIndex]]),
     * rank-sorted within each segment, left-folded, and the per-segment
     * partials combine in segment (= min-rank) order on the driver.
-    * That costs one shuffle of np partials; commutative ops keep the
-    * shuffle-free locality-aware coalesce.
+    * That costs one shuffle of np partials; commutative ops shuffle
+    * only the P block partials.
     *
     * `partials` is keyed by 1-based rank, every key in `1..np`; how the
     * ranks are spread over partitions does not matter (the pmapreduce*
@@ -130,9 +135,11 @@ object PMapReduce {
       new ClusterQuery(spark).nodenames.size))
     val perSeg: Array[(Int, B)] =
       if (op.commutative) {
-        partials.values.coalesce(nSeg)
-          .mapPartitions(it =>
-            if (it.hasNext) Iterator((0, it.reduceLeft(op))) else Iterator.empty)
+        val fold = (it: Iterator[B]) => if (it.hasNext) Iterator(it.reduceLeft(op)) else Iterator.empty
+        partials.values.mapPartitions(fold)
+          .coalesce(nSeg, shuffle = true)
+          .mapPartitions(fold)
+          .map((0, _))
           .collect()
       } else {
         val nSegEff = math.min(nSeg, np)
@@ -161,7 +168,7 @@ object PMapReduce {
                                       (f: IndexedSeq[Double] => B, op: ReduceOp[B],
                                        init: Option[B] = None,
                                        segments: Option[Int] = None): B =
-    mapReduceIndexed(spark, iters.map(_.numElems).min, np, zipFold(iters, f, op), op, init)(
+    mapReduceIndexed(spark, ProductIndexMath.zipLength(iters), np, zipFold(iters, f, op), op, init)(
       (partials, npEff) => hostSegmentedReduce(spark, partials, npEff, op, segments))
 
   /** E2: `f` receives each rank's whole ProductSlice once (MPI-style;
@@ -185,16 +192,11 @@ object PMapReduce {
 
   /** Element `j` of the zip of `rs`, read lazily: `apply(k)` is
     * `rs(k)(j)`. One 24-byte immutable object per element, so `f` may
-    * keep it (no buffer is ever reused); serialized as the `ArraySeq`
-    * of its values. A point's class is not part of the contract: one
-    * kept on the driver of a one-rank call is a `ZipPoint`, one that
-    * came back from a task an `ArraySeq`; both are `IndexedSeq[Double]`
-    * and compare and hash as the seq of their values. */
-  private[operators] final class ZipPoint(rs: Array[PRange], j: Long)
-      extends AbstractSeq[Double] with IndexedSeq[Double] with Serializable {
+    * keep it (no buffer is ever reused). Its class is no more part of
+    * the contract than a product point's (see [[WalkPoint]]). */
+  private[operators] final class ZipPoint(rs: Array[PRange], j: Long) extends WalkPoint {
     def length: Int = rs.length
     def apply(k: Int): Double = rs(k)(j)
-    protected[this] def writeReplace(): AnyRef = ArraySeq.unsafeWrapArray(Array.tabulate(rs.length)(apply))
   }
 
   /** `op`'s function when `B` is `Long` and `op` is a plain function:
@@ -236,11 +238,11 @@ object PMapReduce {
     * reduce with `op` (reference src/mapreduce.jl:266-287). Each
     * rank left-folds its slice serially (ordered within rank), so
     * only one partial per rank crosses the network. A point that a
-    * partial keeps is only an `IndexedSeq[Double]` (see [[ZipPoint]]). */
+    * partial keeps is only an `IndexedSeq[Double]` (see [[WalkPoint]]). */
   def pmapreduce[B: ClassTag](spark: SparkSession, iters: IndexedSeq[PRange], np: Int)
                              (f: IndexedSeq[Double] => B, op: ReduceOp[B],
                               init: Option[B] = None): B =
-    mapReduceIndexed(spark, iters.map(_.numElems).min, np, zipFold(iters, f, op), op, init)(
+    mapReduceIndexed(spark, ProductIndexMath.zipLength(iters), np, zipFold(iters, f, op), op, init)(
       (partials, _) => reducePartials(partials, op))
 
   /** E1 (product mode): elements of the full product split across ranks,
@@ -248,7 +250,9 @@ object PMapReduce {
     * reference src/mapreduce.jl:18-30,266-287). Each rank decodes
     * its first flat index once and then steps a [[ProductOdometer]]
     * (the general `elementAt` builds two IndexedSeqs per call — too
-    * much garbage for a loop that may run 10^8+ times). */
+    * much garbage for a loop that may run 10^8+ times). `f` gets an
+    * immutable point that it may keep; like a zip point, it is only an
+    * `IndexedSeq[Double]` (see [[WalkPoint]]). */
   def pmapreduceProduct[B: ClassTag](spark: SparkSession, iters: IndexedSeq[PRange], np: Int)
                                     (f: IndexedSeq[Double] => B, op: ReduceOp[B],
                                      init: Option[B] = None): B =
@@ -281,10 +285,10 @@ object PMapReduce {
     * results in rank order and partitions hold ascending rank blocks,
     * so `collect` reproduces the `vcat` concatenation. A point that `f`
     * returns or keeps is only an `IndexedSeq[Double]`; its class
-    * depends on the path (see [[ZipPoint]]). */
+    * depends on the path (see [[WalkPoint]]). */
   def pmapbatch[T: ClassTag](spark: SparkSession, iters: IndexedSeq[PRange], np: Int)
                             (f: IndexedSeq[Double] => T): Vector[T] = {
-    val len = iters.map(_.numElems).min
+    val len = ProductIndexMath.zipLength(iters)
     require(len > 0, "cannot map over an empty collection")
     val npEff = ranksFor(np, len)
     val rs = iters.toArray
@@ -389,18 +393,20 @@ private[graft] final class RankLoopTemplate extends RankLoops {
   def productLong(iters: IndexedSeq[PRange], f: IndexedSeq[Double] => Long, g: (Long, Long) => Long,
                   first: Long, take: Long): Long = {
     val walk = new ProductOdometer(iters, first)
-    var acc = f(walk.element())
+    var i1 = walk.index1
+    var acc = f(walk.point(i1))
     var n = 1L
-    while (n < take) { walk.advance(); acc = g(acc, f(walk.element())); n += 1 }
+    while (n < take) { i1 = walk.step(i1); acc = g(acc, f(walk.point(i1))); n += 1 }
     acc
   }
 
   def productAny[B](iters: IndexedSeq[PRange], f: IndexedSeq[Double] => B, op: (B, B) => B,
                     first: Long, take: Long): B = {
     val walk = new ProductOdometer(iters, first)
-    var acc = f(walk.element())
+    var i1 = walk.index1
+    var acc = f(walk.point(i1))
     var n = 1L
-    while (n < take) { walk.advance(); acc = op(acc, f(walk.element())); n += 1 }
+    while (n < take) { i1 = walk.step(i1); acc = op(acc, f(walk.point(i1))); n += 1 }
     acc
   }
 

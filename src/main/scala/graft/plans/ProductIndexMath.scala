@@ -72,13 +72,26 @@ object ProductIndexMath {
   def weights(iters: IndexedSeq[PRange]): IndexedSeq[Long] =
     iters.scanLeft(1L)((acc, r) => acc * r.numElems).dropRight(1)
 
+  /** Number of elements of the product. Zero ranges are refused, not
+    * read as the one-element empty product: every product entry point
+    * sizes its collection here. */
   def totalLength(iters: IndexedSeq[PRange]): Long = {
     // while-loop, not foldLeft: called on the whichProc hot path, which
     // must stay allocation-free (no iterator objects).
+    val n = iters.length
+    require(n > 0, "need at least one iterator")
     var acc = 1L
     var k = 0
-    while (k < iters.length) { acc *= iters(k).numElems; k += 1 }
+    while (k < n) { acc *= iters(k).numElems; k += 1 }
     acc
+  }
+
+  /** Number of elements of the zip of `iters`: the shortest range's
+    * length (`zip` truncates). Zero ranges are refused, as in
+    * [[totalLength]]. */
+  def zipLength(iters: IndexedSeq[PRange]): Long = {
+    require(iters.nonEmpty, "need at least one iterator")
+    iters.iterator.map(_.numElems).min
   }
 
   /** The even contiguous split law: worker `p` of `np` (1-based) over a
@@ -199,7 +212,6 @@ object ProductIndexMath {
     * (`ProductSection`, /root/reference/src/productsplit.jl:89-100). */
   def productSection(iters: IndexedSeq[PRange], firstInd1: Long, lastInd1: Long): ProductSlice = {
     val len = totalLength(iters)
-    require(iters.nonEmpty, "need at least one iterator")
     require(firstInd1 >= 1, "the range of indices must start from a number >= 1")
     require(lastInd1 <= len, s"the maximum index must be less than or equal to the total number of elements = $len")
     ProductSlice(iters, firstInd1 - 1, lastInd1 - 1)
@@ -231,51 +243,87 @@ object ProductIndexMath {
   }
 }
 
+/** A point of a zip or product walk: an immutable `IndexedSeq[Double]`
+  * that `f` may keep. A point's class is not part of the contract: one
+  * kept on the driver of a one-rank call is a subclass of this, one that
+  * came back from a task an `ArraySeq`, because a point is serialized as
+  * the `ArraySeq` of its values. On every path it compares and hashes
+  * as the seq of its values. */
+private[graft] abstract class WalkPoint
+    extends scala.collection.immutable.AbstractSeq[Double] with IndexedSeq[Double] with Serializable {
+  protected[this] def writeReplace(): AnyRef =
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(Array.tabulate(length)(apply))
+}
+
+/** A product point: dimension 1's value `v1`, then the values of
+  * dimensions 2..N in `rest`, a snapshot that no one writes once it is
+  * shared. */
+private[graft] final class ProductPoint(v1: Double, rest: Array[Double]) extends WalkPoint {
+  def length: Int = rest.length + 1
+  def apply(k: Int): Double = if (k == 0) v1 else rest(k - 1)
+}
+
 /** A walk over the product of `iters` in flat (reverse-lex) order from
   * 0-based flat index `first` — the reference `ProductSplit`'s
-  * `iterate`. `first` is decoded once; each [[advance]] carry-increments
-  * the per-dim index tuple, dimension 1 fastest, and recomputes only
-  * the values of the dimensions that moved, so a step costs no `%` or
-  * `/`. Values are `start + i*step` from the integer index, exactly
-  * [[ProductIndexMath.elementAt]]'s. Stepping past the last element
-  * wraps to the first; callers count their steps. Mutable: one walk
-  * per thread. */
+  * `iterate`. `first` is decoded once. Dimension 1's index is a
+  * primitive that the caller holds: it starts at [[index1]] and each
+  * [[step]] returns the next one. Only when dimension 1 wraps does the
+  * walk carry-increment the index tuple of dimensions 2..N, into a new
+  * snapshot of their values (copy, then update), so a step costs no
+  * `%` or `/` and a snapshot never changes once a point shares it.
+  * [[point]] is a [[ProductPoint]] over the current snapshot: one
+  * `N-1`-double array per `len(dim 1)` steps, and nothing else that
+  * outlives an inlined `f`. Values are `start + i*step` from the
+  * integer index, exactly [[ProductIndexMath.elementAt]]'s. Stepping
+  * past the last element wraps to the first; callers count their
+  * steps. Mutable: one walk per thread; its points are immutable. */
 private[graft] final class ProductOdometer(iters: IndexedSeq[PRange], first: Long) {
   private[this] val rs: Array[PRange] = iters.toArray
+  private[this] val dim1: PRange = rs(0)
+  // idx(k) is dimension k+1's index; idx(0) is unused (dimension 1's
+  // index is the caller's)
   private[this] val idx: Array[Long] = new Array[Long](rs.length)
-  private[this] val values: Array[Double] = new Array[Double](rs.length)
+  private[this] var rest: Array[Double] = new Array[Double](rs.length - 1)
+
+  /** Dimension 1's index at `first`. */
+  val index1: Long = first % dim1.numElems
 
   {
-    var rem = first
-    var k = 0
+    var rem = first / dim1.numElems
+    var k = 1
     while (k < rs.length) {
       val n = rs(k).numElems
       idx(k) = rem % n
-      values(k) = rs(k)(idx(k))
+      rest(k - 1) = rs(k)(idx(k))
       rem /= n
       k += 1
     }
   }
 
-  /** The element under the walk, as a fresh immutable seq (the caller
-    * may keep it). */
-  def element(): IndexedSeq[Double] =
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(values.clone())
+  /** The element whose dimension 1 index is `i1`, the index that the
+    * last [[step]] returned (or [[index1]] before any step); the caller
+    * may keep it. */
+  def point(i1: Long): IndexedSeq[Double] = new ProductPoint(dim1(i1), rest)
 
-  /** Step to the next flat index. */
-  def advance(): Unit = {
-    var k = 0
-    while (k < rs.length) {
+  /** Step from dimension 1 index `i1` to the next flat index: returns
+    * the new dimension 1 index. */
+  def step(i1: Long): Long = {
+    val i = i1 + 1
+    if (i < dim1.numElems) i
+    else { carry(); 0L }
+  }
+
+  /** Dimension 1 wrapped: step dimensions 2..N into a new snapshot. */
+  private def carry(): Unit = {
+    val next = rest.clone()
+    var k = 1
+    var carrying = true
+    while (carrying && k < rs.length) {
       val i = idx(k) + 1
-      if (i < rs(k).numElems) {
-        idx(k) = i
-        values(k) = rs(k)(i)
-        return
-      }
-      idx(k) = 0L
-      values(k) = rs(k)(0L)
-      k += 1
+      if (i < rs(k).numElems) { idx(k) = i; next(k - 1) = rs(k)(i); carrying = false }
+      else { idx(k) = 0L; next(k - 1) = rs(k)(0L); k += 1 }
     }
+    rest = next
   }
 }
 
@@ -286,6 +334,7 @@ private[graft] final class ProductOdometer(iters: IndexedSeq[PRange], first: Lon
   * are O(1) arithmetic except the documented O(n) scans. */
 final case class ProductSlice(iters: IndexedSeq[PRange], firstFlat: Long, lastFlat: Long) {
   import ProductIndexMath._
+  require(iters.nonEmpty, "need at least one iterator")
 
   // Cached primitive radix state: every point op below runs on these
   // flat arrays with zero per-call allocation — the engine's answer to
@@ -363,17 +412,19 @@ final case class ProductSlice(iters: IndexedSeq[PRange], firstFlat: Long, lastFl
 
   /** Materialize the slice (lazy iterator ≙ `takedrop`,
     * reference src/productsplit.jl:61-65), walked by a
-    * [[ProductOdometer]] from `firstFlat`. */
+    * [[ProductOdometer]] from `firstFlat`. Each point is immutable, so
+    * the caller may keep every one. */
   def iterator: Iterator[IndexedSeq[Double]] = new Iterator[IndexedSeq[Double]] {
     private[this] var left = ProductSlice.this.length
     // an empty slice may sit on a zero-length dimension: no walk to decode
     private[this] val walk = if (left > 0) new ProductOdometer(iters, firstFlat) else null
+    private[this] var i1 = if (left > 0) walk.index1 else 0L
     def hasNext: Boolean = left > 0
     def next(): IndexedSeq[Double] = {
       if (!hasNext) throw new NoSuchElementException("next on an exhausted slice iterator")
-      val e = walk.element()
-      walk.advance()
+      val e = walk.point(i1)
       left -= 1
+      if (left > 0) i1 = walk.step(i1)
       e
     }
   }

@@ -240,8 +240,8 @@ object CoreQueries {
     }),
 
     // T2: the same array-payload reduction through the host-segmented
-    // two-stage combine (intra-host serial fold via locality-aware
-    // coalesce, then one partial per host to the driver) — 4 segments
+    // two-stage combine (each rank block folded in its map task, a
+    // shuffle into segments, one partial per segment to the driver) — 4 segments
     // emulate a 4-node topology on local mode, the reference's own
     // fake-multi-host test pattern (test/paralleltests.jl:472-485).
     "pmr_hostseg_elsum" -> ((s, _) => {

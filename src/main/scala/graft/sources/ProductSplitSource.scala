@@ -113,7 +113,7 @@ object ProductSplitSource {
     * columns `(id, rank, d1..dN)` where `dK = iters(K)(id)`. */
   def zippedDF(spark: SparkSession, iters: IndexedSeq[PRange], np: Int,
                names: Seq[String] = Nil): DataFrame = {
-    val len = iters.map(_.numElems).min
+    val len = ProductIndexMath.zipLength(iters)
     val cols = iters.indices.map { k =>
       val r = iters(k)
       val name = if (names.nonEmpty) names(k) else s"d${k + 1}"
@@ -152,7 +152,7 @@ object ProductSplitSource {
 
   /** Zip-mode slices: `(rank, indices [drop, drop+take) into the zip)`. */
   def zipSliceRDD(spark: SparkSession, iters: IndexedSeq[PRange], np: Int): RDD[(Int, (Long, Long))] = {
-    val len = iters.map(_.numElems).min
+    val len = ProductIndexMath.zipLength(iters)
     val npEff = PMapReduce.ranksFor(np, len)
     PMapReduce.rankBlocks(spark.sparkContext, npEff)
       .map { p => (p, ProductIndexMath.dropTake(len, npEff, p)) }

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import graft.functions.{BroadcastStack, OffsetArrayND, ReduceOp}
 import graft.operators.PMapReduce._
-import graft.plans.{PRange, ProductIndexMath}
+import graft.plans.{PRange, ProductIndexMath, ProductSlice}
 import graft.sources.ProductSplitSource
 
 /** Differential tests of the distributed execution operators against
@@ -206,21 +206,29 @@ class PMapReduceSpec extends AnyFunSuite {
   test("retention: f may keep its point — pmapbatch(v => v) and concat of Vector(v) for every np") {
     val zip = IndexedSeq(PRange(1, 97), PRange.stepped(5, 3, 5 + 3 * 96), PRange.steppedD(0.5, 0.25, 40.0))
     val zipWant = (0L until 97L).map(j => zip.map(_(j)))
-    val prod = IndexedSeq(PRange(1, 4), PRange(3, 3), PRange.steppedD(0.5, 0.25, 2.0)) // 4 * 1 * 7
-    val prodWant = (0L until 28L).map(ProductIndexMath.elementAt(prod, _))
+    val prods = Seq(
+      // dimension 1 wraps inside a rank window
+      IndexedSeq(PRange(1, 4), PRange(3, 3), PRange.steppedD(0.5, 0.25, 2.0)), // 4 * 1 * 7
+      // dimension 1 of length 1: a new snapshot every element
+      IndexedSeq(PRange(5, 5), PRange(1, 6), PRange.stepped(2, 3, 14)), // 1 * 6 * 5
+      IndexedSeq(PRange.steppedD(-1.0, 0.5, 20.0)), // N = 1: 43
+      IndexedSeq(PRange(1, 3), PRange.stepped(2, 2, 6), PRange(0, 1), PRange.steppedD(0.5, 0.5, 2.0))) // 3 * 3 * 2 * 4
     val concat = ReduceOp.concat[IndexedSeq[Double]]
     // a point's class is unspecified (it depends on whether it crossed
     // to the driver); on every path it equals and hashes as the seq of
     // its values
-    def samePoints(got: Seq[IndexedSeq[Double]], clue: String): Unit = {
-      assertSameSeq(got, zipWant, clue)
-      assert(got.map(_.hashCode) == zipWant.map(_.hashCode), s"$clue: hashCode")
+    def samePoints(got: Seq[IndexedSeq[Double]], want: Seq[IndexedSeq[Double]], clue: String): Unit = {
+      assertSameSeq(got, want, clue)
+      assert(got.map(_.hashCode) == want.map(_.hashCode), s"$clue: hashCode")
     }
     for (np <- Seq(1, 3, 16, 64)) {
-      samePoints(pmapbatch(spark, zip, np)(v => v), s"pmapbatch np=$np")
-      samePoints(pmapreduce(spark, zip, np)(v => Vector(v), concat), s"pmapreduce np=$np")
-      assertSameSeq(pmapreduceProduct(spark, prod, np)(v => Vector(v), concat), prodWant,
-        s"pmapreduceProduct np=$np")
+      samePoints(pmapbatch(spark, zip, np)(v => v), zipWant, s"pmapbatch np=$np")
+      samePoints(pmapreduce(spark, zip, np)(v => Vector(v), concat), zipWant, s"pmapreduce np=$np")
+      for (prod <- prods) {
+        val prodWant = (0L until ProductIndexMath.totalLength(prod)).map(ProductIndexMath.elementAt(prod, _))
+        samePoints(pmapreduceProduct(spark, prod, np)(v => Vector(v), concat), prodWant,
+          s"pmapreduceProduct $prod np=$np")
+      }
     }
   }
 
@@ -376,6 +384,44 @@ class PMapReduceSpec extends AnyFunSuite {
     assert(df.rdd.getNumPartitions <= sc.defaultParallelism)
     val section = ProductSplitSource.sectionDF(spark, IndexedSeq(PRange(1, 40), PRange(1, 30)), 5, 1100)
     assert(section.rdd.getNumPartitions <= sc.defaultParallelism)
+  }
+
+  test("segmented reduce: the map runs in min(npEff, defaultParallelism) tasks, then one per segment") {
+    val sc = spark.sparkContext
+    val metrics = new graft.obs.RunMetrics(sc)
+    for (np <- Seq(3, 224)) {
+      val before = metrics.snapshot()
+      val got = pmapreduceSegmented(spark, IndexedSeq(PRange(1, 224)), np)(
+        t => Array(t(0), 1.0), ReduceOp.elementwiseSum)
+      val tasks = (metrics.snapshot() - before).stageRows.map(_.tasks)
+      assert(got.toVector == Vector(25200.0, 224.0), s"np=$np")
+      // the map stage, then the fold of the one segment of a local run
+      assert(tasks == Vector(math.min(np, sc.defaultParallelism), 1), s"np=$np stage task counts $tasks")
+    }
+  }
+
+  test("zero ranges are refused by name at every entry point") {
+    val none = IndexedSeq.empty[PRange]
+    def refused(call: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](call)
+      assert(e.getMessage.contains("need at least one iterator"), e.getMessage)
+    }
+    val sum = ReduceOp.commutative[Long](_ + _)
+    refused(ProductIndexMath.productSplit(none, 2, 1))
+    refused(ProductIndexMath.productSection(none, 1, 1))
+    refused(ProductIndexMath.flatIndexOf(none, IndexedSeq()))
+    refused(ProductSlice(none, 0, 0))
+    refused(pmapreduceProduct(spark, none, 2)(_ => 1L, sum))
+    refused(pmapreduceProductSplit(spark, none, 2)(_ => 1L, sum))
+    refused(pmapbatchProductSplit(spark, none, 2)(_.length))
+    refused(ProductSplitSource.productDF(spark, none, 2))
+    refused(ProductSplitSource.sectionDF(spark, none, 1, 1))
+    refused(ProductSplitSource.productSliceRDD(spark, none, 2))
+    refused(pmapreduce(spark, none, 2)(_ => 1L, sum))
+    refused(pmapreduceSegmented(spark, none, 2)(_ => 1L, sum))
+    refused(pmapbatch(spark, none, 2)(_ => 1L))
+    refused(ProductSplitSource.zippedDF(spark, none, 2))
+    refused(ProductSplitSource.zipSliceRDD(spark, none, 2))
   }
 
   test("np < 1 is refused by name: productDF, pmapreduce, pmapbatchProductSplit") {

@@ -117,12 +117,22 @@ object ProductIndexMathProps extends Properties("ProductIndexMath") {
         val (drop, take) = ProductIndexMath.dropTake(L, np, p)
         take == 0 || {
           val walk = new ProductOdometer(iters, drop)
+          var i1 = walk.index1
           (drop until drop + take).forall { flat =>
-            val same = walk.element() == ProductIndexMath.elementAt(iters, flat)
-            walk.advance()
+            val same = walk.point(i1) == ProductIndexMath.elementAt(iters, flat)
+            i1 = walk.step(i1)
             same
           }
         }
       })
+    }
+
+  property("slice iterator: every kept point equals and hashes as elementAt once the walk moved on") =
+    forAll(Gen.chooseNum(1, 4).flatMap(n => Gen.listOfN(n, genWalkRange).map(_.toIndexedSeq)),
+      Gen.chooseNum(1, 12), Gen.chooseNum(1, 12)) { (iters, np, p0) =>
+      val sl = ProductIndexMath.productSplit(iters, np, math.min(p0, np))
+      val kept = sl.iterator.toVector
+      val want = (0L until sl.length).map(i => ProductIndexMath.elementAt(iters, sl.firstFlat + i))
+      Prop(kept == want) && Prop(kept.map(_.hashCode) == want.map(_.hashCode))
     }
 }
