@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 /** Dev tool: executor-loss rehearsal. SURVEY §2 row E7 claims the
   * reference's error-poisoning tree is subsumed by Spark's native
   * task-retry/stage-resubmission machinery — this probe demonstrates
@@ -32,35 +29,18 @@ object FaultProbe {
     val queryName = if (args.length > 1) Some(args(1)) else None
     queryName.foreach(n => require(SparkEntry.queries.contains(n),
       s"unknown query: $n"))
-    val classes = new java.io.File("target/scala-2.13/classes").getAbsolutePath
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,4,1536]")
-      .appName("graft-fault-probe")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.executor.memory", "1536m")
-      .config("spark.executor.extraClassPath", classes)
+    val spark = ClusterBench.localCluster(2, 4, 1536, "graft-fault-probe")
       // Retries must outlast one executor funeral.
       .config("spark.task.maxFailures", 8)
       .config("spark.stage.maxConsecutiveAttempts", 8)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def digestOf(): (Long, Long) = queryName match {
-      case Some(n) =>
-        // any catalog gate, digested over every column
-        val r = SparkEntry.queries(n)(spark, sfDir).select(count(lit(1)),
-          expr("bit_xor(xxhash64(to_json(struct(*))))")).collect()(0)
-        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      case None =>
-        val pairs = graft.operators.Dedup.minhashNearDupPairs(
-          spark.read.parquet(s"$sfDir/documents.parquet"),
-          "doc_id", "text", threshold = 0.7)
-        // Order-insensitive digest: count + xor of per-row hashes
-        // (xor, not sum: overflow-free under the ANSI default).
-        val r = pairs.select(count(lit(1)),
-          expr("bit_xor(xxhash64(id_a, id_b, jaccard))")).collect()(0)
-        (r.getLong(0), r.getLong(1))
-    }
+    def digestOf(): (Long, Long) = ClusterBench.digest(queryName match {
+      case Some(n) => SparkEntry.queries(n)(spark, sfDir)
+      case None => graft.operators.Dedup.minhashNearDupPairs(
+        spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id", "text", threshold = 0.7)
+    })
 
     // Pass 1: undisturbed.
     val want = digestOf()

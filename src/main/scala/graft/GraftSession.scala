@@ -10,6 +10,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object GraftSession {
 
   def build(master: String, cores: Int, appName: String = "graft"): SparkSession =
+    builder(master, cores, appName).getOrCreate()
+
+  /** The configuration of [[build]] on a builder that is not yet
+    * started, for a caller that adds settings of its own (the
+    * local-cluster tools add their executor settings). */
+  def builder(master: String, cores: Int, appName: String): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName(appName)
@@ -96,7 +102,6 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
 
   /** The events table with `ts` normalized to TimestampType (µs, UTC
     * session) regardless of how the generator wrote it. Generations of

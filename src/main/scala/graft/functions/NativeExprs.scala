@@ -1,11 +1,39 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+/** The shape of a one-argument [[NativeExprs]] expression: it declares
+  * its `dataType` and `compute`, and this base evaluates it on both
+  * paths. The interpreted path calls `compute` through its erased
+  * bridge. The generated code embeds the expression as one reference
+  * object and calls its `compute` on the child's Java value. The
+  * contract of `compute` is in the [[NativeExprs]] header. */
+abstract class NativeUnaryExpr[I, O] extends UnaryExpression {
+  def compute(in: I): O
+  override protected def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[I])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj(nodeName, this)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
+  }
+}
+
+/** [[NativeUnaryExpr]] for a two-argument expression. */
+abstract class NativeBinaryExpr[L, R, O] extends BinaryExpression {
+  def compute(l: L, r: R): O
+  override protected def nullSafeEval(l: Any, r: Any): Any =
+    compute(l.asInstanceOf[L], r.asInstanceOf[R])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj(nodeName, this)
+    nullSafeCodeGen(ctx, ev, (l, r) => s"${ev.value} = $ref.compute($l, $r);")
+  }
+}
 
 /** Native Catalyst expressions for the hot per-row loops of the dedup /
   * similarity operators.
@@ -20,7 +48,20 @@ import org.apache.spark.sql.types._
   * unaffected. (Preference order per the Spark-first contract: builtin
   * functions > custom Expression > UDF; these are the middle tier,
   * used only where the builtin form is quadratic-in-practice.)
-  */
+  *
+  * Every expression but [[DotProductExpr]] extends [[NativeUnaryExpr]]
+  * or [[NativeBinaryExpr]] and keeps only its fields, `dataType`,
+  * `compute`, private helpers and the child copy. The contract of
+  * `compute`:
+  *  - it is public (the generated code, another class, calls it);
+  *  - its argument and result are the Java types of the children's and
+  *    the expression's data types (`UTF8String`, `ArrayData`,
+  *    `InternalRow`, or a primitive);
+  *  - a primitive result is declared as the Scala primitive (`Double`,
+  *    `Long`, `Int`, `Boolean`), so the generated assignment binds to the
+  *    subclass's own `compute` and nothing is boxed.
+  * Only [[DotProductExpr]] writes its own codegen: its loop is inlined
+  * into the generated Java. */
 object NativeExprs {
 
   /** splitmix64 finalizer — the per-permutation mixer. */
@@ -46,10 +87,9 @@ object NativeExprs {
   /** MinHash signature: element j = min over the input string array of
     * mix64(fnv64(s) + j*GOLDEN). One pass, H mins updated per element. */
   case class MinHashSigExpr(child: Expression, numHashes: Int)
-      extends UnaryExpression with CodegenFallback {
+      extends NativeUnaryExpr[ArrayData, ArrayData] {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override protected def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
+    def compute(arr: ArrayData): ArrayData = {
       val mins = Array.fill(numHashes)(Long.MaxValue)
       val n = arr.numElements()
       var i = 0
@@ -79,7 +119,7 @@ object NativeExprs {
     * duplicate windows cannot change a minimum, so skipping the
     * distinct is value-neutral. Texts shorter than k hash one (short)
     * window — charShingles parity. */
-  private[functions] def minhashMins(s: org.apache.spark.unsafe.types.UTF8String,
+  private[functions] def minhashMins(s: UTF8String,
                                      k: Int, numHashes: Int): Array[Long] = {
     val mins = Array.fill(numHashes)(Long.MaxValue)
     @inline def update(base: Long): Unit = {
@@ -111,17 +151,10 @@ object NativeExprs {
   }
 
   case class MinHashSigTextExpr(child: Expression, k: Int, numHashes: Int)
-      extends UnaryExpression {
+      extends NativeUnaryExpr[UTF8String, ArrayData] {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    /** Public for generated code (reference-object call from doGenCode). */
-    def compute(s: org.apache.spark.unsafe.types.UTF8String): ArrayData =
+    def compute(s: UTF8String): ArrayData =
       new GenericArrayData(minhashMins(s, k, numHashes))
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("minhashSigTextExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
     override protected def withNewChildInternal(newChild: Expression): MinHashSigTextExpr =
       copy(child = newChild)
   }
@@ -138,11 +171,11 @@ object NativeExprs {
     * unchanged. */
   case class MinHashBandBucketsExpr(child: Expression, k: Int, numHashes: Int,
                                     bands: Int, rowsPerBand: Int)
-      extends UnaryExpression {
+      extends NativeUnaryExpr[UTF8String, ArrayData] {
     require(bands * rowsPerBand <= numHashes,
       s"bands($bands) x rowsPerBand($rowsPerBand) exceeds numHashes($numHashes)")
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    def compute(s: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+    def compute(s: UTF8String): ArrayData = {
       val mins = minhashMins(s, k, numHashes)
       val out = new Array[Long](bands)
       val sb = new java.lang.StringBuilder(rowsPerBand * 21)
@@ -162,12 +195,6 @@ object NativeExprs {
       }
       new GenericArrayData(out)
     }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("minhashBandBucketsExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
     override protected def withNewChildInternal(newChild: Expression): MinHashBandBucketsExpr =
       copy(child = newChild)
   }
@@ -176,8 +203,8 @@ object NativeExprs {
     * left-to-right summation as `aggregate(zip_with(...))` and DuckDB's
     * list_sum, so cross-engine doubles stay bit-identical).
     *
-    * Real `doGenCode` (no CodegenFallback): the loop is inlined into
-    * the whole-stage-generated Java — no per-row InternalRow
+    * The one expression with its own `doGenCode`: the loop is inlined
+    * into the whole-stage-generated Java — no per-row InternalRow
     * materialization, no interpreted dispatch — per the Spark-first
     * contract ("a native Catalyst Expression WITH doGenCode beats a
     * Scala UDF"). */
@@ -227,43 +254,16 @@ object NativeExprs {
     * overhead — ~100 µs/doc at the sf10 rehearsal, md5-string-bound,
     * the same reason the round-5 minhash rewrite fused its text path. */
   case class HashedLinearScoreExpr(child: Expression, dim: Int)
-      extends UnaryExpression {
+      extends NativeUnaryExpr[UTF8String, Double] {
     require(dim > 0, s"dim=$dim")
     override def dataType: DataType = DoubleType
-    @inline private def isWs(c: Char): Boolean =
-      c == ' ' || (c >= '\t' && c <= '\r') // regex \s: [ \t\n\x0B\f\r]
-    /** Public for generated code (reference-object call from doGenCode). */
-    def compute(text: org.apache.spark.unsafe.types.UTF8String): Double = {
-      val s = text.toString
-      val md = md5Digest()
-      val len = s.length
+    def compute(text: UTF8String): Double = {
       var n = 0
       var ms = 0L
-      var i = 0
-      while (i < len) {
-        while (i < len && isWs(s.charAt(i))) i += 1
-        val start = i
-        while (i < len && !isWs(s.charAt(i))) i += 1
-        if (i > start) {
-          val dig = md.digest(s.substring(start, i)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          var v = 0L
-          var b = 0
-          while (b < 8) { v = (v << 8) | (dig(b) & 0xffL); b += 1 }
-          v >>>= 4 // first 15 hex chars = high 60 bits of bytes 0-7
-          ms += (v % dim) % 2001 - 1000
-          n += 1
-        }
-      }
+      foreachGramHash(text.toString, 1) { v => ms += (v % dim) % 2001 - 1000; n += 1 }
       if (n == 0) 0.0
       else java.math.BigDecimal.valueOf(ms.toDouble / (n * 1000.0))
         .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("hashedLinearScoreExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
     override protected def withNewChildInternal(newChild: Expression): HashedLinearScoreExpr =
       copy(child = newChild)
@@ -279,44 +279,16 @@ object NativeExprs {
     * which is the documented swap-in contract: training changes the
     * array contents, never the plan shape. */
   case class WeightedLinearScoreExpr(child: Expression, weights: Array[Int])
-      extends UnaryExpression {
+      extends NativeUnaryExpr[UTF8String, Double] {
     require(weights.nonEmpty, "weights must be non-empty")
     override def dataType: DataType = DoubleType
-    @inline private def isWs(c: Char): Boolean =
-      c == ' ' || (c >= '\t' && c <= '\r')
-    /** Public for generated code (reference-object call from doGenCode). */
-    def compute(text: org.apache.spark.unsafe.types.UTF8String): Double = {
-      val s = text.toString
-      val dim = weights.length
-      val md = md5Digest()
-      val len = s.length
+    def compute(text: UTF8String): Double = {
       var n = 0
       var ms = 0L
-      var i = 0
-      while (i < len) {
-        while (i < len && isWs(s.charAt(i))) i += 1
-        val start = i
-        while (i < len && !isWs(s.charAt(i))) i += 1
-        if (i > start) {
-          val dig = md.digest(s.substring(start, i)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          var v = 0L
-          var b = 0
-          while (b < 8) { v = (v << 8) | (dig(b) & 0xffL); b += 1 }
-          v >>>= 4
-          ms += weights((v % dim).toInt)
-          n += 1
-        }
-      }
+      foreachGramHash(text.toString, 1) { v => ms += weights((v % weights.length).toInt); n += 1 }
       if (n == 0) 0.0
       else java.math.BigDecimal.valueOf(ms.toDouble / (n * 1000.0))
         .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("weightedLinearScoreExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
     override protected def withNewChildInternal(newChild: Expression): WeightedLinearScoreExpr =
       copy(child = newChild)
@@ -336,37 +308,19 @@ object NativeExprs {
     * pass builds each window's bytes once and hashes straight off
     * the digest — the same fusion arc as MinHash/BM25/classifier. */
   case class SpanHashesExpr(child: Expression, n: Int)
-      extends UnaryExpression {
+      extends NativeUnaryExpr[UTF8String, ArrayData] {
     require(n >= 1, s"n=$n")
     override def dataType: DataType =
       ArrayType(LongType, containsNull = false)
-    /** Public for generated code (reference-object call from doGenCode). */
-    def compute(text: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
-      // the exact Column law: space-only trim, Java regex \s+ split
-      val s = text.toString
-      var lo = 0
-      var hi = s.length
-      while (lo < hi && s.charAt(lo) == ' ') lo += 1
-      while (hi > lo && s.charAt(hi - 1) == ' ') hi -= 1
-      val toks = s.substring(lo, hi).split("\\s+", -1)
+    def compute(text: UTF8String): ArrayData = {
+      val toks = columnTokens(text)
       if (toks.length < n) return new GenericArrayData(Array.empty[Any])
       val md = md5Digest()
+      val words = java.util.Arrays.asList(toks: _*)
       val seen = new java.util.LinkedHashSet[java.lang.Long]()
       var i = 0
       while (i + n <= toks.length) {
-        val sb = new java.lang.StringBuilder
-        var j = 0
-        while (j < n) {
-          if (j > 0) sb.append(' ')
-          sb.append(toks(i + j))
-          j += 1
-        }
-        val dig = md.digest(sb.toString
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        var v = 0L
-        var b = 0
-        while (b < 8) { v = (v << 8) | (dig(b) & 0xffL); b += 1 }
-        seen.add(v >>> 4) // first 15 hex chars = high 60 bits
+        seen.add(md5High60(md, String.join(" ", words.subList(i, i + n))))
         i += 1
       }
       val out = new Array[Any](seen.size)
@@ -374,12 +328,6 @@ object NativeExprs {
       var k = 0
       while (it.hasNext) { out(k) = it.next().longValue(); k += 1 }
       new GenericArrayData(out)
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("spanHashesExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
     override protected def withNewChildInternal(newChild: Expression): SpanHashesExpr =
       copy(child = newChild)
@@ -399,12 +347,11 @@ object NativeExprs {
     * matching the code-point edit model of `levenshtein`. Strings
     * shorter than q yield an empty array. */
   case class PosQGramTokensExpr(child: Expression, q: Int)
-      extends UnaryExpression {
+      extends NativeUnaryExpr[UTF8String, ArrayData] {
     require(q >= 1, s"q=$q")
     override def dataType: DataType =
       ArrayType(LongType, containsNull = false)
-    /** Public for generated code (reference-object call from doGenCode). */
-    def compute(text: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+    def compute(text: UTF8String): ArrayData = {
       val nChars = text.numChars()
       if (nChars < q) return new GenericArrayData(Array.empty[Any])
       val nTok = nChars - q + 1
@@ -419,12 +366,6 @@ object NativeExprs {
       }
       new GenericArrayData(out)
     }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("posQGramTokensExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
     override protected def withNewChildInternal(newChild: Expression): PosQGramTokensExpr =
       copy(child = newChild)
   }
@@ -437,44 +378,17 @@ object NativeExprs {
     * task, NOT a 262k-element plan literal — which is what lets
     * [[graft.operators.Training]] hold any `dim`. Value-identical to
     * `Σ_j w_j·x_j` over the hashed token counts `x_j` by
-    * distributivity (integer adds commute); same md5-15 bucket law as
-    * [[HashedBucketsExpr]], same empty-token-free tokenization. */
+    * distributivity (integer adds commute); same md5-15 bucket law and
+    * empty-token-free tokenization as [[NgramBucketsExpr]] at n = 1. */
   case class HashedMarginExpr(child: Expression, weights: Array[Long])
-      extends UnaryExpression {
+      extends NativeUnaryExpr[UTF8String, Long] {
     require(weights.length >= 2, s"weights=${weights.length}")
     override def dataType: DataType = LongType
-    @inline private def isWs(c: Char): Boolean =
-      c == ' ' || (c >= '\t' && c <= '\r')
-    /** Public for generated code (reference-object call from doGenCode). */
-    def compute(text: org.apache.spark.unsafe.types.UTF8String): Long = {
-      val s = text.toString
+    def compute(text: UTF8String): Long = {
       val dim = weights.length - 1
-      val md = md5Digest()
-      val len = s.length
       var m = weights(dim) // intercept
-      var i = 0
-      while (i < len) {
-        while (i < len && isWs(s.charAt(i))) i += 1
-        val start = i
-        while (i < len && !isWs(s.charAt(i))) i += 1
-        if (i > start) {
-          val dig = md.digest(s.substring(start, i)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          var v = 0L
-          var b = 0
-          while (b < 8) { v = (v << 8) | (dig(b) & 0xffL); b += 1 }
-          v >>>= 4
-          m += weights((v % dim).toInt)
-        }
-        i += 1
-      }
+      foreachGramHash(text.toString, 1)(v => m += weights((v % dim).toInt))
       m
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("hashedMarginExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
     override protected def withNewChildInternal(newChild: Expression): HashedMarginExpr =
       copy(child = newChild)
@@ -486,100 +400,30 @@ object NativeExprs {
     * all K accumulators — the multiclass face of the family, used by
     * the softmax trainer. Output: array<long> length K. */
   case class HashedMarginsExpr(child: Expression, weights: Array[Array[Long]])
-      extends UnaryExpression {
+      extends NativeUnaryExpr[UTF8String, ArrayData] {
     require(weights.nonEmpty && weights.forall(_.length == weights(0).length)
       && weights(0).length >= 2, "ragged or empty weights")
     override def dataType: DataType =
       ArrayType(LongType, containsNull = false)
-    @inline private def isWs(c: Char): Boolean =
-      c == ' ' || (c >= '\t' && c <= '\r')
-    /** Public for generated code (reference-object call from doGenCode). */
-    def compute(text: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
-      val s = text.toString
+    def compute(text: UTF8String): ArrayData = {
       val k = weights.length
       val dim = weights(0).length - 1
-      val md = md5Digest()
-      val len = s.length
       val m = Array.tabulate(k)(c => weights(c)(dim)) // intercepts
-      var i = 0
-      while (i < len) {
-        while (i < len && isWs(s.charAt(i))) i += 1
-        val start = i
-        while (i < len && !isWs(s.charAt(i))) i += 1
-        if (i > start) {
-          val dig = md.digest(s.substring(start, i)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          var v = 0L
-          var b = 0
-          while (b < 8) { v = (v << 8) | (dig(b) & 0xffL); b += 1 }
-          v >>>= 4
-          val j = (v % dim).toInt
-          var c = 0
-          while (c < k) { m(c) += weights(c)(j); c += 1 }
-        }
-        i += 1
+      foreachGramHash(text.toString, 1) { v =>
+        val j = (v % dim).toInt
+        var c = 0
+        while (c < k) { m(c) += weights(c)(j); c += 1 }
       }
       new GenericArrayData(m.map(x => x: Any))
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("hashedMarginsExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
     override protected def withNewChildInternal(newChild: Expression): HashedMarginsExpr =
       copy(child = newChild)
   }
 
-  /** Per-token bucket ids (NOT distinct, NOT counted — one entry per
-    * token occurrence) in one tokenize pass: the SPARSE feature face
-    * of the hashed family, exploded by the trainer so gradient rows
-    * scale with tokens-per-doc, never with `dim`. Same md5-15 law. */
-  case class HashedBucketsExpr(child: Expression, dim: Int)
-      extends UnaryExpression {
-    require(dim > 0, s"dim=$dim")
-    override def dataType: DataType =
-      ArrayType(LongType, containsNull = false)
-    @inline private def isWs(c: Char): Boolean =
-      c == ' ' || (c >= '\t' && c <= '\r')
-    /** Public for generated code (reference-object call from doGenCode). */
-    def compute(text: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
-      val s = text.toString
-      val md = md5Digest()
-      val len = s.length
-      val out = new java.util.ArrayList[Any]()
-      var i = 0
-      while (i < len) {
-        while (i < len && isWs(s.charAt(i))) i += 1
-        val start = i
-        while (i < len && !isWs(s.charAt(i))) i += 1
-        if (i > start) {
-          val dig = md.digest(s.substring(start, i)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          var v = 0L
-          var b = 0
-          while (b < 8) { v = (v << 8) | (dig(b) & 0xffL); b += 1 }
-          v >>>= 4
-          out.add(java.lang.Long.valueOf(v % dim))
-        }
-        i += 1
-      }
-      new GenericArrayData(out.toArray)
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("hashedBucketsExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
-    override protected def withNewChildInternal(newChild: Expression): HashedBucketsExpr =
-      copy(child = newChild)
-  }
-
   /** Hashed word n-gram buckets: ONE tokenize pass emits the md5
-    * bucket of every n consecutive tokens joined by a single space —
-    * the n-gram generalization of [[HashedBucketsExpr]] (n = 1 is
-    * bucket-identical to it). Bucket law is the family's md5 law on
+    * bucket of every n consecutive tokens joined by a single space; at
+    * n = 1 these are the per-token buckets the trainer explodes
+    * (`hashedBucketsNative`). Bucket law is the family's md5 law on
     * the JOINED gram string (`conv(substr(md5(gram),1,15),16,10) %
     * dim` — the high 60 bits of digest bytes 0–7), so the DuckDB
     * oracle form is `CAST(concat('0x', substr(md5(concat(t1, ' ',
@@ -587,58 +431,65 @@ object NativeExprs {
     * emit an empty array. Feature side of the DSIR importance-weight
     * family ([[graft.operators.Curation.dsirLogWeights]]). */
   case class NgramBucketsExpr(child: Expression, n: Int, dim: Int)
-      extends UnaryExpression {
+      extends NativeUnaryExpr[UTF8String, ArrayData] {
     require(n > 0, s"n=$n")
     require(dim > 0, s"dim=$dim")
     override def dataType: DataType =
       ArrayType(LongType, containsNull = false)
-    /** Public for generated code (reference-object call from doGenCode). */
-    def compute(text: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+    def compute(text: UTF8String): ArrayData = {
       val out = new java.util.ArrayList[Any]()
-      foreachNgramBucket(text.toString, n, dim)(b =>
-        out.add(java.lang.Long.valueOf(b)))
+      foreachGramHash(text.toString, n)(v => out.add(java.lang.Long.valueOf(v % dim)))
       new GenericArrayData(out.toArray)
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("ngramBucketsExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
     override protected def withNewChildInternal(newChild: Expression): NgramBucketsExpr =
       copy(child = newChild)
   }
 
-  /** Shared tokenize→gram→bucket walk for the n-gram family
-    * ([[NgramBucketsExpr]], [[NgramWeightSumExpr]]): whitespace-run
-    * tokens, n consecutive tokens joined by ONE space, bucket under
-    * the md5 family law. */
-  private def foreachNgramBucket(s: String, n: Int, dim: Int)(emit: Long => Unit): Unit = {
-    @inline def isWs(c: Char): Boolean =
-      c == ' ' || (c >= '\t' && c <= '\r')
+  /** `split(trim(text), "\s+")`, the Column tokenization: a space-only
+    * trim, then a Java regex split with limit -1, so a text that starts
+    * with a tab keeps a leading empty token and "" gives `[""]`. */
+  private def columnTokens(text: UTF8String): Array[String] =
+    text.trim().toString.split("\\s+", -1)
+
+  /** The md5 family's whitespace: regex `\s` exactly (space and
+    * `\t\n\x0B\f\r`). */
+  @inline private def isWs(c: Char): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
+
+  /** The md5 family's 60-bit value of a string: the high 60 bits of
+    * digest bytes 0–7 of its UTF-8 bytes, which is the first 15 hex
+    * chars of `md5(s)` (`conv(substr(md5(s), 1, 15), 16, 10)`) read
+    * straight off the digest, with no hex string. */
+  private def md5High60(md: java.security.MessageDigest, s: String): Long = {
+    val dig = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    var v = 0L
+    var b = 0
+    while (b < 8) { v = (v << 8) | (dig(b) & 0xffL); b += 1 }
+    v >>> 4
+  }
+
+  /** The md5 family's token walk: the whitespace-run tokens of `s` (no
+    * empty token), each run of `n` consecutive tokens joined by one
+    * space, and `emit` gets each gram's [[md5High60]], in order. A text
+    * with fewer than `n` tokens emits nothing. One per-thread digest
+    * serves every gram. */
+  private def foreachGramHash(s: String, n: Int)(emit: Long => Unit): Unit = {
     val md = md5Digest()
+    val gram = if (n > 1) new java.util.ArrayDeque[String](n) else null
     val len = s.length
-    val toks = new java.util.ArrayList[String]()
     var i = 0
     while (i < len) {
       while (i < len && isWs(s.charAt(i))) i += 1
       val start = i
       while (i < len && !isWs(s.charAt(i))) i += 1
-      if (i > start) toks.add(s.substring(start, i))
-    }
-    val nt = toks.size
-    var g = 0
-    while (g + n <= nt) {
-      val sb = new java.lang.StringBuilder(toks.get(g))
-      var j = 1
-      while (j < n) { sb.append(' ').append(toks.get(g + j)); j += 1 }
-      val dig = md.digest(sb.toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      var v = 0L
-      var b = 0
-      while (b < 8) { v = (v << 8) | (dig(b) & 0xffL); b += 1 }
-      emit((v >>> 4) % dim)
-      g += 1
+      if (i > start) {
+        val tok = s.substring(start, i)
+        if (n == 1) emit(md5High60(md, tok))
+        else {
+          gram.addLast(tok)
+          if (gram.size > n) gram.removeFirst()
+          if (gram.size == n) emit(md5High60(md, String.join(" ", gram)))
+        }
+      }
     }
   }
 
@@ -653,22 +504,14 @@ object NativeExprs {
     * 0. */
   case class NgramWeightSumExpr(child: Expression, n: Int,
                                 lamMicro: Array[Long])
-      extends UnaryExpression {
+      extends NativeUnaryExpr[UTF8String, Long] {
     require(n > 0, s"n=$n")
     require(lamMicro.nonEmpty, "lamMicro must be non-empty")
     override def dataType: DataType = LongType
-    /** Public for generated code (reference-object call from doGenCode). */
-    def compute(text: org.apache.spark.unsafe.types.UTF8String): Long = {
+    def compute(text: UTF8String): Long = {
       var sum = 0L
-      foreachNgramBucket(text.toString, n, lamMicro.length)(b =>
-        sum += lamMicro(b.toInt))
+      foreachGramHash(text.toString, n)(v => sum += lamMicro((v % lamMicro.length).toInt))
       sum
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("ngramWeightSumExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
     override protected def withNewChildInternal(newChild: Expression): NgramWeightSumExpr =
       copy(child = newChild)
@@ -691,7 +534,7 @@ object NativeExprs {
     * one entry per query in the given order. */
   case class Bm25ScoresExpr(child: Expression,
       terms: Seq[(Long, String, Double)],
-      k1: Double, b: Double, avgdl: Double) extends UnaryExpression {
+      k1: Double, b: Double, avgdl: Double) extends NativeUnaryExpr[UTF8String, ArrayData] {
     override def dataType: DataType = ArrayType(StructType(Seq(
       StructField("query_id", LongType, nullable = false),
       StructField("s", LongType, nullable = false))), containsNull = false)
@@ -709,14 +552,8 @@ object NativeExprs {
       qids.map(q => terms.collect {
         case (tq, t, idf) if tq == q => (termIdx.get(t).intValue(), idf)
       }.toArray)
-    def compute(text: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
-      val s = text.toString
-      // space-only trim + Java regex split: the exact Column law
-      var lo = 0
-      var hi = s.length
-      while (lo < hi && s.charAt(lo) == ' ') lo += 1
-      while (hi > lo && s.charAt(hi - 1) == ' ') hi -= 1
-      val toks = s.substring(lo, hi).split("\\s+", -1)
+    def compute(text: UTF8String): ArrayData = {
+      val toks = columnTokens(text)
       val dl = toks.length
       val tfs = new Array[Int](termIdx.size)
       var i = 0
@@ -739,16 +576,10 @@ object NativeExprs {
             e._2 * tf * (k1 + 1.0) / (tf + dln), 6)
           j += 1
         }
-        out(q) = org.apache.spark.sql.catalyst.InternalRow(qids(q), sum)
+        out(q) = InternalRow(qids(q), sum)
         q += 1
       }
       new GenericArrayData(out)
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("bm25ScoresExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
     override protected def withNewChildInternal(newChild: Expression): Bm25ScoresExpr =
       copy(child = newChild)
@@ -767,14 +598,13 @@ object NativeExprs {
     * is unchanged, so the sketch (and its DuckDB oracle, which keeps
     * the lpad/bin/instr form) is unaffected. */
   case class HllRegRhoExpr(child: Expression, p: Int)
-      extends UnaryExpression {
+      extends NativeUnaryExpr[UTF8String, InternalRow] {
     require(p >= 4 && p <= 16, s"p=$p out of range")
     private val w = 32 - p
     override def dataType: DataType = StructType(Seq(
       StructField("reg", LongType, nullable = false),
       StructField("rho", IntegerType, nullable = false)))
-    /** Public for generated code (reference-object call from doGenCode). */
-    def compute(key: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
+    def compute(key: UTF8String): InternalRow = {
       val dig = md5Digest().digest(key.getBytes)
       val h = ((dig(0) & 0xffL) << 24) | ((dig(1) & 0xffL) << 16) |
         ((dig(2) & 0xffL) << 8) | (dig(3) & 0xffL)
@@ -783,13 +613,7 @@ object NativeExprs {
       val rho =
         if (low == 0L) w + 1
         else w - (63 - java.lang.Long.numberOfLeadingZeros(low))
-      org.apache.spark.sql.catalyst.InternalRow(reg, rho)
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("hllRegRhoExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
+      InternalRow(reg, rho)
     }
     override protected def withNewChildInternal(newChild: Expression): HllRegRhoExpr =
       copy(child = newChild)
@@ -808,7 +632,7 @@ object NativeExprs {
     * expression as one reference object, not k typedLits. */
   case class ArgminCentroidExpr(child: Expression, centroids: Seq[Seq[Double]],
                                 offset: Int = 0)
-      extends UnaryExpression {
+      extends NativeUnaryExpr[ArrayData, Int] {
     require(centroids.nonEmpty, "centroids must be non-empty")
     require(offset >= 0, s"offset=$offset")
     override def dataType: DataType = IntegerType
@@ -820,8 +644,7 @@ object NativeExprs {
       while (i < c.length) { a += c(i) * c(i); i += 1 }
       a
     }
-    /** Public for generated code (reference-object call from doGenCode).
-      * `offset` reads the dot against v[offset ..) — the PQ subspace
+    /** `offset` reads the dot against v[offset ..) — the PQ subspace
       * form: argmin over codebook entries of a vector SLICE without
       * materializing the slice (bit-identical to
       * `ArgminCentroidExpr(slice(v, offset+1, subDim), cb)`: the dot
@@ -842,12 +665,6 @@ object NativeExprs {
         j += 1
       }
       best
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("argminCentroidExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
     override protected def withNewChildInternal(newChild: Expression): ArgminCentroidExpr =
       copy(child = newChild)
@@ -884,9 +701,8 @@ object NativeExprs {
     * (bit b of the hex form = bit 3-(b mod 4) of hex digit b/4). The
     * result packs bit b at position 63-b (big-endian byte order). */
   case class SimHashMd5Expr(child: Expression)
-      extends UnaryExpression {
+      extends NativeUnaryExpr[ArrayData, Long] {
     override def dataType: DataType = LongType
-    /** Public for generated code (reference-object call from doGenCode). */
     def compute(arr: ArrayData): Long = {
       val counts = new Array[Int](64)
       val n = arr.numElements()
@@ -905,14 +721,27 @@ object NativeExprs {
       while (b < 64) { if (counts(b) > 0) out |= (1L << (63 - b)); b += 1 }
       out
     }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("simhashMd5Expr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
     override protected def withNewChildInternal(newChild: Expression): SimHashMd5Expr =
       copy(child = newChild)
+  }
+
+  /** Dot of `v` with Lehmer-LCG direction `j` of `seed`, summed in
+    * ascending d: component (seed, j, d) is (h2 % 1000)/1000 - 0.5, with
+    * h2 two steps of the multiplier-48271 LCG modulo 2^31 - 1. The
+    * direction law of [[HyperplaneBucketLcgExpr]] and
+    * [[RandomProjectionLcgExpr]]. */
+  private def lcgDot(v: ArrayData, seed: Long, j: Int): Double = {
+    val M = 2147483647L // 2^31 - 1
+    val n = v.numElements()
+    var dot = 0.0
+    var d = 0
+    while (d < n) {
+      val x = Math.floorMod(seed * 1000003L + j * 8191L + d * 127L + 1L, M)
+      val h2 = (48271L * ((48271L * x) % M)) % M
+      dot += v.getDouble(d) * ((h2 % 1000L).toDouble / 1000.0 - 0.5)
+      d += 1
+    }
+    dot
   }
 
   /** Random-hyperplane LSH bucket of an array<double> vector: bit j of
@@ -925,34 +754,16 @@ object NativeExprs {
     * list_sum), so the sign — and hence the bucket — is bit-identical
     * cross-engine. */
   case class HyperplaneBucketLcgExpr(child: Expression, bits: Int, seed: Long)
-      extends UnaryExpression {
+      extends NativeUnaryExpr[ArrayData, Long] {
     override def dataType: DataType = LongType
-    private val M = 2147483647L // 2^31 - 1
-    @inline private def comp(j: Int, d: Int): Double = {
-      val x = Math.floorMod(seed * 1000003L + j * 8191L + d * 127L + 1L, M)
-      val h1 = (48271L * x) % M
-      val h2 = (48271L * h1) % M
-      (h2 % 1000L).toDouble / 1000.0 - 0.5
-    }
-    /** Public for generated code (reference-object call from doGenCode). */
     def compute(v: ArrayData): Long = {
-      val n = v.numElements()
       var bucket = 0L
       var j = 0
       while (j < bits) {
-        var dot = 0.0
-        var d = 0
-        while (d < n) { dot += v.getDouble(d) * comp(j, d); d += 1 }
-        if (dot > 0) bucket |= (1L << j)
+        if (lcgDot(v, seed, j) > 0) bucket |= (1L << j)
         j += 1
       }
       bucket
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("hyperplaneBucketLcgExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
     override protected def withNewChildInternal(newChild: Expression): HyperplaneBucketLcgExpr =
       copy(child = newChild)
@@ -983,12 +794,11 @@ object NativeExprs {
     * compare raw UTF-8 bytes; any non-ASCII input falls back to a
     * code-point array (the same edit model the builtin uses). */
   case class LevenshteinBandedExpr(left: Expression, right: Expression, k: Int)
-      extends BinaryExpression {
+      extends NativeBinaryExpr[UTF8String, UTF8String, Int] {
     require(k >= 0, s"k=$k")
     override def dataType: DataType = IntegerType
-    /** Public for generated code (reference-object call from doGenCode). */
-    def compute(a: org.apache.spark.unsafe.types.UTF8String,
-                b: org.apache.spark.unsafe.types.UTF8String): Int = {
+    def compute(a: UTF8String,
+                b: UTF8String): Int = {
       val ab = a.getBytes
       val bb = b.getBytes
       // code-point arrays; ASCII (bytes == chars) skips the decode
@@ -1049,13 +859,6 @@ object NativeExprs {
       }
       if (prev(m) <= k) prev(m) else -1
     }
-    override protected def nullSafeEval(l: Any, r: Any): Any =
-      compute(l.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-        r.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("levenshteinBandedExpr", this)
-      nullSafeCodeGen(ctx, ev, (l, r) => s"${ev.value} = $ref.compute($l, $r);")
-    }
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): LevenshteinBandedExpr =
       copy(left = newLeft, right = newRight)
@@ -1080,7 +883,7 @@ object NativeExprs {
     * first occurrence of a window counts, duplicates don't). */
   case class SharedShingleCountsExpr(child: Expression, k: Int,
                                      probes: Seq[(Long, String)])
-      extends UnaryExpression {
+      extends NativeUnaryExpr[UTF8String, ArrayData] {
     require(k >= 1, s"k=$k")
     override def dataType: DataType = ArrayType(StructType(Seq(
       StructField("p_id", LongType, nullable = false),
@@ -1089,36 +892,35 @@ object NativeExprs {
     // shingle -> indices of probes containing it (a shingle can sit in
     // several probes; each gets its own count)
     @transient private lazy val inverted
-        : java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, Array[Int]] = {
-      val m = new java.util.HashMap[org.apache.spark.unsafe.types.UTF8String,
+        : java.util.HashMap[UTF8String, Array[Int]] = {
+      val m = new java.util.HashMap[UTF8String,
         java.util.ArrayList[Integer]]()
       probes.zipWithIndex.foreach { case ((_, text), pi) =>
-        val s = org.apache.spark.unsafe.types.UTF8String.fromString(text)
-        val seen = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String]()
+        val s = UTF8String.fromString(text)
+        val seen = new java.util.HashSet[UTF8String]()
         foreachWindow(s) { sh =>
           if (seen.add(sh))
             m.computeIfAbsent(sh, _ => new java.util.ArrayList[Integer]())
               .add(Integer.valueOf(pi))
         }
       }
-      val out = new java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, Array[Int]](
+      val out = new java.util.HashMap[UTF8String, Array[Int]](
         m.size() * 2)
       m.forEach((sh, list) => out.put(sh,
         Array.tabulate(list.size())(i => list.get(i).intValue())))
       out
     }
     @inline private def foreachWindow(
-        s: org.apache.spark.unsafe.types.UTF8String)(
-        f: org.apache.spark.unsafe.types.UTF8String => Unit): Unit = {
+        s: UTF8String)(
+        f: UTF8String => Unit): Unit = {
       val n = s.numChars()
       val windows = math.max(1, n - k + 1)
       var i = 0
       while (i < windows) { f(s.substring(i, math.min(i + k, n))); i += 1 }
     }
-    /** Public for generated code (reference-object call from doGenCode). */
-    def compute(text: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+    def compute(text: UTF8String): ArrayData = {
       val counts = new Array[Long](pids.length)
-      val seen = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String]()
+      val seen = new java.util.HashSet[UTF8String]()
       val inv = inverted
       foreachWindow(text) { sh =>
         if (seen.add(sh)) {
@@ -1133,16 +935,10 @@ object NativeExprs {
       var p = 0
       while (p < counts.length) {
         if (counts(p) > 0L)
-          out.add(org.apache.spark.sql.catalyst.InternalRow(pids(p), counts(p)))
+          out.add(InternalRow(pids(p), counts(p)))
         p += 1
       }
       new GenericArrayData(out.toArray)
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("sharedShingleCountsExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
     override protected def withNewChildInternal(newChild: Expression): SharedShingleCountsExpr =
       copy(child = newChild)
@@ -1173,19 +969,13 @@ object NativeExprs {
     * transform + slice + array_join per segment plus the seg STRING
     * materialization through the explode; this emits only the keys. */
   case class SegmentKeysExpr(child: Expression, segWords: Int)
-      extends UnaryExpression {
+      extends NativeUnaryExpr[UTF8String, ArrayData] {
     require(segWords >= 1, s"segWords=$segWords")
     override def dataType: DataType = ArrayType(StructType(Seq(
       StructField("xx", LongType, nullable = false),
       StructField("crc", LongType, nullable = false))), containsNull = false)
-    /** Public for generated code (reference-object call from doGenCode). */
-    def compute(text: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
-      val s = text.toString
-      var lo = 0
-      var hi = s.length
-      while (lo < hi && s.charAt(lo) == ' ') lo += 1
-      while (hi > lo && s.charAt(hi - 1) == ' ') hi -= 1
-      val words = s.substring(lo, hi).split("\\s+", -1)
+    def compute(text: UTF8String): ArrayData = {
+      val words = columnTokens(text)
       val nseg = math.max(1, (words.length + segWords - 1) / segWords)
       val out = new Array[Any](nseg)
       var i = 0
@@ -1200,16 +990,10 @@ object NativeExprs {
         }
         val (xx, crc) = key96(sb.toString
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        out(i) = org.apache.spark.sql.catalyst.InternalRow(xx, crc)
+        out(i) = InternalRow(xx, crc)
         i += 1
       }
       new GenericArrayData(out)
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("segmentKeysExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
     override protected def withNewChildInternal(newChild: Expression): SegmentKeysExpr =
       copy(child = newChild)
@@ -1224,14 +1008,13 @@ object NativeExprs {
     * `transform(sequence(0, nWin-1), j -> struct(xxhash64(w_j),
     * crc32(w_j)))` over `substr(j·stride+1, width)`. */
   case class WindowKeysExpr(child: Expression, width: Int, stride: Int)
-      extends UnaryExpression {
+      extends NativeUnaryExpr[UTF8String, ArrayData] {
     require(width >= 1, s"width=$width")
     require(stride >= 1, s"stride=$stride")
     override def dataType: DataType = ArrayType(StructType(Seq(
       StructField("xx", LongType, nullable = false),
       StructField("crc", LongType, nullable = false))), containsNull = false)
-    /** Public for generated code (reference-object call from doGenCode). */
-    def compute(text: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+    def compute(text: UTF8String): ArrayData = {
       val n = text.numChars()
       if (n < width) return new GenericArrayData(Array.empty[Any])
       val nWin = (n - width) / stride + 1
@@ -1240,16 +1023,10 @@ object NativeExprs {
       while (j < nWin) {
         val w = text.substring(j * stride, j * stride + width)
         val (xx, crc) = key96(w.getBytes)
-        out(j) = org.apache.spark.sql.catalyst.InternalRow(xx, crc)
+        out(j) = InternalRow(xx, crc)
         j += 1
       }
       new GenericArrayData(out)
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("windowKeysExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
     override protected def withNewChildInternal(newChild: Expression): WindowKeysExpr =
       copy(child = newChild)
@@ -1267,34 +1044,13 @@ object NativeExprs {
     * 64-dim float payloads shrink 4× at dims=16 while JL preserves
     * pairwise distances within ~1±ε. */
   case class RandomProjectionLcgExpr(child: Expression, dims: Int, seed: Long)
-      extends UnaryExpression {
+      extends NativeUnaryExpr[ArrayData, ArrayData] {
     override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    private val M = 2147483647L // 2^31 - 1
-    @inline private def comp(j: Int, d: Int): Double = {
-      val x = Math.floorMod(seed * 1000003L + j * 8191L + d * 127L + 1L, M)
-      val h1 = (48271L * x) % M
-      val h2 = (48271L * h1) % M
-      (h2 % 1000L).toDouble / 1000.0 - 0.5
-    }
-    /** Public for generated code (reference-object call from doGenCode). */
     def compute(v: ArrayData): ArrayData = {
-      val n = v.numElements()
       val out = new Array[Double](dims)
       var j = 0
-      while (j < dims) {
-        var dot = 0.0
-        var d = 0
-        while (d < n) { dot += v.getDouble(d) * comp(j, d); d += 1 }
-        out(j) = dot
-        j += 1
-      }
+      while (j < dims) { out(j) = lcgDot(v, seed, j); j += 1 }
       ArrayData.toArrayData(out)
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("randomProjectionLcgExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
     override protected def withNewChildInternal(newChild: Expression): RandomProjectionLcgExpr =
       copy(child = newChild)
@@ -1310,13 +1066,12 @@ object NativeExprs {
     * hash, robust to position shifts — with an oracle-computable hash
     * (md5 + substr are ANSI SQL). */
   case class WinnowMd5Expr(child: Expression, k: Int, w: Int)
-      extends UnaryExpression {
+      extends NativeUnaryExpr[UTF8String, ArrayData] {
     override def dataType: DataType = ArrayType(
       StructType(Seq(
         StructField("pos", IntegerType, nullable = false),
         StructField("gh", StringType, nullable = false))), containsNull = false)
-    /** Public for generated code (reference-object call from doGenCode). */
-    def compute(s: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+    def compute(s: UTF8String): ArrayData = {
       val n = s.numChars()
       val m = math.max(1, n - k + 1)
       // Selection compares raw digests (unsigned byte order == hex
@@ -1346,19 +1101,13 @@ object NativeExprs {
           j += 1
         }
         if (minPos != lastPos) {
-          out += org.apache.spark.sql.catalyst.InternalRow(
-            minPos, org.apache.spark.unsafe.types.UTF8String.fromString(md5Hex(hs(minPos))))
+          out += InternalRow(
+            minPos, UTF8String.fromString(md5Hex(hs(minPos))))
           lastPos = minPos
         }
         st += 1
       }
       new GenericArrayData(out.toArray)
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("winnowMd5Expr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
     override protected def withNewChildInternal(newChild: Expression): WinnowMd5Expr =
       copy(child = newChild)
@@ -1373,10 +1122,9 @@ object NativeExprs {
     * matching substr semantics for ASCII and multi-byte text alike via
     * code-point windows). */
   case class MinMd5ShingleExpr(child: Expression, k: Int)
-      extends UnaryExpression {
+      extends NativeUnaryExpr[UTF8String, UTF8String] {
     override def dataType: DataType = StringType
-    /** Public for generated code (reference-object call from doGenCode). */
-    def compute(s: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String = {
+    def compute(s: UTF8String): UTF8String = {
       val n = s.numChars()
       // Unsigned byte-order of digests == lexicographic order of their
       // lowercase hex (fixed-width order-preserving encoding), so the
@@ -1394,13 +1142,7 @@ object NativeExprs {
         if (best == null || java.util.Arrays.compareUnsigned(dig, best) < 0) best = dig
         i += 1
       }
-      org.apache.spark.unsafe.types.UTF8String.fromString(md5Hex(best))
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("minMd5ShingleExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
+      UTF8String.fromString(md5Hex(best))
     }
     override protected def withNewChildInternal(newChild: Expression): MinMd5ShingleExpr =
       copy(child = newChild)
@@ -1412,16 +1154,13 @@ object NativeExprs {
     * oracle), computed with hash sets instead of one interpreted tree
     * walk per element per pair. */
   case class JaccardExpr(left: Expression, right: Expression)
-      extends BinaryExpression {
+      extends NativeBinaryExpr[ArrayData, ArrayData, Double] {
     override def dataType: DataType = DoubleType
-    /** Public for generated code (doGenCode embeds `this` as a
-      * reference object and calls it directly — no per-row InternalRow,
-      * no interpreted dispatch). */
     def compute(a: ArrayData, b: ArrayData): Double = {
-      val sa = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String]()
+      val sa = new java.util.HashSet[UTF8String]()
       var i = 0
       while (i < a.numElements()) { sa.add(a.getUTF8String(i)); i += 1 }
-      val sb = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String]()
+      val sb = new java.util.HashSet[UTF8String]()
       var inter = 0
       var j = 0
       while (j < b.numElements()) {
@@ -1431,12 +1170,6 @@ object NativeExprs {
       }
       val union = sa.size + sb.size - inter
       if (union == 0) 0.0 else inter.toDouble / union
-    }
-    override protected def nullSafeEval(l: Any, r: Any): Any =
-      compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("jaccardExpr", this)
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
     }
     override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): JaccardExpr =
       copy(left = newLeft, right = newRight)
@@ -1489,10 +1222,10 @@ object NativeExprs {
     * collision risk; non-ASCII or k > 8 falls back to UTF8String
     * window sets — same values, charShingles parity either way. */
   case class JaccardTextsExpr(left: Expression, right: Expression, k: Int)
-      extends BinaryExpression {
+      extends NativeBinaryExpr[UTF8String, UTF8String, Double] {
     require(k >= 1, "k must be positive")
     override def dataType: DataType = DoubleType
-    private def packable(s: org.apache.spark.unsafe.types.UTF8String,
+    private def packable(s: UTF8String,
                          bytes: Array[Byte]): Boolean =
       k <= 8 && bytes.length == s.numChars()
     // Per-THREAD 2-slot cache text → distinct-window set (+ a values
@@ -1511,9 +1244,9 @@ object NativeExprs {
     // shared across task threads); keys cloned (join rows reuse
     // buffers).
     private final class WinSlot {
-      var key: org.apache.spark.unsafe.types.UTF8String = null
+      var key: UTF8String = null
       var packed: (PackedWindowSet, Array[Long]) = null
-      var strs: java.util.HashSet[org.apache.spark.unsafe.types.UTF8String] = null
+      var strs: java.util.HashSet[UTF8String] = null
     }
     @transient private lazy val slots = new ThreadLocal[(WinSlot, WinSlot)] {
       override def initialValue() = (new WinSlot, new WinSlot)
@@ -1521,7 +1254,7 @@ object NativeExprs {
     // Returns the slot holding `u` (filling it if absent), evicting
     // the slot that is NOT `other` — so a pair's two texts never evict
     // each other within one compute().
-    private def slotFor(u: org.apache.spark.unsafe.types.UTF8String,
+    private def slotFor(u: UTF8String,
                         other: WinSlot): WinSlot = {
       val (s1, s2) = slots.get()
       if (s1.key != null && s1.key.equals(u)) s1
@@ -1552,21 +1285,19 @@ object NativeExprs {
       slot.packed
     }
     private def strSet(slot: WinSlot)
-        : java.util.HashSet[org.apache.spark.unsafe.types.UTF8String] = {
+        : java.util.HashSet[UTF8String] = {
       if (slot.strs == null) {
         val owned = slot.key // already a clone — windows may alias it
         val n = owned.numChars()
         val w = math.max(1, n - k + 1)
-        val set = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String](w * 2)
+        val set = new java.util.HashSet[UTF8String](w * 2)
         var i = 0
         while (i < w) { set.add(owned.substring(i, math.min(i + k, n))); i += 1 }
         slot.strs = set
       }
       slot.strs
     }
-    def compute(a: Any, b: Any): Double = {
-      val ua = a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-      val ub = b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
+    def compute(ua: UTF8String, ub: UTF8String): Double = {
       val ba = ua.getBytes
       val bb = ub.getBytes
       val slotA = slotFor(ua, null)
@@ -1603,11 +1334,6 @@ object NativeExprs {
       if (len < 8) v |= (0x80L | len.toLong) << (56 - 8 * len)
       v
     }
-    override protected def nullSafeEval(l: Any, r: Any): Any = compute(l, r)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("jaccardTextsExpr", this)
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
-    }
     override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): JaccardTextsExpr =
       copy(left = newLeft, right = newRight)
   }
@@ -1620,7 +1346,7 @@ object NativeExprs {
     * division) without materializing or shuffling token arrays through
     * the block join. */
   case class JaccardTokenSetsExpr(left: Expression, right: Expression)
-      extends BinaryExpression {
+      extends NativeBinaryExpr[UTF8String, UTF8String, Double] {
     override def dataType: DataType = DoubleType
     // Per-THREAD memo text → distinct-token set. The expression sits
     // in the projection of pair-verify joins, where one task streams
@@ -1642,24 +1368,24 @@ object NativeExprs {
     // so covering a full capped block costs ~4 MB/thread.
     @transient private lazy val tokenMemo =
       new ThreadLocal[java.util.LinkedHashMap[
-          org.apache.spark.unsafe.types.UTF8String, java.util.HashSet[String]]] {
+          UTF8String, java.util.HashSet[String]]] {
         override def initialValue() =
           new java.util.LinkedHashMap[
-              org.apache.spark.unsafe.types.UTF8String, java.util.HashSet[String]](
+              UTF8String, java.util.HashSet[String]](
               64, 0.75f, true) {
             override def removeEldestEntry(
-                e: java.util.Map.Entry[org.apache.spark.unsafe.types.UTF8String,
+                e: java.util.Map.Entry[UTF8String,
                                        java.util.HashSet[String]]): Boolean =
               size() > 2048
           }
       }
-    private def tokenSet(u: org.apache.spark.unsafe.types.UTF8String)
+    private def tokenSet(u: UTF8String)
         : java.util.HashSet[String] = {
       val m = tokenMemo.get()
       val hit = m.get(u)
       if (hit != null) hit
       else {
-        val toks = u.trim().toString.split("\\s+", -1)
+        val toks = columnTokens(u)
         val s = new java.util.HashSet[String](toks.length * 2)
         var i = 0
         while (i < toks.length) { s.add(toks(i)); i += 1 }
@@ -1667,9 +1393,9 @@ object NativeExprs {
         s
       }
     }
-    def compute(a: Any, b: Any): Double = {
-      val sa = tokenSet(a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-      val sb = tokenSet(b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    def compute(a: UTF8String, b: UTF8String): Double = {
+      val sa = tokenSet(a)
+      val sb = tokenSet(b)
       // sets are shared via the memo — read-only from here. Intersect
       // by scanning the smaller side (identical count to the old
       // build-sb-while-probing-sa loop).
@@ -1679,11 +1405,6 @@ object NativeExprs {
       while (it.hasNext) { if (big.contains(it.next())) inter += 1 }
       val union = sa.size + sb.size - inter
       if (union == 0) 0.0 else inter.toDouble / union
-    }
-    override protected def nullSafeEval(l: Any, r: Any): Any = compute(l, r)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("jaccardTokenSetsExpr", this)
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
     }
     override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): JaccardTokenSetsExpr =
       copy(left = newLeft, right = newRight)
@@ -1701,7 +1422,7 @@ object NativeExprs {
     * doubles bit-for-bit (BigDecimal.valueOf path). The higher-order
     * Column form walks an interpreted expression tree per array
     * element; this is the same math in one HashMap pass per row. */
-  case class RepStatsExpr(child: Expression) extends UnaryExpression {
+  case class RepStatsExpr(child: Expression) extends NativeUnaryExpr[UTF8String, InternalRow] {
     override def dataType: DataType = StructType(Seq(
       StructField("dup2", DoubleType, nullable = false),
       StructField("top2", DoubleType, nullable = false),
@@ -1709,9 +1430,8 @@ object NativeExprs {
     @inline private def round6(x: Double): Double =
       java.math.BigDecimal.valueOf(x)
         .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    /** Public for generated code (reference-object call from doGenCode). */
-    def compute(s: org.apache.spark.unsafe.types.UTF8String): Any = {
-      val toks = s.trim().toString.split("\\s+", -1)
+    def compute(s: UTF8String): InternalRow = {
+      val toks = columnTokens(s)
       val n = toks.length
       val total2 = n - 1
       val total3 = n - 2
@@ -1734,13 +1454,6 @@ object NativeExprs {
       }
       new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
         Array[Any](dup2, top2, dup3))
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("repStatsExpr", this)
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = (InternalRow) $ref.compute($c);")
     }
     override protected def withNewChildInternal(newChild: Expression): RepStatsExpr =
       copy(child = newChild)
@@ -1823,8 +1536,8 @@ object NativeExprs {
   def hashedMarginNative(text: Column, weights: Array[Long]): Column =
     ColumnBridge.column(HashedMarginExpr(ColumnBridge.expression(text), weights))
 
-  def hashedBucketsNative(text: Column, dim: Int): Column =
-    ColumnBridge.column(HashedBucketsExpr(ColumnBridge.expression(text), dim))
+  /** Per-token md5 buckets, one per token occurrence: [[NgramBucketsExpr]] at n = 1. */
+  def hashedBucketsNative(text: Column, dim: Int): Column = ngramBucketsNative(text, 1, dim)
 
   def ngramBucketsNative(text: Column, n: Int, dim: Int): Column =
     ColumnBridge.column(NgramBucketsExpr(ColumnBridge.expression(text), n, dim))
@@ -1855,9 +1568,9 @@ object NativeExprs {
     * point order — the same sequence DuckDB's `list(... ORDER BY c)` +
     * `list_sum` folds, so the 6-dp-rounded value is cross-engine
     * stable. Empty/null-less strings score 0. */
-  case class CharEntropyExpr(child: Expression) extends UnaryExpression {
+  case class CharEntropyExpr(child: Expression) extends NativeUnaryExpr[UTF8String, Double] {
     override def dataType: DataType = DoubleType
-    def compute(s: org.apache.spark.unsafe.types.UTF8String): Double = {
+    def compute(s: UTF8String): Double = {
       val str = s.toString
       if (str.isEmpty) return 0.0
       val counts = new java.util.TreeMap[Integer, Long]()
@@ -1883,12 +1596,6 @@ object NativeExprs {
       }
       log2(total) - acc / total
     }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("charEntropyExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
     override protected def withNewChildInternal(newChild: Expression): CharEntropyExpr =
       copy(child = newChild)
   }
@@ -1905,14 +1612,14 @@ object NativeExprs {
     * [[BloomMightContainExpr]] — one hash implementation shared by
     * both expressions, so filter and probe can never drift apart. */
   case class BloomPositionsExpr(child: Expression, m: Long, k: Int)
-      extends UnaryExpression with ImplicitCastInputTypes {
+      extends NativeUnaryExpr[Long, ArrayData] with ImplicitCastInputTypes {
     // declared input type: int keys then cast to long at analysis time,
     // so interpreted eval (constant folding, non-codegen paths) sees the
     // same Long the codegen path casts to — without this an int key
     // works under codegen but ClassCastExceptions under eval().
     override def inputTypes: Seq[DataType] = Seq(LongType)
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    def positions(v: Long): GenericArrayData = {
+    def compute(v: Long): ArrayData = {
       val h1 = XXH64.hashLong(v, 42L)
       val h2 = XXH64.hashLong(v, 0x9e3779b97f4a7c15L) | 1L
       val out = new Array[Long](k)
@@ -1922,12 +1629,6 @@ object NativeExprs {
         i += 1
       }
       new GenericArrayData(out)
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      positions(input.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("bloomPositionsExpr", this)
-      nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $ref.positions($v);")
     }
     override protected def withNewChildInternal(newChild: Expression): BloomPositionsExpr =
       copy(child = newChild)
@@ -1941,11 +1642,11 @@ object NativeExprs {
     * on the parquet scan it is pruning. False positives possible
     * (rate ≈ (1−e^{−kn/m})^k), false negatives impossible. */
   case class BloomMightContainExpr(child: Expression, words: Array[Long], k: Int)
-      extends UnaryExpression with ImplicitCastInputTypes {
+      extends NativeUnaryExpr[Long, Boolean] with ImplicitCastInputTypes {
     override def inputTypes: Seq[DataType] = Seq(LongType)
     override def dataType: DataType = BooleanType
     private val m: Long = words.length.toLong * 64L
-    def test(v: Long): Boolean = {
+    def compute(v: Long): Boolean = {
       val h1 = XXH64.hashLong(v, 42L)
       val h2 = XXH64.hashLong(v, 0x9e3779b97f4a7c15L) | 1L
       var i = 0
@@ -1956,12 +1657,6 @@ object NativeExprs {
         i += 1
       }
       true
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      test(input.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("bloomMightContainExpr", this)
-      nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $ref.test($v);")
     }
     override protected def withNewChildInternal(newChild: Expression): BloomMightContainExpr =
       copy(child = newChild)
@@ -1987,7 +1682,7 @@ object NativeExprs {
     * invertible: concat(tokens).replace(sentinel, " ") == the
     * whitespace-normalized input (the txt_bpe_roundtrip gate law). */
   case class BpeEncodeExpr(child: Expression, merges: Seq[(String, String)])
-      extends UnaryExpression {
+      extends NativeUnaryExpr[UTF8String, ArrayData] {
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
     @transient private lazy val rank: java.util.HashMap[String, Integer] = {
       val m = new java.util.HashMap[String, Integer](merges.length * 2)
@@ -2009,19 +1704,13 @@ object NativeExprs {
         if (bestPair == null) continue = false
         else syms = TextFunctions.mergePair(syms, bestPair)
       }
-      syms.foreach(s => out += org.apache.spark.unsafe.types.UTF8String.fromString(s))
+      syms.foreach(s => out += UTF8String.fromString(s))
     }
-    def compute(s: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+    def compute(s: UTF8String): ArrayData = {
       val words = s.toString.trim.split("\\s+")
       val out = scala.collection.mutable.ArrayBuffer.empty[Any]
       words.foreach(encodeWord(_, out))
       new GenericArrayData(out.toArray)
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("bpeEncodeExpr", this)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
     override protected def withNewChildInternal(newChild: Expression): BpeEncodeExpr =
       copy(child = newChild)

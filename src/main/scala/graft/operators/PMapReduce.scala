@@ -107,7 +107,11 @@ object PMapReduce {
     * `defaultParallelism`) and np ranks carrying an 800 KB array
     * payload, the shuffle moves P payloads and the driver receives H,
     * never np. The shuffle is not locality-aware, so a block partial
-    * may cross a node boundary once before it is combined.
+    * may cross a node boundary once before it is combined. With one
+    * segment (one host) or with at least as many segments as map tasks,
+    * stage 2 would combine no partials across hosts, so there is none:
+    * the driver receives the P block partials and folds them itself,
+    * with no shuffle write and read of every partial.
     *
     * `segments` overrides the segment count for single-host testing;
     * the reference fakes multi-host topologies the same way
@@ -136,11 +140,11 @@ object PMapReduce {
     val perSeg: Array[(Int, B)] =
       if (op.commutative) {
         val fold = (it: Iterator[B]) => if (it.hasNext) Iterator(it.reduceLeft(op)) else Iterator.empty
-        partials.values.mapPartitions(fold)
-          .coalesce(nSeg, shuffle = true)
-          .mapPartitions(fold)
-          .map((0, _))
-          .collect()
+        val blocks = partials.values.mapPartitions(fold)
+        val perSegment =
+          if (nSeg == 1 || nSeg >= blocks.getNumPartitions) blocks
+          else blocks.coalesce(nSeg, shuffle = true).mapPartitions(fold)
+        perSegment.map((0, _)).collect()
       } else {
         val nSegEff = math.min(nSeg, np)
         val bySeg = partials.partitionBy(new org.apache.spark.Partitioner {

@@ -14,9 +14,10 @@ import graft.functions.NativeExprs
   *
   * Model: `p(keep | doc) = σ(Σ_j w_j·x_j + w_D)` over `dim` hashed
   * bag-of-tokens counts `x_j` (never materialized: the margin is
-  * [[NativeExprs.HashedMarginExpr]], the gradient explodes
-  * [[NativeExprs.HashedBucketsExpr]] — one native tokenize pass each
-  * per row) plus an intercept slot `x_D = 1`.
+  * [[NativeExprs.HashedMarginExpr]], the gradient explodes the
+  * per-token buckets of [[NativeExprs.NgramBucketsExpr]] at n = 1 —
+  * one native tokenize pass each per row) plus an intercept slot
+  * `x_D = 1`.
   *
   * Determinism (the library's quantized-integer law, same as
   * [[LanguageModel]] / [[Search]]): weights live in integer

@@ -389,15 +389,24 @@ class PMapReduceSpec extends AnyFunSuite {
   test("segmented reduce: the map runs in min(npEff, defaultParallelism) tasks, then one per segment") {
     val sc = spark.sparkContext
     val metrics = new graft.obs.RunMetrics(sc)
-    for (np <- Seq(3, 224)) {
+    def withStageTasks[T](call: => T): (T, Vector[Int]) = {
       val before = metrics.snapshot()
-      val got = pmapreduceSegmented(spark, IndexedSeq(PRange(1, 224)), np)(
-        t => Array(t(0), 1.0), ReduceOp.elementwiseSum)
-      val tasks = (metrics.snapshot() - before).stageRows.map(_.tasks)
-      assert(got.toVector == Vector(25200.0, 224.0), s"np=$np")
-      // the map stage, then the fold of the one segment of a local run
-      assert(tasks == Vector(math.min(np, sc.defaultParallelism), 1), s"np=$np stage task counts $tasks")
+      val result = call
+      (result, (metrics.snapshot() - before).stageRows.map(_.tasks))
     }
+    for (np <- Seq(3, 224)) {
+      val (got, tasks) = withStageTasks(pmapreduceSegmented(spark, IndexedSeq(PRange(1, 224)), np)(
+        t => Array(t(0), 1.0), ReduceOp.elementwiseSum))
+      assert(got.toVector == Vector(25200.0, 224.0), s"np=$np")
+      // the one segment of a local run is folded on the driver: no second stage
+      assert(tasks == Vector(math.min(np, sc.defaultParallelism)), s"np=$np stage task counts $tasks")
+    }
+    // two segments over four map blocks: one shuffle task per segment
+    val partials = sc.parallelize((1 to 8).map(r => (r, Array(r.toDouble, 1.0))), 4)
+    val (got, tasks) = withStageTasks(
+      hostSegmentedReduce(spark, partials, 8, ReduceOp.elementwiseSum, segments = Some(2)))
+    assert(got.toVector == Vector(36.0, 8.0))
+    assert(tasks == Vector(4, 2), s"segments=2 stage task counts $tasks")
   }
 
   test("zero ranges are refused by name at every entry point") {
